@@ -5,9 +5,10 @@ word-shingle Jaccard, MinHash+LSH, SimHash. All shuffle-conscious:
 - n-gram Jaccard: explode distinct shingles -> self-join on shingle ->
   group per pair. The shingle join is the scale risk (hot shingles);
   ``max_shingle_freq`` drops stop-shingles, the standard mitigation;
-- MinHash LSH: signatures per doc (narrow), band buckets -> self-join
-  on (band, bucket-hash) — candidate pairs only, never the full cross
-  product; exact-Jaccard verify on candidates;
+- MinHash LSH: signatures per doc (narrow), band buckets -> members
+  grouped per (band, bucket-hash) and paired within the bucket —
+  candidate pairs only, never the full cross product; exact-Jaccard
+  verify on candidates;
 - SimHash: 64-bit fingerprint, near-dup = small Hamming distance among
   bucket collisions on 16-bit chunks.
 
@@ -200,6 +201,30 @@ def _minhash_cols(num_hashes: int, base: Column) -> list[Column]:
     return cols
 
 
+def shingle_sets(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
+) -> DataFrame:
+    """(sid, sh): each doc's distinct k-word shingle array — the one
+    Python-UDF pass that signatures and exact verification both read."""
+    return df.select(
+        F.col(id_col).alias("sid"), word_shingles(F.col(text_col), k).alias("sh")
+    )
+
+
+def signatures_from_sets(
+    sets: DataFrame, num_hashes: int = 32, checkable: bool = False
+) -> DataFrame:
+    """(sid, mh_0..mh_{n-1}) from a :func:`shingle_sets` frame — JVM
+    only (explode + aggregate), so a caller holding the shingle arrays
+    pays no second trip through the shingle UDF. Docs with no shingle
+    (fewer than k words) get no signature row."""
+    raw = sha60(F.col("shingle")) if checkable else F.xxhash64(F.col("shingle"))
+    sh = sets.select("sid", F.explode("sh").alias("shingle")).select(
+        "sid", F.pmod(raw, F.lit(MERSENNE_PRIME)).alias("_mh_base")
+    )
+    return sh.groupBy("sid").agg(*_minhash_cols(num_hashes, F.col("_mh_base")))
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -213,11 +238,9 @@ def minhash_signatures(
     cross-engine :func:`sha60` so a DuckDB oracle replays the exact
     signatures — projected ONCE per shingle row before the aggregate
     (see :func:`_minhash_cols`)."""
-    raw = sha60(F.col("shingle")) if checkable else F.xxhash64(F.col("shingle"))
-    sh = df.select(
-        F.col(id_col).alias("sid"), F.explode(word_shingles(F.col(text_col), k)).alias("shingle")
-    ).select("sid", F.pmod(raw, F.lit(MERSENNE_PRIME)).alias("_mh_base"))
-    return sh.groupBy("sid").agg(*_minhash_cols(num_hashes, F.col("_mh_base")))
+    return signatures_from_sets(
+        shingle_sets(df, text_col, id_col, k), num_hashes, checkable
+    )
 
 
 def band_bucket(cols: list[Column]) -> Column:
@@ -267,12 +290,21 @@ def minhash_lsh_candidates(
     rows_per_band: int = 4,
     checkable: bool = False,
     dense_bucket_cap: int | None = None,
-    eager_persists: bool = True,
 ) -> DataFrame:
     """Band the signature and bucket-join in ONE pass: melt each row to
-    (sid, band, bucket) via posexplode of the per-band bucket hashes,
-    then a single self-join on (band, bucket). One scan of the
-    signatures, one shuffle — instead of `bands` recomputations.
+    (sid, band, bucket) via posexplode of the per-band bucket hashes
+    (:func:`melted_signature_buckets`), then pair up each (band,
+    bucket)'s members (:func:`lsh_bucket_pairs`). One scan of the
+    signatures, one shuffle — instead of `bands` recomputations."""
+    return lsh_bucket_pairs(
+        melted_signature_buckets(signatures, bands, rows_per_band, checkable),
+        dense_bucket_cap,
+    )
+
+
+def lsh_bucket_pairs(melted: DataFrame, dense_bucket_cap: int | None = None) -> DataFrame:
+    """Candidate pairs (a_id < b_id) from melted (sid, band, bucket)
+    rows: every two sids sharing a (band, bucket).
 
     ``dense_bucket_cap``: buckets with more than this many members emit
     STAR edges (min-sid representative -> each member) PLUS CHAIN edges
@@ -288,62 +320,43 @@ def minhash_lsh_candidates(
     What is traded away is the exhaustive pairwise list INSIDE a dense
     cluster (and pairs between non-adjacent members of a bucket that is
     NOT a coherent cluster), which at scale is exactly the quadratic
-    term that must not be materialized. The bucket-size aggregation and
-    the chain window share the (band, bucket) shuffle key with the
-    self-join, so the guard costs one map-side-combined agg + one
-    window pass, not an extra wide exchange."""
-    melted = melted_signature_buckets(signatures, bands, rows_per_band, checkable)
-    if dense_bucket_cap is None:
-        # both sides of the bucket self-join; eager (corpus scale) so
-        # the two scan stages can't race the cache populate and re-run
-        # the signature pipeline — lazy from micro-batch callers (see
-        # jaccard_verify_pairs docstring)
-        melted = _persist(melted, eager=eager_persists)
-        x = melted.select(F.col("sid").alias("a_id"), "band", "bucket")
-        y = melted.select(F.col("sid").alias("b_id"), "band", "bucket")
-        return (
-            x.join(y, ["band", "bucket"])
-            .filter(F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id")
-            .dropDuplicates()
-        )
-    # bucket size, min-sid representative and the chain successor all
-    # come out of ONE (band, bucket) window pass — the previous
-    # stats-aggregate + join-back formulation paid an extra map-side
-    # agg shuffle plus the join for the same values (VERDICT r13 #2)
-    from pyspark.sql.window import Window
+    term that must not be materialized.
 
-    w_all = Window.partitionBy("band", "bucket")
-    w_ord = w_all.orderBy("sid")
-    m = _persist(
-        melted.withColumn("_bsize", F.count(F.lit(1)).over(w_all))
-        .withColumn("_rep", F.min("sid").over(w_all))
-        .withColumn("_next", F.lead("sid").over(w_ord))
-        ,
-        eager=eager_persists,
-    )  # 4 consumers (sparse self-join both sides + dense star/chain)
-    # under one action — eager at corpus scale so the branches can't
-    # race the cache populate and re-run signatures+window per branch;
-    # lazy from micro-batch callers (see jaccard_verify_pairs docstring)
-    sparse = m.filter(F.col("_bsize") <= dense_bucket_cap)
-    x = sparse.select(F.col("sid").alias("a_id"), "band", "bucket")
-    y = sparse.select(F.col("sid").alias("b_id"), "band", "bucket")
-    sparse_pairs = (
-        x.join(y, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
+    One (band, bucket) aggregation collects each bucket's sorted member
+    array and the edges are generated per bucket row, so the members
+    are read once and nothing needs persisting. A hot bucket costs one
+    array of m sids plus its 2(m-1) edges; the all-pairs generator
+    only sees buckets within the cap (or every bucket when the caller
+    disables the cap)."""
+    buckets = melted.groupBy("band", "bucket").agg(
+        F.array_sort(F.collect_list("sid")).alias("m")
     )
-    # _rep = min(sid) over the bucket, so a_id < b_id by construction
-    dense = m.filter(F.col("_bsize") > dense_bucket_cap)
-    star = dense.filter(F.col("sid") != F.col("_rep")).select(
-        F.col("_rep").alias("a_id"), F.col("sid").alias("b_id")
+    n = F.size("m")
+    sparse = buckets if dense_bucket_cap is None else buckets.filter(n <= dense_bucket_cap)
+    # all pairs: each member (0-based position p) with every later one
+    pairs = sparse.select("m", F.posexplode("m").alias("p", "a_id")).select(
+        "a_id", F.explode(F.slice("m", F.col("p") + 2, n)).alias("b_id")
     )
-    # chain edges: consecutive members in sid order (the window's lead).
-    # Ascending order makes a_id < b_id by construction.
-    chain = dense.filter(F.col("_next").isNotNull()).select(
-        F.col("sid").alias("a_id"), F.col("_next").alias("b_id")
-    )
-    return sparse_pairs.unionByName(star).unionByName(chain).dropDuplicates()
+    if dense_bucket_cap is not None:
+        # star edges (min-sid representative -> each later member) and
+        # chain edges (consecutive members); ascending order makes
+        # a_id < b_id by construction
+        later = F.slice("m", 2, n - 1)
+        edges = F.concat(
+            F.transform(
+                later, lambda b: F.struct(F.element_at("m", 1).alias("a_id"), b.alias("b_id"))
+            ),
+            F.zip_with(
+                F.slice("m", 1, n - 1),
+                later,
+                lambda a, b: F.struct(a.alias("a_id"), b.alias("b_id")),
+            ),
+        )
+        dense = buckets.filter(n > dense_bucket_cap).select(
+            F.explode(edges).alias("e")
+        ).select("e.a_id", "e.b_id")
+        pairs = pairs.unionByName(dense)
+    return pairs.dropDuplicates()
 
 
 def jaccard_verify_pairs(
@@ -353,18 +366,17 @@ def jaccard_verify_pairs(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.2,
-    eager_persists: bool = True,
 ) -> DataFrame:
     """Exact Jaccard computed ONLY for the given candidate pairs: join
     each side to its (distinct) shingle array, then set math per pair —
     O(candidates · shingles), never all-pairs.
 
-    ``eager_persists``: materialize the multi-consumer shingle table
-    up front so concurrent scan stages can't race the cache populate
-    and re-shingle per branch — right for corpus-scale inputs (the
-    registered batch queries; r14 A/B: minhash family -6..-16%).
-    Streaming probes pass False: on micro-batch-sized frames the
-    racing recompute is cheaper than the extra count job per batch."""
+    The shingle table feeds both join sides of one action, so it is
+    persisted EAGERLY: with a lazy persist the two scan stages race the
+    cache populate and each re-runs the shingle UDF (r14 A/B on the
+    registered minhash family: -6..-16% with eager). A caller that
+    already holds the shingle arrays (streaming ``probe_batch``) skips
+    this table and calls :func:`jaccard_verify_sets` directly."""
     # shingle only the docs that appear in a candidate pair — a semi-join
     # keeps the (Python) shingle UDF off the rest of the corpus; at LSH
     # candidate rates of <<1% this is the difference between re-scanning
@@ -373,14 +385,22 @@ def jaccard_verify_pairs(
         pairs.select(F.col("b_id").alias("cand_id"))
     )  # no dropDuplicates: the left-semi join dedups by construction
     base = df.join(cand_ids, df[id_col] == cand_ids.cand_id, "left_semi")
-    sets_df = _persist(
-        base.select(
-            F.col(id_col).alias("sid"), word_shingles(F.col(text_col), k).alias("sh")
-        ),
-        eager=eager_persists,
-    )  # consumed by both join sides of one action (see docstring)
-    a = sets_df.select(F.col("sid").alias("a_id"), F.col("sh").alias("sh_a"))
-    b = sets_df.select(F.col("sid").alias("b_id"), F.col("sh").alias("sh_b"))
+    sets_df = _persist(shingle_sets(base, text_col, id_col, k), eager=True)
+    return jaccard_verify_sets(pairs, sets_df, sets_df, threshold)
+
+
+def jaccard_verify_sets(
+    pairs: DataFrame,  # (a_id, b_id)
+    a_sets: DataFrame,
+    b_sets: DataFrame,
+    threshold: float = 0.2,
+) -> DataFrame:
+    """The set math of :func:`jaccard_verify_pairs` over precomputed
+    :func:`shingle_sets` frames: ``a_sets`` supplies each pair's a-side
+    shingle array, ``b_sets`` its b-side one (one row per sid on each).
+    Returns (a_id, b_id, jaccard) for pairs at or above ``threshold``."""
+    a = a_sets.select(F.col("sid").alias("a_id"), F.col("sh").alias("sh_a"))
+    b = b_sets.select(F.col("sid").alias("b_id"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (
@@ -401,7 +421,6 @@ def minhash_neardup(
     bands: int = 8,
     checkable: bool = False,
     dense_bucket_cap: int | None = DENSE_BUCKET_CAP,
-    eager_persists: bool = True,
 ) -> DataFrame:
     """LSH candidates verified with exact Jaccard — the 100 TB near-dup
     path: candidate generation AND verification are candidate-local,
@@ -416,9 +435,8 @@ def minhash_neardup(
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, checkable=checkable)
     # persisted: verification reads candidates three times (both sides
     # of the candidate-id union and the pair join) — without this the
-    # whole signature + bucket-join pipeline would recompute; eager at
-    # corpus scale so those branches can't race the cache populate,
-    # lazy from micro-batch callers (see jaccard_verify_pairs)
+    # whole signature + bucket-join pipeline would recompute; eager so
+    # those branches can't race the cache populate
     candidates = _persist(
         minhash_lsh_candidates(
             sigs,
@@ -426,18 +444,10 @@ def minhash_neardup(
             rows_per_band,
             checkable=checkable,
             dense_bucket_cap=dense_bucket_cap,
-            eager_persists=eager_persists,
         ),
-        eager=eager_persists,
+        eager=True,
     )
-    return jaccard_verify_pairs(
-        df,
-        candidates,
-        text_col,
-        id_col,
-        threshold=threshold,
-        eager_persists=eager_persists,
-    )
+    return jaccard_verify_pairs(df, candidates, text_col, id_col, threshold=threshold)
 
 
 #: Chain-disposition policies for intra-set dedup over verified pairs
@@ -836,7 +846,6 @@ def minhash_probe_neardup(
     checkable: bool = False,
     dense_bucket_cap: int | None = DENSE_BUCKET_CAP,
     corpus_index: DataFrame | None = None,
-    eager_persists: bool = True,
 ) -> DataFrame:
     """INCREMENTAL near-dup: probe a batch of new docs against the
     existing corpus's LSH buckets — the join a 100 TB pipeline runs per
@@ -860,7 +869,14 @@ def minhash_probe_neardup(
     is used VERBATIM — the collapse is an index-build-time property,
     so ``dense_bucket_cap`` applies only to the compute-fresh path —
     and the corpus side of this call does no signature work at all:
-    per ingest, only the batch is shingled/hashed."""
+    per ingest, only the batch is shingled/hashed.
+
+    This is the registry's one-shot form: its candidate set and the
+    verify's shingle table are persisted eagerly (each feeds several
+    branches of one action), and the batch is shingled twice — once
+    for signatures, once for the verify. The stream's per-micro-batch
+    twin, :func:`streaming.dedup_stream.probe_batch`, shingles the
+    batch once and reuses the arrays for both."""
     batch = df.filter(batch_filter)
     rows_per_band = num_hashes // bands
     if corpus_index is None:
@@ -881,18 +897,11 @@ def minhash_probe_neardup(
         checkable,
     )
     cand = minhash_probe_candidates(mb, mc)
-    # eager (by default) for the same three-consumer reason as
-    # minhash_neardup's candidate persist (both sides of the
-    # candidate-id union + the pair join race a lazy cache); lazy from
-    # micro-batch callers (see jaccard_verify_pairs docstring)
+    # eager for the same three-consumer reason as minhash_neardup's
+    # candidate persist (both sides of the candidate-id union + the
+    # pair join race a lazy cache)
     verified = jaccard_verify_pairs(
-        df,
-        _persist(cand, eager=eager_persists),
-        text_col,
-        id_col,
-        k=3,
-        threshold=threshold,
-        eager_persists=eager_persists,
+        df, _persist(cand, eager=True), text_col, id_col, k=3, threshold=threshold
     )
     return verified.select(
         F.col("a_id").alias("batch_id"),

@@ -58,83 +58,69 @@ def register(name: str, oracle: Optional[str] = None, doc: str = ""):
 # vintage first, then r4), recomputed each round from the
 # CORRECTNESS_r0*.json files.
 _PRIORITY = (
-    # (a) changed in round 14 (9): the chain family re-proves because
-    # sequential_firstwins_pairs gained the empty-input short-circuit;
-    # the minhash family because the signature base-hash projection and
-    # the single-window dense-bucket candidate pass changed the operator
-    # (VERDICT r13 weak #1); knn_ivf_stored_index / knn_ivf_incremental
-    # because load_ivf_index now routes through the snapshot-gated
-    # centroid memo (the rest of the IVF family is r10-vintage and sits
-    # in window (b) anyway).
+    # (a) operators changed since the last driver rows (8): the minhash
+    # family because minhash_lsh_candidates now pairs buckets from one
+    # (band, bucket) aggregation and the verify shares its set math
+    # with the stream probe (jaccard_verify_sets); the r15-changed trio
+    # (ngram_jaccard_selfjoin's single-window stop-shingle cap, the
+    # components/BFS driver loop, pagerank's primed caches) that never
+    # got its after-change proof row.
     "dedup_chain_sequential",
-    "neardup_chain_sequential_cosine",
-    "neardup_probe_chain_cosine",
     "minhash_lsh_neardup",
     "minhash_neardup_components",
     "minhash_incremental_probe",
     "minhash_probe_stored_index",
-    "knn_ivf_stored_index",
-    "knn_ivf_incremental",
-    # (a') changed in the r14 OPTIMIZATION pass (3 more): the
-    # connected-components convergence check moved to the label-sum
-    # aggregate (neardup_components + its survivors rollup — the other
-    # components consumers are already in-window), and
-    # contamination_ngram_overlap's totals+hits fused into one pass.
-    # The knn_ivf_*/neardup_*_ivf_* queries the same pass touched are
-    # already in windows (a)/(b) below.
-    "neardup_components",
-    "neardup_cluster_survivors",
-    "contamination_ngram_overlap",
-    # (b) oldest proof rows first (COVERAGE.md staleness manifest,
-    # recomputed by scripts/coverage_manifest.py at the start of r14):
-    # the entire remaining round-10 vintage (26 names) — after this
-    # window the oldest proof is r11 (age 3), inside the 4-round
-    # budget.
-    "knn_ivf_approx",
-    "knn_ivf_quantized",
-    "knn_ivf_rebuilt",
-    "knn_lsh_cosine",
-    "left_join_state",
-    "limit_pages",
-    "neardup_components_ivf_blocked",
-    "neardup_pairs_ivf_blocked",
-    "neardup_pairs_ivf_stored",
-    "neardup_probe_ivf_blocked",
-    "neardup_probe_ivf_stored",
-    "sample_deterministic",
-    "semdedup_cluster_prune",
-    "sort_nulls_ordering",
-    "state_merge_upsert",
-    "stratified_sample_per_group",
-    "text_token_stats",
-    "tfidf_top_terms",
-    "time_rollup_multi",
-    "token_count_bpe",
-    "tpch_q1_pricing_summary",
-    "unpivot_metrics",
-    "variant_extract_props",
-    "window_lag_lead",
-    "window_session_gap",
-    "window_tumbling_counts",
-    # (c) round-11-vintage alphabetical fill to exactly 50 (the
+    "ngram_jaccard_selfjoin",
+    "graph_reachability",
+    "graph_pagerank",
+    # (b) oldest proof rows first (scripts/coverage_manifest.py after
+    # round 15): the whole remaining round-11 vintage (32 names, age 4
+    # — at the budget), so after this window the oldest proof is r12.
+    "knn_topk",
+    "lateral_top_item",
+    "levenshtein_neardup_titles",
+    "map_explode_props",
+    "mixture_rebalance_lang",
+    "multimodal_decode_arrow",
+    "multimodal_decode_stub",
+    "needs_vector_flag",
+    "ngram_jaccard_prefixfilter",
+    "ngram_jaccard_prefixfilter_capped",
+    "outlier_mad_filter",
+    "parse_bool_int",
+    "pit_interval_lookup",
+    "point_lookup",
+    "project_coalesce",
+    "scan_union_seed",
+    "semi_join_filter",
+    "setop_except",
+    "setop_except_all",
+    "setop_intersect",
+    "setop_intersect_all",
+    "simhash_buckets",
+    "simhash_neardup",
+    "sort_topk",
+    "stale_detect",
+    "state_load",
+    "topk_per_group",
+    "tpch_q15_top_supplier",
+    "tpch_q18_large_volume",
+    "tpch_q21_waiting_supplier",
+    "union_schema_evolution",
+    "url_basename",
+    # (c) round-12-vintage alphabetical fill to exactly 50 (the
     # driver's sample size, pinned in tests/test_fixture_canary.py);
-    # the remainder of the r11 vintage leads the round-15 rotation.
-    "agg_cube",
-    "agg_grouping_sets",
-    "array_hof_ops",
-    "dedup_embedding_cosine",
-    "group_normalize_pandas",
-    "hybrid_rrf_search",
-    "incremental_changed",
-    "interval_merge_islands",
-    "join_full_outer_coalesce",
-    "kmeans_assign",
-    "kmeans_update",
-    "knn_filtered",
-    # (trimmed to keep the window at exactly 50 after the three (a')
-    # additions: knn_topk / lateral_top_item / levenshtein_neardup_titles
-    # move to the round-15 rotation head with the rest of the r11
-    # vintage)
+    # the rest of the r12 vintage leads the next rotation.
+    "agg_percentiles",
+    "agg_stats_corr",
+    "agg_status_counts",
+    "agg_string_concat",
+    "cogroup_conversion_stats",
+    "curation_funnel",
+    "date_arithmetic",
+    "dedup_exact_hash",
+    "doc_fingerprint",
+    "every_nth_row",
 )
 
 _MODULES = (

@@ -43,9 +43,11 @@ Intra-batch near-dups (ADVICE r8): by default two near-dup docs that
 arrive in the SAME micro-batch are both clean — cross-batch dedup only,
 so coverage at the margin depends on page/batch boundaries.
 ``intra_batch=True`` closes the gap: after the corpus probe, the batch
-survivors are self-joined (:func:`operators.dedup.minhash_neardup`)
-and verified pairs flag the higher id against the lower (first-wins by
-id, matching the batch engine's ``dedup_first_wins`` convention).
+survivors' LSH buckets are paired up
+(:func:`operators.dedup.lsh_bucket_pairs`, the candidate core of
+:func:`operators.dedup.minhash_neardup`) and verified pairs flag the
+higher id against the lower (first-wins by id, matching the batch
+engine's ``dedup_first_wins`` convention).
 Multi-doc CHAINS a~b~c resolve per ``chain_policy``
 (:data:`operators.dedup.CHAIN_POLICIES`, VERDICT r11 #2): the default
 "sequential" keeps c (b's flagging un-flags its partners — exactly
@@ -69,8 +71,6 @@ from pyspark.sql.streaming import StreamingQuery
 from notion_vector_store_etl_pipeline_spark.operators.cache import (
     memo_df,
     release_cache,
-    release_tracked_except,
-    tracked_snapshot,
 )
 from notion_vector_store_etl_pipeline_spark.operators.statefs import (
     batch_dirs,
@@ -85,13 +85,15 @@ from notion_vector_store_etl_pipeline_spark.operators.dedup import (
     sequential_firstwins_pairs,
     build_lsh_index,
     compact_lsh_index,
-    jaccard_verify_pairs,
+    jaccard_verify_sets,
     load_lsh_index,
     load_lsh_index_bucketed,
+    lsh_bucket_pairs,
     melted_signature_buckets,
-    minhash_neardup,
     minhash_probe_candidates,
     minhash_signatures,
+    shingle_sets,
+    signatures_from_sets,
     write_lsh_index,
     write_lsh_index_bucketed,
 )
@@ -193,15 +195,26 @@ def probe_batch(
     clean docs read back from disk (r10 review; byte-identical rows,
     the computation is per-row deterministic).
 
-    Cache lifecycle is fully internal (ADVICE r9): the candidate set
-    feeds two verify-side joins and ``flagged`` two consumers, so both
-    are persisted DURING the call — but the final ``flagged`` is then
-    materialized with an eager ``localCheckpoint`` (micro-batch-sized
-    by construction) and every intermediate persist is released before
-    returning. Callers get a checkpoint-backed ``flagged`` and a
-    ``clean`` that is one cheap anti-join over it; no
-    ``release_cache()`` contract to forget, no cache accumulation in
-    long direct-caller sessions.
+    One shingle pass: the batch's text crosses the Python shingle UDF
+    exactly once, into ``sets`` = (sid, shingle array). The signatures
+    and melted buckets ``mb`` derive from those arrays JVM-side; the
+    corpus verify reads its a-side (and every batch id on its b-side)
+    from ``sets``; the intra stage filters ``mb`` to the corpus
+    survivors and verifies against ``sets`` again. Only corpus docs
+    that are candidates, and not overridden by the batch, are shingled
+    beyond that.
+
+    Cache lifecycle is fully internal (ADVICE r9): two eager pins,
+    ``sets`` and the candidate pairs (each is read by several branches
+    of a later action, so it is materialized once up front instead of
+    raced by lazy readers), plus ``mb``, pinned lazily because the
+    candidate pin's job is its one first reader. The final ``flagged``
+    (and ``clean_mb``) is materialized with an eager
+    ``localCheckpoint`` (micro-batch-sized by construction), and all
+    three pins are released before returning. Callers get a
+    checkpoint-backed ``flagged`` and a ``clean`` that is one cheap
+    anti-join over it; no ``release_cache()`` contract to forget, no
+    cache accumulation in long direct-caller sessions.
 
     The trade, stated: ``localCheckpoint`` blocks are executor-local
     and NON-RECOMPUTABLE — losing an executor between this return and
@@ -217,126 +230,106 @@ def probe_batch(
     default here (batches are small by construction)."""
     if chain_policy not in CHAIN_POLICIES:
         raise ValueError(f"chain_policy must be one of {CHAIN_POLICIES}, got {chain_policy!r}")
-    local_persists: list[DataFrame] = []
-    tracked_before = tracked_snapshot()
-
-    def _persist(df: DataFrame) -> DataFrame:
-        df = df.persist()
-        local_persists.append(df)
-        return df
-
+    # The three pins are declared up front (persist() is lazy) so one
+    # finally releases them whatever the call raises.
+    sets = shingle_sets(batch).persist()
+    # mb is pinned lazily: the candidate pin's job below is its one
+    # first reader, so it populates mb with no count job of its own
     mb = melted_signature_buckets(
-        minhash_signatures(batch, "text", "doc_id", num_hashes, checkable=checkable),
+        signatures_from_sets(sets, num_hashes, checkable),
         bands,
         num_hashes // bands,
         checkable,
-    )
-    if return_clean_buckets:
-        # the candidate join below populates the cache; the clean_mb
-        # checkpoint then reads it instead of re-running the (Python
-        # shingle UDF) signature pass a second time
-        mb = _persist(mb)
+    ).persist()
     # Same-id exclusion (r10 review): an UPDATED document — same
     # doc_id as its corpus entry, changed text — collides with its own
     # buckets and would be flagged as a near-dup of itself, silently
     # discarding every edit. A (batch X, corpus X) pair is an update,
     # not a duplicate; the skip stage upstream already passed it
-    # through deliberately.
-    cand = _persist(
-        minhash_probe_candidates(mb, corpus_index).filter(
-            F.col("a_id") != F.col("b_id")
+    # through deliberately. Pinned eagerly: the verify below reads the
+    # candidates twice in one action (corpus-side semi-join + pair
+    # join), and racing lazy readers would each re-run the index join.
+    cand = minhash_probe_candidates(mb, corpus_index).filter(
+        F.col("a_id") != F.col("b_id")
+    ).persist()
+    try:
+        sets.count()
+        cand.count()
+        # Verification needs text on both sides, one text per id.
+        # BATCH WINS for ids present on both sides ("the corpus as it
+        # will be after this ingest"): an updated doc's pairs verify
+        # against its NEW text on either end, so the b-side is the
+        # batch's own arrays plus the shingles of only those candidate
+        # corpus docs the batch does not override.
+        corpus_sets = shingle_sets(
+            corpus_docs.select("doc_id", "text")
+            .join(cand.select(F.col("b_id").alias("doc_id")), "doc_id", "left_semi")
+            .join(batch.select("doc_id"), "doc_id", "left_anti")
         )
-    )
-    # Verification needs text on both sides, and the shingle table is
-    # keyed by id — one text per id. BATCH WINS for ids present on
-    # both sides ("the corpus as it will be after this ingest"): an
-    # updated doc's pairs verify against its NEW text on either end;
-    # without the anti-join the duplicated id would fan the verify
-    # joins out across old/new text combinations.
-    universe = batch.select("doc_id", "text").unionByName(
-        corpus_docs.select("doc_id", "text").join(
-            batch.select("doc_id"), "doc_id", "left_anti"
+        flagged = jaccard_verify_sets(
+            cand, sets, sets.unionByName(corpus_sets), threshold
+        ).select(
+            F.col("a_id").alias("batch_id"), F.col("b_id").alias("corpus_id"), "jaccard"
         )
-    )
-    # eager_persists=False: per-batch frames are tiny, so the extra
-    # eager count jobs cost more than the cache race they prevent
-    # (r14 profiler A/B: +~1.2 s/batch steady p50 with eager; see
-    # operators.dedup.jaccard_verify_pairs)
-    flagged = jaccard_verify_pairs(
-        universe, cand, threshold=threshold, eager_persists=False
-    ).select(
-        F.col("a_id").alias("batch_id"), F.col("b_id").alias("corpus_id"), "jaccard"
-    )
-    if intra_batch:
-        # truncate lineage before nesting: the intra stage embeds the
-        # corpus-verify plan inside the self-join's plan on BOTH union
-        # branches, and Spark expands the shared sub-DAG to a tree —
-        # without the checkpoint the logical plan grows multiplicatively
-        # and planning itself OOMs the driver (measured: a 3-doc batch).
-        # flagged is micro-batch-sized; an eager localCheckpoint is cheap.
-        flagged = flagged.localCheckpoint(eager=True)
-        survivors = _persist(
-            batch.join(
-                flagged.select(F.col("batch_id").alias("doc_id")),
-                "doc_id",
-                "left_anti",
+        if intra_batch:
+            # truncate lineage before nesting: the intra stage embeds
+            # the corpus-verify plan in its own plan on BOTH union
+            # branches, and Spark expands the shared sub-DAG to a tree
+            # — without the checkpoint the logical plan grows
+            # multiplicatively and planning itself OOMs the driver
+            # (measured: a 3-doc batch). flagged is micro-batch-sized;
+            # an eager localCheckpoint is cheap.
+            flagged = flagged.localCheckpoint(eager=True)
+            # pair up the corpus survivors' buckets (dense-bucket star +
+            # chain guard as in minhash_neardup); verified pairs emit a_id
+            # < b_id, so flagging b_id keeps the lowest id (first-wins)
+            survivor_mb = mb.join(
+                flagged.select(F.col("batch_id").alias("sid")), "sid", "left_anti"
             )
-        )
-        # self-join the corpus survivors; verified pairs emit a_id <
-        # b_id, so flagging b_id keeps the lowest id (first-wins)
-        intra_pairs = minhash_neardup(
-            survivors,
-            "text",
+            intra_pairs = jaccard_verify_sets(
+                lsh_bucket_pairs(survivor_mb, DENSE_BUCKET_CAP), sets, sets, threshold
+            )
+            if chain_policy == "sequential":
+                # resolve chains to the stream-equivalent greedy
+                # disposition (CHAIN_POLICIES in operators.dedup): a~b~c
+                # keeps c, making the flagged set invariant to where
+                # batch boundaries fall
+                intra_pairs = sequential_firstwins_pairs(intra_pairs)
+            intra = intra_pairs.select(
+                F.col("b_id").alias("batch_id"), F.col("a_id").alias("corpus_id"), "jaccard"
+            )
+            flagged = flagged.unionByName(intra)
+        # materialize once (micro-batch-sized); the returned plans then
+        # depend only on checkpointed blocks, so the finally below may
+        # release the pins
+        flagged = flagged.localCheckpoint(eager=True)
+        clean_mb = None
+        if return_clean_buckets:
+            # filter the already-computed buckets to clean survivors and
+            # pin them BEFORE mb is released; checkpoint is batch-sized
+            # like flagged. One partition: the cached mb keeps its
+            # shuffle-partition count, and the index-delta writer would
+            # otherwise emit that many tiny files per batch.
+            clean_mb = (
+                mb.join(
+                    flagged.select(F.col("batch_id").alias("sid")).dropDuplicates(),
+                    "sid",
+                    "left_anti",
+                )
+                .coalesce(1)
+                .localCheckpoint(eager=True)
+            )
+        clean = batch.join(
+            flagged.select(F.col("batch_id").alias("doc_id")).dropDuplicates(),
             "doc_id",
-            threshold=threshold,
-            num_hashes=num_hashes,
-            bands=bands,
-            checkable=checkable,
-            eager_persists=False,  # micro-batch frames: see above
-        )
-        if chain_policy == "sequential":
-            # resolve chains to the stream-equivalent greedy disposition
-            # (CHAIN_POLICIES in operators.dedup): a~b~c keeps c, making
-            # the flagged set invariant to where batch boundaries fall
-            intra_pairs = sequential_firstwins_pairs(intra_pairs)
-        intra = intra_pairs.select(
-            F.col("b_id").alias("batch_id"), F.col("a_id").alias("corpus_id"), "jaccard"
-        )
-        flagged = flagged.unionByName(intra)
-    # materialize once (micro-batch-sized), then drop every
-    # intermediate persist — the returned plans depend only on the
-    # checkpointed blocks, so releasing here is safe and the caller
-    # owns nothing
-    flagged = flagged.localCheckpoint(eager=True)
-    for df in local_persists:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    # nested operators (jaccard_verify_pairs' shingle table,
-    # minhash_neardup on the intra path) register their persists in the
-    # GLOBAL tracker; the checkpoint above consumed them all, so scope
-    # them to this call too instead of leaving them for a caller-side
-    # release_cache() nobody may run
-    clean_mb = None
-    if return_clean_buckets:
-        # filter the already-computed buckets to clean survivors and
-        # pin them BEFORE the persists are released (mb's lineage dies
-        # with them); checkpoint is batch-sized like flagged
-        clean_mb = mb.join(
-            flagged.select(F.col("batch_id").alias("sid")).dropDuplicates(),
-            "sid",
             "left_anti",
-        ).localCheckpoint(eager=True)
-    release_tracked_except(tracked_before)
-    clean = batch.join(
-        flagged.select(F.col("batch_id").alias("doc_id")).dropDuplicates(),
-        "doc_id",
-        "left_anti",
-    )
-    if return_clean_buckets:
-        return flagged, clean, clean_mb
-    return flagged, clean
+        )
+        if return_clean_buckets:
+            return flagged, clean, clean_mb
+        return flagged, clean
+    finally:
+        for df in (sets, mb, cand):
+            df.unpersist()
 
 
 def _manifest_path(out_dir: str) -> str:

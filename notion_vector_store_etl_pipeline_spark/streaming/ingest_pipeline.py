@@ -205,8 +205,9 @@ def ingest_stage(
     ``intra_batch`` also dedups within the incoming set (the batch
     twin's stand-in for the stream's cross-batch index growth);
     ``return_clean_buckets`` appends the clean docs' melted LSH
-    buckets as a fifth element — the stream's index-delta rows,
-    reusing the probe's own signature pass (probe_batch docstring)."""
+    buckets as a fifth element — the stream's index-delta rows, cut
+    from the buckets the probe already derived from its one shingle
+    pass over the batch (probe_batch docstring)."""
     _t = time.perf_counter()
     probed = probe_batch(
         todo.select("doc_id", "text"),
@@ -221,12 +222,14 @@ def ingest_stage(
     )
     flagged, clean = probed[0], probed[1]
     _t = _mark(_PROFILE_BID, "kernel:probe", _t)
-    # probe_batch consumes only (doc_id, text); rejoin for the chunk
-    # stage's source column. localCheckpoint (ingest-batch-sized, the
-    # same contract probe_batch itself uses): clean_full feeds the
-    # clean sink and the chunk stage, and chunks feeds BOTH the
-    # linkage sink and the assignment — unpinned, the chunk+embed
-    # pipeline would run once per consuming action.
+    # probe_batch consumes only (doc_id, text), shingles that text
+    # once, and returns checkpoint-backed frames with its own pins
+    # already released; rejoin for the chunk stage's source column.
+    # localCheckpoint (ingest-batch-sized, the same contract
+    # probe_batch's outputs use): clean_full feeds the clean sink and
+    # the chunk stage, and chunks feeds BOTH the linkage sink and the
+    # assignment — unpinned, the chunk+embed pipeline would run once
+    # per consuming action.
     clean_full = (
         todo.join(clean.select("doc_id"), "doc_id", "left_semi")
         .select("doc_id", "text", "source")

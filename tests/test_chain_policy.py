@@ -253,3 +253,118 @@ def test_peel_late_survivor_pair_attribution(spark):
     )
     got = sorted((r.a_id, r.b_id) for r in D.sequential_firstwins_pairs(pairs).collect())
     assert got == [(1, 2), (1, 4), (3, 4)]
+
+
+# ----------------------------- probe_batch vs the operator composition
+
+
+def _words(prefix, n):
+    return [f"{prefix}{i}" for i in range(n)]
+
+
+def _parity_frames(spark):
+    """Corpus + batch holding every probe_batch branch: a same-id
+    update (600, which also sits in 1020's corpus candidates, so the
+    b-side must verify against the batch's NEW text), a cross-id
+    near-dup (1001 ~ corpus 10), an intra-batch pair (1002 ~ 1003), an
+    A~B~C chain (1011 ~ 1012 ~ 1013) and a template cluster of 80
+    near-identical batch docs that fills one bucket past
+    DENSE_BUCKET_CAP."""
+    corpus = [(i, " ".join(_words(f"c{i}_", 40))) for i in range(1, 30)]
+    corpus.append((600, " ".join(_words("old600_", 40))))
+    batch = [
+        (600, " ".join(_words("new600_", 40))),
+        (1001, " ".join(_words("c10_", 40)[:36] + _words("x1001_", 4))),
+        (1002, " ".join(_words("pair_", 40))),
+        (1003, " ".join(_words("pair_", 37) + _words("y1003_", 3))),
+        (1011, TEXT_A),
+        (1012, TEXT_B),
+        (1013, TEXT_C),
+        (1020, " ".join(_words("old600_", 38) + _words("z1020_", 2))),
+        (1030, " ".join(_words("lone_", 40))),
+    ]
+    template = _words("tmpl_", 30)
+    batch += [(2000 + i, " ".join(template + [f"uniq{i}"])) for i in range(80)]
+    schema = "doc_id: long, text: string"
+    return spark.createDataFrame(corpus, schema), spark.createDataFrame(batch, schema)
+
+
+def _composed_probe(batch, corpus, index, checkable, chain_policy):
+    """The stream probe as the still-public operators compose it: batch
+    signatures -> corpus candidates -> verify over the batch-wins
+    universe -> minhash_neardup over the corpus survivors -> peel."""
+    num_hashes, bands, threshold = _KW["num_hashes"], _KW["bands"], _KW["threshold"]
+    mb = D.melted_signature_buckets(
+        D.minhash_signatures(batch, num_hashes=num_hashes, checkable=checkable),
+        bands,
+        num_hashes // bands,
+        checkable,
+    )
+    cand = D.minhash_probe_candidates(mb, index).filter(F.col("a_id") != F.col("b_id"))
+    universe = batch.unionByName(corpus.join(batch.select("doc_id"), "doc_id", "left_anti"))
+    flagged = D.jaccard_verify_pairs(universe, cand, threshold=threshold).select(
+        F.col("a_id").alias("batch_id"), F.col("b_id").alias("corpus_id"), "jaccard"
+    ).localCheckpoint(eager=True)
+    survivors = batch.join(
+        flagged.select(F.col("batch_id").alias("doc_id")), "doc_id", "left_anti"
+    )
+    intra = D.minhash_neardup(
+        survivors,
+        threshold=threshold,
+        num_hashes=num_hashes,
+        bands=bands,
+        checkable=checkable,
+    )
+    if chain_policy == "sequential":
+        intra = D.sequential_firstwins_pairs(intra)
+    flagged = flagged.unionByName(
+        intra.select(
+            F.col("b_id").alias("batch_id"), F.col("a_id").alias("corpus_id"), "jaccard"
+        )
+    )
+    ids = flagged.select(F.col("batch_id").alias("doc_id")).distinct()
+    clean = batch.join(ids, "doc_id", "left_anti")
+    clean_mb = mb.join(ids.withColumnRenamed("doc_id", "sid"), "sid", "left_anti")
+    return flagged, clean, clean_mb
+
+
+def _rows(frames):
+    return tuple(sorted(tuple(r) for r in df.collect()) for df in frames)
+
+
+@pytest.mark.parametrize("checkable", [False, True])
+def test_probe_batch_matches_operator_composition(spark, checkable):
+    """probe_batch shingles the batch once and reuses the arrays for
+    signatures, both verifies and the intra stage; its three outputs
+    must equal the operator-by-operator composition, under both chain
+    policies, on a batch that reaches every branch."""
+    corpus, batch = _parity_frames(spark)
+    index = D.build_lsh_index(
+        corpus, num_hashes=_KW["num_hashes"], bands=_KW["bands"], checkable=checkable
+    )
+    mb = D.melted_signature_buckets(
+        D.minhash_signatures(batch, num_hashes=32, checkable=checkable), 32, 1, checkable
+    )
+    biggest = mb.groupBy("band", "bucket").count().agg(F.max("count")).first()[0]
+    assert biggest > D.DENSE_BUCKET_CAP  # the dense-bucket branch is reached
+    for policy in D.CHAIN_POLICIES:
+        got = _rows(
+            probe_batch(
+                batch,
+                corpus,
+                index,
+                intra_batch=True,
+                return_clean_buckets=True,
+                chain_policy=policy,
+                checkable=checkable,
+                **_KW,
+            )
+        )
+        want = _rows(_composed_probe(batch, corpus, index, checkable, policy))
+        D.release_cache()
+        assert got == want, policy
+        flagged = {(r[0], r[1]) for r in got[0]}
+        assert (1001, 10) in flagged  # cross-id near-dup
+        assert (1003, 1002) in flagged  # intra-batch pair
+        assert not any(b in (600, 1020) for b, _ in flagged)  # update, batch wins
+        assert ((1013, 1012) in flagged) == (policy == "conservative")

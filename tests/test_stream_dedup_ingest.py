@@ -814,3 +814,60 @@ def test_stream_restart_resumes_against_compacted_state(spark, tmp_path):
     # no further compaction ran (batch 20 never arrived): same manifest
     man2 = read_compaction_manifest(out)
     assert man2 == man
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a fresh Spark job group; return how many jobs
+    it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_probe_batch_job_ceiling(spark):
+    """probe_batch is bound by job count, not data, at micro-batch
+    size: the batch crosses the shingle UDF once and every later stage
+    reads the two pins. A 100-doc batch with no intra pairs (five
+    cross-id near-dups of corpus docs) stays within 30 jobs; the
+    composition that shingled the batch four times launched 44 here."""
+    import random
+
+    from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
+        probe_batch,
+    )
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(5000)]
+    corpus = [(i, " ".join(rng.choices(vocab, k=40))) for i in range(300)]
+    batch = [(1000 + i, " ".join(rng.choices(vocab, k=40))) for i in range(95)]
+    batch += [(2000 + i, corpus[i][1] + " tail") for i in range(5)]
+    schema = "doc_id: long, text: string"
+    corpus_df = spark.createDataFrame(corpus, schema)
+    batch_df = spark.createDataFrame(batch, schema)
+    index = D.build_lsh_index(corpus_df).localCheckpoint(eager=True)
+    out = []
+    jobs = _jobs_in(
+        spark,
+        "probe_batch_job_ceiling",
+        lambda: out.extend(
+            probe_batch(
+                batch_df,
+                corpus_df,
+                index,
+                intra_batch=True,
+                return_clean_buckets=True,
+            )
+        ),
+    )
+    flagged, clean, clean_mb = out
+    assert sorted((r.batch_id, r.corpus_id) for r in flagged.collect()) == [
+        (2000 + i, i) for i in range(5)
+    ]
+    assert clean.count() == 95
+    assert clean_mb.select("sid").distinct().count() == 95
+    assert jobs <= 30, jobs
