@@ -52,29 +52,6 @@ def normalized_text(text: Column) -> Column:
     return F.lower(F.trim(F.regexp_replace(text, r"\s+", " ")))
 
 
-def word_shingles_hof(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles via JVM higher-order fns. Semantically
-    identical to ``word_shingles`` but ~18x slower at scale: HOF lambdas
-    are interpreted per element, AND the lambda body's ``element_at(toks,
-    ...)`` references the split() EXPRESSION, which codegen CSE cannot
-    reach inside a lambdafunction — the text is re-split per shingle
-    (see PLANS.md "Array HOF lambdas"). To use this for real, bind the
-    token array as its own projection first and pass the column in.
-    Kept as the no-Python fallback."""
-    toks = F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
-    n = F.size(toks)
-    # guard n < k explicitly: sequence(0, -1) infers step -1 and yields
-    # [0, -1] (not []), driving element_at to an INVALID_ARRAY_INDEX
-    # crash on any document shorter than k words
-    idx = F.when(n >= k, F.sequence(F.lit(0), n - k)).otherwise(
-        F.array().cast("array<int>")
-    )
-    shingles = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)])
-    )
-    return F.array_distinct(shingles)
-
-
 _SHINGLE_UDFS: dict[int, object] = {}
 
 
@@ -778,7 +755,7 @@ def compact_lsh_index(
     root listing) and handed to the reader with ``basePath``, instead
     of ``spark.read.parquet(root)`` + a filter: the root read would
     file-list every leaf ever written (the O(stream-age) term
-    ``_read_prior_batches`` was rewritten to kill) and CRASHES with
+    ``streaming.state.read_prior_batches`` was written to kill) and CRASHES with
     'Unable to infer schema' when the root exists but the tail is
     empty (reachable after ``prune_deltas``). An empty tail is an
     early return: nothing to fold, no version written. Callers that

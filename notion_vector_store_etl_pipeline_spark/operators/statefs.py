@@ -36,8 +36,8 @@ Atomicity of ``write_text_atomic`` by backend:
   sub-millisecond window in which the manifest exists nowhere — a
   crash inside it durably loses the manifest; external readers on
   such a scheme combined with ``prune_deltas=True`` should prefer an
-  object-store root or accept the retry loop in
-  ``load_stream_ann_state`` (streaming/ann_stream.py).
+  object-store root or accept the anchored-read retry loop every state
+  reader goes through (``anchored_read`` in streaming/state.py).
 
 Disposition of the fallback window (VERDICT r10 next-round #5,
 adjudicated r11 — ACCEPTED, not patched): the window exists only for

@@ -232,12 +232,16 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtrees are independent, so their stages run concurrently and
     # back-fill each other's stragglers (guide §2.6) — sequential
     # count() + count() paid two jobs and serialized the two
-    # materializations (r15). n is the scalar loop parameter below.
-    n = (
-        nodes.agg(F.count(F.lit(1)).alias("c"))
-        .unionAll(edges_deg.agg(F.count(F.lit(1)).alias("c")))
-        .collect()[0]["c"]
-    )
+    # materializations (r15). n is the scalar loop parameter below. Each
+    # branch carries a tag and n is picked by it: a union's row order
+    # follows its children's task order, which Spark does not promise.
+    counts = {
+        r["t"]: r["c"]
+        for r in nodes.agg(F.lit("nodes").alias("t"), F.count(F.lit(1)).alias("c"))
+        .unionAll(edges_deg.agg(F.lit("edges").alias("t"), F.count(F.lit(1)).alias("c")))
+        .collect()
+    }
+    n = counts["nodes"]
 
     ranks = nodes.select("node", (F.lit(1.0) / n).alias("rank"))
     for _ in range(_PR_ITERS):

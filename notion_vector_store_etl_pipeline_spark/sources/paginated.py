@@ -152,3 +152,23 @@ class PaginatedSource(DataSource):
 
 def register_paginated_source(spark) -> None:
     spark.dataSource.register(PaginatedSource)
+
+
+def foreach_page_batch(
+    spark, source_path: str, page_size: int, pages_per_batch: int, checkpoint_dir: str, process
+):
+    """Start a query that walks ``source_path`` ``pages_per_batch``
+    pages of ``page_size`` rows at a time and hands each micro-batch to
+    ``process(batch, batch_id)``; the cursor (and so resume) is owned
+    by the checkpoint at ``checkpoint_dir``."""
+    register_paginated_source(spark)
+    return (
+        spark.readStream.format("paginated")
+        .option("path", source_path)
+        .option("page_size", str(page_size))
+        .option("pages_per_batch", str(pages_per_batch))
+        .load()
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )

@@ -21,10 +21,11 @@ next index version (:func:`operators.similarity.compact_ivf_index`)
 and publishes an atomic manifest; consumers anchor on the manifest and
 read only the delta TAIL, so probe-side state stays O(K deltas)
 regardless of stream age — the same bounded-growth discipline proven
-for the dedup stream (SCALE_SMOKE_R9.md §2), reusing its manifest
-machinery. The reference anchor is the same: the manifest is read once
-per run, not once per file (Notion_openai_vector_etl.py:625 vs the
-per-file loop :678-739).
+for the dedup stream (SCALE_SMOKE_R9.md §2), on the manifest, tail
+read and fold protocol of the shared state core
+(:mod:`streaming.state`). The reference anchor is the same: the
+manifest is read once per run, not once per file
+(Notion_openai_vector_etl.py:625 vs the per-file loop :678-739).
 
 Exactly-once: each batch's only artifact is its ``batch_id=N`` delta
 dir written with overwrite — a crash between the write and the epoch
@@ -51,7 +52,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from notion_vector_store_etl_pipeline_spark.operators.similarity import (
     compact_ivf_index,
-    load_ivf_index,
     load_ivf_sidecar,
     load_ivf_index_with_deltas,
     quantize_and_assign,
@@ -61,30 +61,22 @@ from notion_vector_store_etl_pipeline_spark.operators.statefs import (
     batch_dirs,
     state_fs,
 )
-from notion_vector_store_etl_pipeline_spark.sources.paginated import (
-    register_paginated_source,
-)
-from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
-    _write_manifest,
+from notion_vector_store_etl_pipeline_spark.sources.paginated import foreach_page_batch
+from notion_vector_store_etl_pipeline_spark.streaming.state import (
+    anchored_read,
+    fold_due,
+    open_fold,
+    publish_fold,
     read_compaction_manifest,
-    vacuum_index_versions,
+    upgrade_due,
+    watermark,
 )
 
 
-def _delta_dirs(
-    spark: SparkSession, out_dir: str, after_batch: int, before_batch: int
-) -> list[str]:
-    """Enumerate the ``delta/batch_id=N`` trees with ``after_batch < N <
-    before_batch`` via :func:`operators.statefs.batch_dirs` — with a
-    compaction watermark the dirs are constructed from the contiguous
-    epoch range and existence-checked (O(tail) point lookups, correct
-    on object-store roots); before any compaction, one root listing.
-    A recurring reader of a growing partitioned tree must select
-    partitions BEFORE any reader sees the root, or the listing becomes
-    the O(age) term."""
-    return batch_dirs(
-        state_fs(spark, out_dir), f"{out_dir}/delta", after_batch, before_batch
-    )
+def ivf_anchor(manifest: dict | None, base_index_path: str) -> str:
+    """The IVF index a batch assigns and probes against: the published
+    version, else the stored base."""
+    return manifest["index_path"] if manifest else base_index_path
 
 
 def load_stream_ann_state(
@@ -95,34 +87,79 @@ def load_stream_ann_state(
 ):
     """The probe entry point for a consumer of the ingested index:
     anchor on the compaction manifest (compacted version if any, else
-    the base) and union only the delta TAIL above its watermark.
-    ``before_batch`` is a strict upper bound — pass latest committed
-    batch + 1 so a crashed attempt's orphan delta is never served.
-    Returns ``(vectors, cent_ids, cent_mat)`` like
+    the base) and union only the ``delta/batch_id=N`` TAIL above its
+    watermark. ``before_batch`` is a strict upper bound — pass latest
+    committed batch + 1 so a crashed attempt's orphan delta is never
+    served. Returns ``(vectors, cent_ids, cent_mat)`` like
     :func:`operators.similarity.load_ivf_index`.
 
-    Concurrent-compaction safety (ADVICE r9): a compactor that
-    publishes a new manifest and then PRUNES the folded deltas between
-    this function's manifest read and its delta enumeration would
-    silently drop those batches' vectors from the returned union. The
-    manifest is therefore re-read AFTER enumerating; if the watermark
-    advanced, the anchor is stale and the read retries against the new
-    version. A prune that lands after return, while the caller's probe
-    is still running, fails LOUDLY (the scan's file list no longer
-    exists) — never silently — so ``prune_deltas=True`` with external
-    concurrent probes trades retries/errors, not correctness."""
-    for _ in range(5):
-        man = read_compaction_manifest(out_dir, spark)
-        base = man["index_path"] if man else base_index_path
-        after = man["through_batch"] if man else -1
-        deltas = _delta_dirs(spark, out_dir, after, before_batch)
-        man2 = read_compaction_manifest(out_dir, spark)
-        if (man2 or {}).get("through_batch", -1) == after:
-            return load_ivf_index_with_deltas(spark, base, deltas)
-    raise RuntimeError(
-        f"load_stream_ann_state: compaction watermark of {out_dir} kept "
-        "advancing across 5 read attempts — a compactor is racing this "
-        "consumer faster than it can anchor"
+    Concurrent-compaction safety (ADVICE r9): the anchor and the tail
+    come from :func:`streaming.state.anchored_read`, which re-reads the
+    manifest after enumerating and retries if a compactor published
+    (and possibly pruned the folded deltas) in between. A prune that
+    lands after return, while the caller's probe is still running,
+    fails LOUDLY — never silently — so ``prune_deltas=True`` with
+    external concurrent probes trades retries/errors, not
+    correctness."""
+    fs = state_fs(spark, out_dir)
+    man, deltas = anchored_read(
+        spark,
+        out_dir,
+        lambda after: batch_dirs(fs, f"{out_dir}/delta", after, before_batch),
+    )
+    return load_ivf_index_with_deltas(spark, ivf_anchor(man, base_index_path), deltas)
+
+
+def fold_ann_state(
+    spark: SparkSession,
+    out_dir: str,
+    through_batch: int,
+    base_index_path: str,
+    prune_deltas: bool = False,
+    retain_versions: int | None = None,
+    rebuild_centroids: bool = False,
+    rebuild_sample_mod: int | None = None,
+    events=None,
+) -> dict | None:
+    """The IVF fold body behind :func:`compact_ann_stream_state` and the
+    composed pipeline's ``compact_pipeline_ann_state``: the delta tail
+    ``(watermark, through_batch]`` (plus, with ``rebuild_centroids``, a
+    centroid refresh) becomes version ``k``, published through the
+    shared fold protocol (:mod:`streaming.state`).
+
+    ``events(manifest)``, when given, returns ``(drop_vec_ids,
+    revived)`` for the window: vec_ids to reclaim physically
+    (``None`` = no stale events) and the revive-event frame whose
+    non-emptiness asks for duplicate-row collapse. A window with
+    stale events folds even without deltas, and the published
+    manifest records ``stale_through``."""
+    man, k = open_fold(spark, out_dir, through_batch)
+    if k is None:
+        return man
+    deltas = batch_dirs(
+        state_fs(spark, out_dir), f"{out_dir}/delta", watermark(man), through_batch + 1
+    )
+    drop, revived = events(man) if events else (None, None)
+    if not deltas and not rebuild_centroids and drop is None:
+        return man
+    dedup_rows = revived is not None and not revived.isEmpty()
+    base = ivf_anchor(man, base_index_path)
+    out_path = f"{out_dir}/index_versions/v{k}"
+    kw = dict(drop_vec_ids=drop, dedup_rows=dedup_rows)
+    if rebuild_centroids:
+        rebuild_ivf_index(spark, base, deltas, out_path, sample_mod=rebuild_sample_mod, **kw)
+    else:
+        compact_ivf_index(spark, base, deltas, out_path, **kw)
+    manifest = {
+        "version": k,
+        "index_path": out_path,
+        "through_batch": through_batch,
+        "centroids": "refreshed" if rebuild_centroids else "carried",
+    }
+    if events:
+        manifest["stale_through"] = through_batch
+    return publish_fold(
+        spark, out_dir, manifest, deltas if prune_deltas else (), retain_versions
     )
 
 
@@ -137,18 +174,13 @@ def compact_ann_stream_state(
     rebuild_sample_mod: int | None = None,
 ) -> dict | None:
     """Fold committed delta trees through ``through_batch`` into the
-    next stored-index version and publish the manifest. Idempotent: a
-    ``through_batch`` at or below the manifest watermark returns the
-    manifest unchanged (replay-safe), and a crash between the version
-    write and the publish leaves only an orphan version dir the retried
-    compaction overwrites. ``prune_deltas`` deletes the folded delta
-    dirs (their content lives in the new version; replays only touch
-    batches above the watermark), keeping the delta tree's listing
-    bounded by compact_every instead of stream age.
+    next stored-index version (:func:`fold_ann_state`, under the fold
+    protocol of :mod:`streaming.state` — a covered window is a no-op).
+    ``prune_deltas`` deletes the folded delta dirs, keeping the delta
+    tree's listing bounded by compact_every instead of stream age.
     ``retain_versions=N`` vacuums index versions superseded by more
-    than N compactions after the publish (each version contains
-    everything its predecessors did — storage stays O(N x index)
-    instead of O(stream age)).
+    than N compactions (each version contains everything its
+    predecessors did — storage stays O(N x index), not O(stream age)).
 
     ``rebuild_centroids=True`` performs a centroid REFRESH instead of
     a plain fold: :func:`operators.similarity.rebuild_ivf_index`
@@ -158,38 +190,56 @@ def compact_ann_stream_state(
     under distribution shift (VERDICT r9 missing #2). A rebuilt
     version's sidecar DIFFERS from its predecessors', which is exactly
     the point; consumers always probe a version against its own
-    sidecar, so the swap is invisible to them. All small-state IO
-    routes through :mod:`operators.statefs` (object-store-safe)."""
-    fs = state_fs(spark, out_dir)
-    man = read_compaction_manifest(out_dir, spark)
-    prev = man["through_batch"] if man else -1
-    if through_batch <= prev:
-        return man
-    deltas = _delta_dirs(spark, out_dir, prev, through_batch + 1)
-    if not deltas and not rebuild_centroids:
-        return man
-    k = (man["version"] + 1) if man else 1
-    base = man["index_path"] if man else base_index_path
-    out_path = f"{out_dir}/index_versions/v{k}"
-    if rebuild_centroids:
-        rebuild_ivf_index(
-            spark, base, deltas, out_path, sample_mod=rebuild_sample_mod
+    sidecar, so the swap is invisible to them."""
+    return fold_ann_state(
+        spark, out_dir, through_batch, base_index_path,
+        prune_deltas, retain_versions, rebuild_centroids, rebuild_sample_mod,
+    )
+
+
+def write_ivf_delta(
+    spark: SparkSession,
+    assigned: DataFrame,
+    out_dir: str,
+    batch_id: int,
+    anchor: str,
+    base_index_path: str,
+) -> None:
+    """Write a micro-batch's assigned vectors as ``delta/batch_id=N``,
+    then re-validate the IVF anchor they were assigned against.
+
+    batch_id-keyed overwrite => replay-idempotent (exactly-once). Plain
+    SORTED files, not partitionBy(list_id) (VERDICT r13 #1): a
+    micro-batch delta under partitionBy writes one near-empty file PER
+    DISTINCT LIST (~1.7 s/batch of file-commit overhead measured at 100
+    rows, and the classic small-files explosion at 100 TB stream ages).
+    list_id stays a sorted data column — the probe's literal isin()
+    filter skips on row-group stats, and the broadcast-semi paths never
+    partition-pruned deltas anyway — and the fold restores the
+    list_id-partitioned layout for the standing index. The hash
+    repartition keeps upstream assignment parallel while AQE coalesces
+    a micro-batch's shuffle to ~1 write task.
+
+    Writer-side anchor re-validation (r10 review): an OUT-OF-BAND
+    centroid rebuild racing this batch could publish a refreshed-sidecar
+    version between the caller's anchor read and the delta landing —
+    the delta's list_ids would then sit ABOVE the new watermark but come
+    from the OLD centroids, and the next fold would make the
+    inconsistency permanent. Fail LOUDLY instead: the stream's restart
+    replays the batch from the checkpoint against the new anchor (the
+    overwrite is idempotent). In-process folds are sequential and never
+    race."""
+    assigned.repartition("list_id").sortWithinPartitions("list_id").write.mode(
+        "overwrite"
+    ).parquet(f"{out_dir}/delta/batch_id={batch_id}/vectors")
+    now = ivf_anchor(read_compaction_manifest(out_dir, spark), base_index_path)
+    if now != anchor:
+        raise RuntimeError(
+            f"ingest batch {batch_id} into {out_dir}: IVF anchor changed "
+            f"{anchor!r} -> {now!r} during the batch (concurrent external "
+            "rebuild) — restart the stream to replay this batch against the "
+            "current sidecar"
         )
-    else:
-        compact_ivf_index(spark, base, deltas, out_path)
-    manifest = {
-        "version": k,
-        "index_path": out_path,
-        "through_batch": through_batch,
-        "centroids": "refreshed" if rebuild_centroids else "carried",
-    }
-    _write_manifest(out_dir, manifest, spark)
-    if prune_deltas:
-        for d in deltas:
-            fs.delete_recursive(d)
-    if retain_versions is not None:
-        vacuum_index_versions(spark, out_dir, k, retain_versions)
-    return manifest
 
 
 def probe_vector_batch(
@@ -391,31 +441,22 @@ def streaming_vector_ingest(
     splits a chain under the default "sequential"."""
     from notion_vector_store_etl_pipeline_spark.functions import vectors as V
 
-    register_paginated_source(spark)
-
     def _process(batch: DataFrame, batch_id: int) -> None:
-        # compaction boundary BEFORE the empty-batch return (an empty
-        # K-th batch must still fold the tail; the fold is idempotent)
-        man = read_compaction_manifest(out_dir, spark)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            # fold through batch_id - 1: every earlier batch is
-            # committed (this stream is processing batch_id), so the
-            # watermark can never cover a crashed attempt's artifacts
-            man = compact_ann_stream_state(
+        # fold before the empty-batch return (streaming.state.fold_due)
+        if fold_due(batch_id, compact_every):
+            compact_ann_stream_state(
                 spark,
                 out_dir,
                 through_batch=batch_id - 1,
                 base_index_path=index_path,
                 prune_deltas=prune_deltas,
                 retain_versions=retain_versions,
-                rebuild_centroids=bool(
-                    rebuild_every and (batch_id // compact_every) % rebuild_every == 0
-                ),
+                rebuild_centroids=upgrade_due(batch_id, compact_every, rebuild_every),
                 rebuild_sample_mod=rebuild_sample_mod,
             )
         if batch.isEmpty():
             return
-        anchor = man["index_path"] if man else index_path
+        anchor = ivf_anchor(read_compaction_manifest(out_dir, spark), index_path)
         # The sidecar MUST be re-read from the current anchor every
         # batch: a rebuild_centroids compaction publishes a version
         # whose sidecar deliberately DIFFERS (refreshed centroids).
@@ -469,50 +510,8 @@ def streaming_vector_ingest(
         delta = quantize_and_assign(
             vecs, c_ids, c_mat, topn=1, id_col="vec_id", emb_col="emb"
         )
-        # batch_id-keyed overwrite => replay-idempotent (exactly-once).
-        # Plain SORTED files, not partitionBy(list_id) (VERDICT r13 #1):
-        # a micro-batch delta under partitionBy writes one near-empty
-        # file PER DISTINCT LIST (~1.7 s/batch of file-commit overhead
-        # measured at 100 rows, and the classic small-files explosion
-        # at 100 TB stream ages). list_id stays a sorted data column —
-        # the probe's literal isin() filter skips on row-group stats,
-        # and the broadcast-semi paths never partition-pruned deltas
-        # anyway — and the fold (compact_ann_stream_state) restores the
-        # list_id-partitioned layout for the standing index. The hash
-        # repartition keeps upstream assignment parallel while AQE
-        # coalesces a micro-batch's shuffle to ~1 write task.
-        delta.repartition("list_id").sortWithinPartitions("list_id").write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/delta/batch_id={batch_id}/vectors")
-        # Writer-side anchor re-validation (r10 review): an OUT-OF-BAND
-        # compact_ann_stream_state(rebuild_centroids=True) racing this
-        # batch could publish a refreshed-sidecar version between the
-        # manifest read above and the delta landing — the delta's
-        # list_ids would then sit ABOVE the new watermark but come
-        # from the OLD centroids, and the next fold would make the
-        # inconsistency permanent. Fail LOUDLY instead: the stream's
-        # restart replays this batch from the checkpoint against the
-        # new anchor (the overwrite is idempotent). In-process
-        # compactions (compact_every) are sequential and never race.
-        man2 = read_compaction_manifest(out_dir, spark)
-        anchor2 = man2["index_path"] if man2 else index_path
-        if anchor2 != anchor:
-            raise RuntimeError(
-                f"ann ingest batch {batch_id}: index anchor changed "
-                f"{anchor!r} -> {anchor2!r} during the batch (concurrent "
-                "external rebuild) — restart the stream to replay this "
-                "batch against the current sidecar"
-            )
+        write_ivf_delta(spark, delta, out_dir, batch_id, anchor, index_path)
 
-    stream = (
-        spark.readStream.format("paginated")
-        .option("path", source_path)
-        .option("page_size", str(page_size))
-        .option("pages_per_batch", str(pages_per_batch))
-        .load()
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return foreach_page_batch(
+        spark, source_path, page_size, pages_per_batch, checkpoint_dir, _process
     )

@@ -74,9 +74,7 @@ from notion_vector_store_etl_pipeline_spark.operators.cache import (
 )
 from notion_vector_store_etl_pipeline_spark.operators.statefs import (
     batch_dirs,
-    read_json,
     state_fs,
-    write_json_atomic,
 )
 from notion_vector_store_etl_pipeline_spark.operators.dedup import (
     CHAIN_POLICIES,
@@ -97,48 +95,18 @@ from notion_vector_store_etl_pipeline_spark.operators.dedup import (
     write_lsh_index,
     write_lsh_index_bucketed,
 )
-from notion_vector_store_etl_pipeline_spark.sources.paginated import (
-    register_paginated_source,
+from notion_vector_store_etl_pipeline_spark.sources.paginated import foreach_page_batch
+from notion_vector_store_etl_pipeline_spark.streaming.state import (
+    drop_versions,
+    fold_due,
+    open_fold,
+    publish_fold,
+    read_compaction_manifest,
+    read_prior_batches,
+    upgrade_due,
+    vacuum_index_versions,
+    watermark,
 )
-
-
-def _read_prior_batches(
-    spark: SparkSession,
-    path: str,
-    columns: list[str],
-    before_batch: int,
-    after_batch: int = -1,
-) -> DataFrame | None:
-    """Read a ``batch_id=N``-partitioned output dir, keeping only rows
-    from batches in ``(after_batch, before_batch)``. The strict upper
-    bound is what makes replays idempotent: a crash after this batch's
-    own artifacts were written but before the epoch commit replays the
-    batch, and without the bound the replay would find the crashed
-    attempt's own index delta / clean docs and probe the batch against
-    itself, flagging every doc as its own duplicate. The lower bound
-    excludes batches already folded into a compacted version (the
-    manifest's ``through_batch``) so the tail read stays O(batches
-    since last compaction), not O(stream age).
-
-    The matching dirs are enumerated HERE and passed to the reader
-    explicitly (with ``basePath`` so ``batch_id`` stays a column):
-    ``spark.read.parquet(root)`` would bound the data via partition
-    pruning but still FILE-LIST every ``batch_id=`` leaf ever written
-    — a per-batch cost that grows with stream age (measured: the
-    compacted 80-batch sf1 series drifted 3.2 -> 4.5 s/batch from
-    listing alone, after compaction had already bounded the data
-    read). Enumeration goes through :mod:`operators.statefs`: with a
-    compaction watermark the tail dirs are CONSTRUCTED from the
-    contiguous epoch range and existence-checked (O(tail) point
-    lookups — no listing at all, and correct on object-store roots
-    where ``os.listdir`` would silently see nothing, VERDICT r9 #1);
-    before any compaction, one root listing."""
-    dirs = batch_dirs(
-        state_fs(spark, path), path, after_batch, before_batch
-    )
-    if not dirs:
-        return None
-    return spark.read.option("basePath", path).parquet(*dirs).select(*columns)
 
 
 def _latest_per_doc(tail: DataFrame) -> DataFrame:
@@ -332,30 +300,6 @@ def probe_batch(
             df.unpersist()
 
 
-def _manifest_path(out_dir: str) -> str:
-    return f"{out_dir}/_compaction/manifest.json"
-
-
-def read_compaction_manifest(out_dir: str, spark: SparkSession | None = None) -> dict | None:
-    """The stream's compaction watermark: ``{"version": k, "index_path"
-    or "index_table": ..., "corpus_base": ..., "through_batch": N}``
-    meaning deltas/clean with ``batch_id <= N`` are folded into
-    compacted version k and must not be re-read from the per-batch
-    trees. Folded clean docs live under ``corpus_versions/v=<j>``
-    partition dirs; readers filter ``v <= k``, so an orphan version
-    from a crashed compaction is invisible until its manifest
-    publishes. IO routes through :mod:`operators.statefs` — a scheme'd
-    ``out_dir`` (``s3a://…``) needs ``spark`` and fails loudly without
-    it; plain local paths work as before."""
-    return read_json(state_fs(spark, out_dir), _manifest_path(out_dir))
-
-
-def _write_manifest(
-    out_dir: str, manifest: dict, spark: SparkSession | None = None
-) -> None:
-    write_json_atomic(state_fs(spark, out_dir), _manifest_path(out_dir), manifest)
-
-
 def latest_committed_batch(
     checkpoint_dir: str, spark: SparkSession | None = None
 ) -> int:
@@ -443,12 +387,10 @@ def compact_stream_state(
     auto_major_rows: int | None = None,
 ) -> dict | None:
     """Fold the stream's committed per-batch state through
-    ``through_batch`` into the next compacted version and publish the
-    manifest. Idempotent: if the manifest already covers
-    ``through_batch`` it is returned unchanged (so a crash-replay that
-    re-triggers compaction is a no-op), and a crash between the version
-    writes and the manifest publish leaves only an orphan version dir
-    that the retried compaction overwrites.
+    ``through_batch`` (committed batches only — :func:`latest_committed_batch`,
+    or ``batch_id - 1`` inside ``foreachBatch``) into the next compacted
+    version, under the fold protocol of :mod:`streaming.state` (a
+    covered window is a no-op; version write, publish, prune, vacuum).
 
     - index: ``compact_lsh_index`` over the current anchor (manifest
       version if any, else the base index) + the delta tail
@@ -477,11 +419,8 @@ def compact_stream_state(
       age. (``clean/`` is never pruned — it is the stream's OUTPUT,
       owned by downstream consumers.)
     - ``retain_versions=N`` (N >= 1) vacuums superseded INDEX versions
-      after the publish: versions ``<= k - N`` — their dirs and, when
-      bucketed, their ``{bucketed_table}_v{j}`` catalog entries — are
-      deleted. Only versions strictly below the just-published
-      manifest are ever touched, so a crash mid-vacuum loses nothing a
-      reader can reach. Corpus versions are never vacuumed by MINOR
+      after the publish (:func:`streaming.state.vacuum_index_versions`).
+      Corpus versions are never vacuumed by MINOR
       folds: each ``corpus_versions/v=<j>`` partition holds DISTINCT
       folded docs (additive state, live except superseded rows), unlike
       index versions where each supersedes all before it — only a
@@ -515,22 +454,13 @@ def compact_stream_state(
       the major cadence; minor folds stay O(window). This bounds BOTH
       the superseded-set growth (reset at every major fold) and the
       retired-text storage that additive versions can never reclaim.
-
-    ``through_batch`` must only cover committed batches — pass
-    :func:`latest_committed_batch` (or ``current_batch - 1`` from
-    inside ``foreachBatch``, where every earlier batch is committed).
-
-    All small-state IO (manifest, dir enumeration, prune, vacuum)
-    routes through :mod:`operators.statefs`, so a scheme'd ``out_dir``
-    works — or fails loudly — instead of silently seeing no state.
     """
-    fs = state_fs(spark, out_dir)
-    man = read_compaction_manifest(out_dir, spark)
-    prev_through = man["through_batch"] if man else -1
-    if through_batch <= prev_through:
+    man, k = open_fold(spark, out_dir, through_batch)
+    if k is None:
         return man
+    prev_through = watermark(man)
     delta_dirs = batch_dirs(
-        fs, f"{out_dir}/index_delta", prev_through, through_batch + 1
+        state_fs(spark, out_dir), f"{out_dir}/index_delta", prev_through, through_batch + 1
     )
     if not delta_dirs and not major:
         # nothing committed in the window (empty batches write no
@@ -550,11 +480,7 @@ def compact_stream_state(
         # manifest publish; a crash before that replays idempotent
         # deletes, never skips one.
         vacuum_index_versions(
-            spark,
-            out_dir,
-            man["version"],
-            man["version"] - pending + 1,
-            bucketed_table=bucketed_table,
+            spark, out_dir, man["version"], man["version"] - pending + 1, bucketed_table
         )
         vacuum_retired_corpus(spark, out_dir, pending)
     if (
@@ -598,13 +524,19 @@ def compact_stream_state(
             "params yields an index no probe signature can hit; pass the "
             "stream's own params"
         )
-    k = (man["version"] + 1) if man else 1
+    anchor = anchor_manifest(man, base_index_path, base_index_table, base_corpus_path)
     idx_out = f"{out_dir}/index_versions/v{k}"
+    corpus_out = f"{out_dir}/corpus_versions/v={k}"
     tbl = f"{bucketed_table}_v{k}" if bucketed_table else None
-    cur_table = man.get("index_table") if man else base_index_table
-    cur_path = man.get("index_path") if man else base_index_path
+    window = read_prior_batches(
+        spark,
+        f"{out_dir}/clean",
+        ["doc_id", "text", "batch_id"],
+        before_batch=through_batch + 1,
+        after_batch=prev_through,
+    )
+    n_sup = 0
     if major:
-        prev_man = man or {"version": 0, "corpus_base": base_corpus_path}
         # self-healing resolve (ADVICE r11): corpus versions written
         # before the superseded sidecar existed can hold cross-version
         # duplicate texts with NO sidecar entry — the anchor read alone
@@ -614,16 +546,9 @@ def compact_stream_state(
         # rank (base = 0, version = its v) directly; for post-sidecar
         # state this is a no-op on top of the sidecar filter.
         cur = (
-            _load_anchor_corpus(spark, prev_man, out_dir, with_rank=True)
+            _load_anchor_corpus(spark, anchor, out_dir, with_rank=True)
             .groupBy("doc_id")
             .agg(F.max(F.struct(F.col("_rank"), F.col("text")))["text"].alias("text"))
-        )
-        window = _read_prior_batches(
-            spark,
-            f"{out_dir}/clean",
-            ["doc_id", "text", "batch_id"],
-            before_batch=through_batch + 1,
-            after_batch=prev_through,
         )
         if window is not None:
             cur = _merge_latest_tail(cur, window)
@@ -632,9 +557,7 @@ def compact_stream_state(
         # resolve-union per consumer)
         cur = cur.persist()
         try:
-            cur.write.mode("overwrite").parquet(
-                f"{out_dir}/corpus_versions/v={k}"
-            )
+            cur.write.mode("overwrite").parquet(corpus_out)
             idx = build_lsh_index(
                 cur,
                 num_hashes=num_hashes,
@@ -649,172 +572,100 @@ def compact_stream_state(
                 write_lsh_index(idx, idx_out)
         finally:
             cur.unpersist()
-        manifest = {
-            "version": k,
-            "index_path": None if tbl else idx_out,
-            "index_table": tbl,
-            "corpus_base": man["corpus_base"] if man else base_corpus_path,
-            "through_batch": through_batch,
-            "corpus_floor": k,
-            "signature": signature,
-            # physical below-floor deletes are DEFERRED one fold cycle
-            # (ADVICE r11): the floor is published now — readers anchor
-            # on v=k — but an out-of-process reader mid-query on the
-            # previous anchor keeps a read margin until the next fold
-            # call processes this flag (top of this function). Below-
-            # floor index versions still vacuum unconditionally THEN
-            # (epoch boundary, not a rollback-margin point — r11b
-            # review #3); during the grace cycle their corpus is intact
-            # so rolling back to them stays sound.
-            "pending_vacuum_floor": k,
-        }
-        _write_manifest(out_dir, manifest, spark)
-        if prune_deltas:
-            for d in delta_dirs:
-                fs.delete_recursive(d)
-        return manifest
-    compact_lsh_index(
-        spark,
-        base_path=None if cur_table else cur_path,
-        delta_dir=f"{out_dir}/index_delta",
-        out_path=idx_out,
-        dense_bucket_cap=dense_bucket_cap,
-        keep=keep,
-        after_batch=prev_through,
-        through_batch=through_batch,
-        bucketed_table=tbl,
-        n_buckets=n_buckets,
-        base_table=cur_table,
-        delta_dirs=delta_dirs,
-    )
-    n_sup = 0
-    folded = _read_prior_batches(
-        spark,
-        f"{out_dir}/clean",
-        ["doc_id", "text", "batch_id"],
-        before_batch=through_batch + 1,
-        after_batch=prev_through,
-    )
-    if folded is not None:
-        # collapse to the LATEST text per doc within the window: the
-        # composed pipeline's clean tree holds one row per (re)process,
-        # so an updated doc would otherwise land in corpus_versions
-        # with BOTH texts and every later probe's verify universe would
-        # carry the sid twice — fanning candidate pairs across old/new
-        # text and flagging new docs against RETIRED content (r11
-        # review). For the wing's own feed (re-sends, same text) the
-        # collapse is a plain dedup.
-        _latest_per_doc(folded).write.mode("overwrite").parquet(
-            f"{out_dir}/corpus_versions/v={k}"
+    else:
+        compact_lsh_index(
+            spark,
+            base_path=None if anchor["index_table"] else anchor["index_path"],
+            delta_dir=f"{out_dir}/index_delta",
+            out_path=idx_out,
+            dense_bucket_cap=dense_bucket_cap,
+            keep=keep,
+            after_batch=prev_through,
+            through_batch=through_batch,
+            bucketed_table=tbl,
+            n_buckets=n_buckets,
+            base_table=anchor["index_table"],
+            delta_dirs=delta_dirs,
         )
-        # superseded sidecar (r11b — closes the cross-WINDOW residual):
-        # a doc folded into v=k that already exists at a lower
-        # precedence (the base corpus or an earlier version) keeps its
-        # RETIRED text in that immutable earlier copy; record its id so
-        # `_load_anchor_corpus` resolves latest-wins at read time and
-        # the verify universe never carries two texts for one sid
-        # (before this, a new doc near-dup of the retired text could be
-        # flagged against content the corpus no longer serves). Cost:
-        # one doc_id-pruned corpus scan per FOLD (broadcast semi
-        # against the window's ids — window is K batches, bounded);
-        # the read side broadcasts the cumulative superseded id set,
-        # which grows with distinct UPDATED docs, not stream age — a
-        # full rewrite fold collapsing all versions is the escape hatch
-        # if churn ever makes it large, named future work. The retired
-        # text's LSH buckets stay in the index versions: candidates
-        # they generate now verify against the doc's CURRENT text only,
-        # so they cost verify work, never a wrong flag.
-        prev_man = man or {"version": 0, "corpus_base": base_corpus_path}
-        window_ids = F.broadcast(
-            spark.read.parquet(f"{out_dir}/corpus_versions/v={k}").select("doc_id")
-        )
-        sup = (
-            _load_anchor_corpus(spark, prev_man, out_dir)
-            .select("doc_id")
-            .join(window_ids, "doc_id", "left_semi")
-            .dropDuplicates()
-            .persist()
-        )
-        try:
-            n_sup = sup.count()
-            if n_sup > 0:
-                sup.write.mode("overwrite").parquet(
-                    f"{out_dir}/superseded_versions/v={k}"
-                )
-        finally:
-            sup.unpersist()
+        if window is not None:
+            # collapse to the LATEST text per doc within the window: the
+            # composed pipeline's clean tree holds one row per (re)process,
+            # so an updated doc would otherwise land in corpus_versions
+            # with BOTH texts and every later probe's verify universe would
+            # carry the sid twice — fanning candidate pairs across old/new
+            # text and flagging new docs against RETIRED content (r11
+            # review). For the wing's own feed (re-sends, same text) the
+            # collapse is a plain dedup.
+            _latest_per_doc(window).write.mode("overwrite").parquet(corpus_out)
+            # superseded sidecar (r11b — closes the cross-WINDOW residual):
+            # a doc folded into v=k that already exists at a lower
+            # precedence (the base corpus or an earlier version) keeps its
+            # RETIRED text in that immutable earlier copy; record its id so
+            # `_load_anchor_corpus` resolves latest-wins at read time and
+            # the verify universe never carries two texts for one sid
+            # (before this, a new doc near-dup of the retired text could be
+            # flagged against content the corpus no longer serves). Cost:
+            # one doc_id-pruned corpus scan per FOLD (broadcast semi
+            # against the window's ids — window is K batches, bounded);
+            # the read side broadcasts the cumulative superseded id set,
+            # which grows with distinct UPDATED docs, not stream age — a
+            # MAJOR fold collapsing all versions resets it. The retired
+            # text's LSH buckets stay in the index versions: candidates
+            # they generate now verify against the doc's CURRENT text only,
+            # so they cost verify work, never a wrong flag.
+            window_ids = F.broadcast(spark.read.parquet(corpus_out).select("doc_id"))
+            sup = (
+                _load_anchor_corpus(spark, anchor, out_dir)
+                .select("doc_id")
+                .join(window_ids, "doc_id", "left_semi")
+                .dropDuplicates()
+                .persist()
+            )
+            try:
+                n_sup = sup.count()
+                if n_sup > 0:
+                    sup.write.mode("overwrite").parquet(
+                        f"{out_dir}/superseded_versions/v={k}"
+                    )
+            finally:
+                sup.unpersist()
     manifest = {
         "version": k,
         "index_path": None if tbl else idx_out,
         "index_table": tbl,
-        "corpus_base": man["corpus_base"] if man else base_corpus_path,
+        "corpus_base": anchor["corpus_base"],
         "through_batch": through_batch,
-        # a prior MAJOR fold's floor survives minor folds unchanged
-        "corpus_floor": (man or {}).get("corpus_floor", 0),
+        # a MAJOR fold sets the floor; minor folds carry it unchanged
+        "corpus_floor": k if major else (man or {}).get("corpus_floor", 0),
         # recorded for major-fold validation; an existing record wins
         # (minor folds never recompute signatures, so their own args
         # must not overwrite the stream's)
         "signature": signature,
-        # cumulative sidecar rows since the last MAJOR fold — the
-        # size trigger auto_major_rows reads (majors reset it by
-        # publishing a manifest without the key)
-        "superseded_rows": (man or {}).get("superseded_rows", 0) + n_sup,
     }
-    _write_manifest(out_dir, manifest, spark)
-    if prune_deltas:
-        for d in delta_dirs:
-            fs.delete_recursive(d)
-    if retain_versions is not None:
-        vacuum_index_versions(
-            spark, out_dir, k, retain_versions, bucketed_table=bucketed_table
-        )
-    return manifest
-
-
-def vacuum_index_versions(
-    spark: SparkSession,
-    out_dir: str,
-    current_version: int,
-    retain_versions: int,
-    bucketed_table: str | None = None,
-) -> list[int]:
-    """Delete superseded index versions ``j <= current_version -
-    retain_versions`` under ``{out_dir}/index_versions`` (each index
-    version contains everything its predecessors did — only the
-    manifest-published latest is ever probed; retention > 1 keeps a
-    rollback margin). For bucketed compactions the versioned catalog
-    entry ``{bucketed_table}_v{j}`` is dropped too (its storage IS the
-    version dir, written via ``path=``, so the dir delete reclaims
-    it). Crash-safe by construction: only versions strictly below the
-    already-published manifest are touched, and re-running is an
-    idempotent no-op. Returns the vacuumed version numbers.
-
-    A ``_compaction/vacuum.json`` watermark records the highest
-    version already vacuumed, so each call probes only the versions
-    ADDED since the last vacuum — without it every compaction would
-    re-issue exists()/DROP TABLE for every version ever retired, an
-    O(stream-age) per-compaction cost (~3k object-store probes a month
-    into a compact_every=10, 1k-batches/day stream). The watermark is
-    written AFTER the deletions: a crash between them replays a few
-    idempotent deletes on the next call, never skips one."""
-    if retain_versions < 1:
-        raise ValueError("retain_versions must be >= 1 (the live version)")
-    fs = state_fs(spark, out_dir)
-    wm_path = f"{out_dir}/_compaction/vacuum.json"
-    start = ((read_json(fs, wm_path) or {}).get("vacuumed_through", 0)) + 1
-    cut = current_version - retain_versions
-    gone = []
-    for j in range(start, cut + 1):
-        vdir = f"{out_dir}/index_versions/v{j}"
-        found = fs.exists(vdir)
-        if bucketed_table is not None:
-            spark.sql(f"DROP TABLE IF EXISTS {bucketed_table}_v{j}")
-        if found:
-            fs.delete_recursive(vdir)
-            gone.append(j)
-    if cut >= start:
-        write_json_atomic(fs, wm_path, {"vacuumed_through": cut})
-    return gone
+    if major:
+        # physical below-floor deletes are DEFERRED one fold cycle
+        # (ADVICE r11): the floor is published now — readers anchor on
+        # v=k — but an out-of-process reader mid-query on the previous
+        # anchor keeps a read margin until the next fold call processes
+        # this flag (top of this function). Below-floor index versions
+        # still vacuum unconditionally THEN (epoch boundary, not a
+        # rollback-margin point — r11b review #3), so retention is not
+        # applied here; during the grace cycle their corpus is intact
+        # so rolling back to them stays sound.
+        manifest["pending_vacuum_floor"] = k
+    else:
+        # cumulative sidecar rows since the last MAJOR fold — the size
+        # trigger auto_major_rows reads (majors reset it by publishing
+        # a manifest without the key)
+        manifest["superseded_rows"] = (man or {}).get("superseded_rows", 0) + n_sup
+    return publish_fold(
+        spark,
+        out_dir,
+        manifest,
+        delta_dirs if prune_deltas else (),
+        retain_versions=None if major else retain_versions,
+        bucketed_table=bucketed_table,
+    )
 
 
 def vacuum_retired_corpus(
@@ -826,37 +677,15 @@ def vacuum_retired_corpus(
     were dead already) and ``superseded_versions/v=<j>`` with ``j <=
     floor`` (the floor resets the sidecar — readers filter ``v >
     floor``). The caller-owned base corpus is never touched. Called by
-    :func:`compact_stream_state` right after a major publish;
+    :func:`compact_stream_state` at the fold after a major publish;
     idempotent (re-runs find nothing), crash-safe (only dirs already
     unreachable through the published manifest are deleted). The root
     listing is O(surviving versions) — bounded by the major cadence,
     not stream age. Returns the deleted dirs."""
     fs = state_fs(spark, out_dir)
-    gone = []
-    for root, cut in (
-        (f"{out_dir}/corpus_versions", floor),
-        (f"{out_dir}/superseded_versions", floor + 1),
-    ):
-        if not fs.is_dir(root):
-            continue
-        kept = 0
-        for name in fs.list_names(root):
-            if not name.startswith("v="):
-                continue
-            try:
-                j = int(name[2:])
-            except ValueError:
-                continue
-            if j < cut:
-                fs.delete_recursive(f"{root}/{name}")
-                gone.append(f"{root}/{name}")
-            else:
-                kept += 1
-        if kept == 0 and root.endswith("superseded_versions"):
-            # empty sidecar root removed so readers keep the fast
-            # is_dir miss (the corpus root always keeps v=floor)
-            fs.delete_recursive(root)
-    return gone
+    return drop_versions(fs, f"{out_dir}/corpus_versions", floor) + drop_versions(
+        fs, f"{out_dir}/superseded_versions", floor + 1
+    )
 
 
 def _load_anchor_index(spark: SparkSession, manifest: dict) -> DataFrame:
@@ -865,16 +694,12 @@ def _load_anchor_index(spark: SparkSession, manifest: dict) -> DataFrame:
     # with, so the (path-or-table, version) key bumps on every fold and
     # the eager parquet listing stops re-running per micro-batch
     # (VERDICT r13 #1)
-    key = (
-        "anchor_index",
-        manifest.get("index_table") or manifest["index_path"],
-        manifest["version"],
+    table, path = manifest.get("index_table"), manifest.get("index_path")
+    return memo_df(
+        spark,
+        ("anchor_index", table or path, manifest["version"]),
+        lambda: load_lsh_index_bucketed(spark, table) if table else load_lsh_index(spark, path),
     )
-    if manifest.get("index_table"):
-        return memo_df(
-            spark, key, lambda: load_lsh_index_bucketed(spark, manifest["index_table"])
-        )
-    return memo_df(spark, key, lambda: load_lsh_index(spark, manifest["index_path"]))
 
 
 def _load_anchor_corpus(
@@ -967,6 +792,57 @@ def _load_anchor_corpus_uncached(
     )
 
 
+def anchor_manifest(
+    manifest: dict | None,
+    index_path: str | None,
+    index_table: str | None,
+    corpus_path: str,
+) -> dict:
+    """The dedup anchor: the published ``manifest``, or — before the
+    first fold — version 0 over the caller's stored index (``index_table``
+    wins over ``index_path``) and base corpus."""
+    return manifest or {
+        "version": 0,
+        "index_path": None if index_table else index_path,
+        "index_table": index_table,
+        "corpus_base": corpus_path,
+        "through_batch": -1,
+    }
+
+
+def dedup_anchor_view(
+    spark: SparkSession,
+    out_dir: str,
+    anchor: dict,
+    before_batch: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """What a micro-batch probes: ``(lsh_index, corpus_docs)`` = the
+    anchored index version ∪ the ``index_delta`` tail, and the anchored
+    corpus with the ``clean`` tail merged latest-wins — both tails
+    bounded to ``(anchor["through_batch"], before_batch)``;
+    ``before_batch=None`` reads the anchor alone (a stream that does
+    not grow its index). Latest-wins keeps ONE (current) text per
+    updated doc in the verify universe, so a near-dup of a RETIRED text
+    never flags; across fold windows the superseded sidecar read by
+    :func:`_load_anchor_corpus` does the same."""
+    index = _load_anchor_index(spark, anchor)
+    docs = _load_anchor_corpus(spark, anchor, out_dir)
+    if before_batch is None:
+        return index, docs
+    after = anchor["through_batch"]
+    deltas = read_prior_batches(
+        spark, f"{out_dir}/index_delta", ["sid", "band", "bucket"], before_batch, after
+    )
+    if deltas is not None:
+        index = index.unionByName(deltas)
+    prior_clean = read_prior_batches(
+        spark, f"{out_dir}/clean", ["doc_id", "text", "batch_id"], before_batch, after
+    )
+    if prior_clean is not None:
+        docs = _merge_latest_tail(docs, prior_clean)
+    return index, docs
+
+
 def streaming_dedup_ingest(
     spark: SparkSession,
     source_path: str,
@@ -1024,32 +900,10 @@ def streaming_dedup_ingest(
     each micro-batch; ``chain_policy`` picks the intra-batch chain
     disposition (module docstring — "sequential" keeps the stream's
     output invariant to pagination)."""
-    register_paginated_source(spark)
-
-    base_manifest = {
-        "version": 0,
-        "index_path": None if index_table else index_path,
-        "index_table": index_table,
-        "corpus_base": corpus_path,
-        "through_batch": -1,
-    }
-
     def _process(batch: DataFrame, batch_id: int) -> None:
-        # compaction boundary BEFORE the empty-batch return: an empty
-        # K-th batch must still fold the tail, or the cycle is deferred
-        # to 2K (and can starve on an unlucky cadence of idle pages) —
-        # compact_stream_state is idempotent, so replays are safe
-        man = read_compaction_manifest(out_dir, spark) if update_index else None
-        if (
-            update_index
-            and compact_every
-            and batch_id > 0
-            and batch_id % compact_every == 0
-        ):
-            # fold through batch_id - 1: every earlier batch is
-            # committed (this stream is processing batch_id), so a
-            # crash-replay of THIS batch can never meet its own
-            # artifacts below the watermark. Idempotent on replay.
+        # fold before the empty-batch return (streaming.state.fold_due)
+        man = None
+        if update_index and fold_due(batch_id, compact_every):
             man = compact_stream_state(
                 spark,
                 out_dir,
@@ -1060,47 +914,22 @@ def streaming_dedup_ingest(
                 bucketed_table=compact_bucketed_table,
                 prune_deltas=compact_prune_deltas,
                 retain_versions=compact_retain_versions,
-                major=bool(
-                    compact_major_every
-                    and (batch_id // compact_every) % compact_major_every == 0
-                ),
+                major=upgrade_due(batch_id, compact_every, compact_major_every),
                 auto_major_rows=compact_major_rows,
                 num_hashes=num_hashes,
                 bands=bands,
                 checkable=checkable,
             )
+        elif update_index:
+            man = read_compaction_manifest(out_dir, spark)
         if batch.isEmpty():
             return
-        anchor = man or base_manifest
-        index = _load_anchor_index(spark, anchor)
-        docs = _load_anchor_corpus(spark, anchor, out_dir)
-        after = anchor["through_batch"]
-        if update_index:
-            deltas = _read_prior_batches(
-                spark,
-                f"{out_dir}/index_delta",
-                ["sid", "band", "bucket"],
-                batch_id,
-                after,
-            )
-            if deltas is not None:
-                index = index.unionByName(deltas)
-            prior_clean = _read_prior_batches(
-                spark,
-                f"{out_dir}/clean",
-                ["doc_id", "text", "batch_id"],
-                batch_id,
-                after,
-            )
-            if prior_clean is not None:
-                # per-doc LATEST text in the tail, current text winning
-                # over base/folded copies (the flagship's shape): a doc
-                # re-sent with CHANGED text (same-id exclusion passes
-                # it through as clean) would otherwise sit in the
-                # verify universe with both texts, and a new near-dup
-                # of the RETIRED text could flag against content the
-                # corpus no longer serves.
-                docs = _merge_latest_tail(docs, prior_clean)
+        index, docs = dedup_anchor_view(
+            spark,
+            out_dir,
+            anchor_manifest(man, index_path, index_table, corpus_path),
+            batch_id if update_index else None,
+        )
         probed = probe_batch(
             batch,
             docs,
@@ -1136,15 +965,6 @@ def streaming_dedup_ingest(
             )
         release_cache()
 
-    docs_stream = (
-        spark.readStream.format("paginated")
-        .option("path", source_path)
-        .option("page_size", str(page_size))
-        .option("pages_per_batch", str(pages_per_batch))
-        .load()
-    )
-    return (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return foreach_page_batch(
+        spark, source_path, page_size, pages_per_batch, checkpoint_dir, _process
     )

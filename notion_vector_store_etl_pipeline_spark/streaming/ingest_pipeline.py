@@ -46,11 +46,14 @@ an LSH index DELTA and later batches probe corpus ∪ committed stream
 deltas — the reference's ``run_etl`` is ONE lifecycle over one
 manifest (:617-778), so a near-dup pair split across two stream
 batches must flag, not sail through. The delta/compaction machinery is
-``streaming_dedup_ingest``'s, reused verbatim (``compact_stream_state``
-on this pipeline's own ``index_delta``/``clean`` trees behind the same
-atomic manifest). ``update_index=False`` restores the cross-corpus-only
-scope. The batch twin :func:`batch_ingest_etl` composes the same
-semantics one-pass via ``intra_batch=True``. Multi-doc chains resolve
+``streaming_dedup_ingest``'s (``compact_stream_state`` and
+``dedup_anchor_view`` on this pipeline's own ``index_delta``/``clean``
+trees); all three state roots — the dedup trees, ``state/`` and
+``ann/`` — share the manifest, tail read and fold protocol of
+:mod:`streaming.state` (object-store-safe IO via
+:mod:`operators.statefs`). ``update_index=False`` restores the
+cross-corpus-only scope. The batch twin :func:`batch_ingest_etl`
+composes the same semantics one-pass via ``intra_batch=True``. Multi-doc chains resolve
 per the shared ``chain_policy`` knob (VERDICT r11 #2,
 :data:`operators.dedup.CHAIN_POLICIES`): the default "sequential"
 makes the stream and the one-pass twin agree EXACTLY — a chain a~b~c
@@ -74,7 +77,6 @@ retires the consumed events behind the manifest's ``stale_through``
 watermark, so the serve-time subtraction list is bounded by the fold
 cadence, not the corpus's lifetime update count.
 
-State IO routes through :mod:`operators.statefs` (object-store-safe).
 Stream == batch-twin parity is pinned in tests/test_ingest_pipeline.py;
 the revert/reclaim lifecycle in tests/test_ingest_pipeline_r11.py.
 """
@@ -88,37 +90,44 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from notion_vector_store_etl_pipeline_spark.functions import vectors as V
-from notion_vector_store_etl_pipeline_spark.operators.dedup import (
-    load_lsh_index,
-    load_lsh_index_bucketed,
-)
+from notion_vector_store_etl_pipeline_spark.operators.cache import memo_df
+from notion_vector_store_etl_pipeline_spark.operators.dedup import load_lsh_index
 from notion_vector_store_etl_pipeline_spark.operators.similarity import (
-    compact_ivf_index,
-    load_ivf_index,
     load_ivf_sidecar,
     quantize_and_assign,
-    rebuild_ivf_index,
 )
-from notion_vector_store_etl_pipeline_spark.operators.cache import memo_df
 from notion_vector_store_etl_pipeline_spark.operators.statefs import (
+    batch_dirs,
     read_json,
     state_fs,
     write_json_atomic,
 )
-from notion_vector_store_etl_pipeline_spark.sources.paginated import (
-    register_paginated_source,
+from notion_vector_store_etl_pipeline_spark.sources.paginated import foreach_page_batch
+from notion_vector_store_etl_pipeline_spark.streaming.ann_stream import (
+    fold_ann_state,
+    ivf_anchor,
+    load_stream_ann_state,
+    write_ivf_delta,
 )
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
-    _load_anchor_corpus,
-    _load_anchor_index,
-    _merge_latest_tail,
-    _read_prior_batches,
-    _write_manifest,
+    anchor_manifest,
     compact_stream_state,
+    dedup_anchor_view,
     probe_batch,
-    read_compaction_manifest,
 )
 from notion_vector_store_etl_pipeline_spark.streaming.pipeline import chunk_stage
+from notion_vector_store_etl_pipeline_spark.streaming.state import (
+    anchored_read,
+    drop_versions,
+    fold_due,
+    open_fold,
+    publish_fold,
+    read_compaction_manifest,
+    read_prior_batches,
+    state_file,
+    upgrade_due,
+    watermark,
+)
 
 EMBED_DIM = 8
 
@@ -257,8 +266,25 @@ def ingest_stage(
     return out
 
 
-def _state_manifest_path(out_dir: str) -> str:
-    return f"{out_dir}/state/_compaction/manifest.json"
+#: the per-batch trees of the skip/event state (all folded behind the
+#: ``{out}/state`` manifest) and their columns; ``batch_id`` (the
+#: partition column of the per-batch dirs) is KEPT as a data column in
+#: every folded version: the skip stage orders state rows by it
+#: (latest-per-doc), and stale/revive are ordered EVENTS whose batch
+#: rank decides liveness (module docstring)
+STATE_TREES = {
+    "state": ["doc_id", "content_hash", "vec_ids", "batch_id"],
+    "stale": ["vec_id", "batch_id"],
+    "revive": ["vec_id", "batch_id"],
+}
+
+
+def _stale_through(spark: SparkSession, out_dir: str) -> int:
+    """The ann fold's event watermark: stale/revive events at or below
+    it are consumed (their effect is physical in the ann index)."""
+    return (read_compaction_manifest(f"{out_dir}/ann", spark) or {}).get(
+        "stale_through", -1
+    )
 
 
 def vacuum_consumed_events(spark: SparkSession, out_dir: str) -> dict:
@@ -287,12 +313,11 @@ def vacuum_consumed_events(spark: SparkSession, out_dir: str) -> dict:
     rows from the versions it writes, so fold + prune + this vacuum
     together leave no physical copy of a consumed event."""
     fs = state_fs(spark, out_dir)
-    man = read_json(fs, _state_manifest_path(out_dir))
+    man = read_compaction_manifest(f"{out_dir}/state", spark)
     if not man:
         return {}
-    ann_man = read_compaction_manifest(f"{out_dir}/ann", spark)
-    consumed = (ann_man or {}).get("stale_through", -1)
-    wm_path = f"{out_dir}/state/_compaction/events_vacuum.json"
+    consumed = _stale_through(spark, out_dir)
+    wm_path = state_file(f"{out_dir}/state", "events_vacuum.json")
     wm = read_json(fs, wm_path) or {}
     if consumed < 0:
         # no ann fold has ever consumed anything — nothing can be
@@ -330,10 +355,7 @@ def vacuum_consumed_events(spark: SparkSession, out_dir: str) -> dict:
             changed = True
             if wm.get(f"{tree}_head") and wm[f"{tree}_head"][0] <= through:
                 del wm[f"{tree}_head"]
-        if fs.is_dir(root) and not any(
-            n.startswith("v=") for n in fs.list_names(root)
-        ):
-            fs.delete_recursive(root)
+        drop_versions(fs, root, below=0)  # removes the root once emptied
     if changed:
         write_json_atomic(fs, wm_path, wm)
     return wm
@@ -348,13 +370,14 @@ def compact_ingest_state(
 ) -> dict:
     """Fold the ``state``/``stale``/``revive`` batch tails (N <=
     ``through_batch``) into the next ``{tree}_versions/v=<k>``
-    partitions and publish the watermark — the skip manifest's version
-    of the compaction both wings already have. ``batch_id`` survives
-    the fold as a data column (event ordering and latest-row skip
-    both need it). Without it the skip stage re-reads EVERY state
-    batch ever written per micro-batch: O(stream age) listing + read,
-    the exact unbounded term `_read_prior_batches` was built to kill
-    (a month of 1k batches/day = a 30k-dir enumeration per batch).
+    partitions and publish the watermark (the manifest of state root
+    ``{out_dir}/state``) — the skip manifest's version of the
+    compaction both wings already have. ``batch_id`` survives the fold
+    as a data column (event ordering and latest-row skip both need
+    it). Without it the skip stage re-reads EVERY state batch ever
+    written per micro-batch: O(stream age) listing + read, the exact
+    unbounded term the bounded tail read was built to kill (a month of
+    1k batches/day = a 30k-dir enumeration per batch).
 
     The fold is ADDITIVE (each version holds only its window's rows,
     deduplicated within the window): the skip stage reduces the union
@@ -362,131 +385,80 @@ def compact_ingest_state(
     by max-batch rank, so duplicate rows across versions are harmless
     and no cross-version merge is needed — the same
     constant-scan-branch design as the dedup wing's
-    ``corpus_versions``. Idempotent below the watermark; a crash
-    between the version write and the publish leaves an orphan
-    ``v=<k>`` dir the read path's ``v <= version`` filter hides and a
-    retried compaction overwrites. ``prune_state=True`` deletes the
-    folded batch dirs after the publish (their rows live in the
-    version). ``vacuum_events=True`` additionally (a) excludes
+    ``corpus_versions``. The fold protocol (replay no-op, orphan
+    versions hidden until publish) is :mod:`streaming.state`'s.
+    ``prune_state=True`` deletes the folded batch dirs after the
+    publish (their rows live in the version). ``vacuum_events=True`` additionally (a) excludes
     stale/revive rows already CONSUMED by the ann fold (at or below the
     ann manifest's ``stale_through`` — their effect is physical in the
     index version) from the event versions this fold writes, and (b)
-    runs :func:`vacuum_consumed_events` after the publish — with
+    runs :func:`vacuum_consumed_events` after every call, folding or
+    not (the ann watermark advances on its own cadence, and an idle
+    feed must not leave consumed versions lingering) — with
     ``prune_state`` too, no physical copy of a consumed event survives.
     A retried fold under an advanced ann watermark rewrites ``v=<k>``
     with fewer consumed rows, all of which every reader already
     filters below ``stale_through``."""
-    from notion_vector_store_etl_pipeline_spark.operators.statefs import batch_dirs
-
-    fs = state_fs(spark, out_dir)
-    man = read_json(fs, _state_manifest_path(out_dir)) or {
-        "version": 0,
-        "through_batch": -1,
-    }
-    prev = man["through_batch"]
-    if through_batch <= prev:
-        if vacuum_events:
-            # the ann watermark advances on its own cadence — consumed
-            # versions stay vacuumable even when this fold is a no-op
-            vacuum_consumed_events(spark, out_dir)
-        return man
-    consumed = -1
-    if vacuum_events:
-        ann_man = read_compaction_manifest(f"{out_dir}/ann", spark)
-        consumed = (ann_man or {}).get("stale_through", -1)
-    k = man["version"] + 1
-    folded_dirs = []
-    # batch_id (the partition column of the per-batch dirs) is KEPT as
-    # a data column in every folded version: the skip stage needs it to
-    # order state rows (latest-per-doc), and stale/revive are ordered
-    # EVENTS whose batch rank decides liveness (module docstring)
-    for tree, cols in (
-        ("state", ["doc_id", "content_hash", "vec_ids", "batch_id"]),
-        ("stale", ["vec_id", "batch_id"]),
-        ("revive", ["vec_id", "batch_id"]),
-    ):
-        root = f"{out_dir}/{tree}"
-        dirs = batch_dirs(fs, root, prev, through_batch + 1)
-        if not dirs:
-            continue
-        window = (
-            spark.read.option("basePath", root)
-            .parquet(*dirs)
-            .select(*cols)
-            .dropDuplicates()
-        )
-        if tree != "state" and consumed >= 0:
-            window = window.filter(F.col("batch_id") > consumed)
-            if window.isEmpty():
-                # every row in the window was already consumed by the
-                # ann fold: writing an empty v=k dir would cost a write
-                # job now and a parquet max-scan in every later
-                # vacuum_consumed_events walk (ADVICE r11). The tail
-                # dirs still fold away — their rows' effect is physical
-                # in the ann index, and the readers' stale_through
-                # filter hides them regardless.
-                folded_dirs.extend(dirs)
+    root = f"{out_dir}/state"
+    man, k = open_fold(spark, root, through_batch)
+    if k is not None:
+        fs = state_fs(spark, out_dir)
+        consumed = _stale_through(spark, out_dir) if vacuum_events else -1
+        folded_dirs = []
+        for tree, cols in STATE_TREES.items():
+            tree_root = f"{out_dir}/{tree}"
+            dirs = batch_dirs(fs, tree_root, watermark(man), through_batch + 1)
+            if not dirs:
                 continue
-        window.write.mode("overwrite").parquet(
-            f"{out_dir}/{tree}_versions/v={k}"
-        )
-        folded_dirs.extend(dirs)
-    if not folded_dirs:
-        if vacuum_events:
-            # an idle feed advances through_batch without folding
-            # anything — consumed versions must still vacuum here, or
-            # they linger exactly while nothing else is happening
-            # (r11b review #1)
-            vacuum_consumed_events(spark, out_dir)
-        return man
-    man = {"version": k, "through_batch": through_batch}
-    write_json_atomic(fs, _state_manifest_path(out_dir), man)
-    if prune_state:
-        for d in folded_dirs:
-            fs.delete_recursive(d)
+            folded_dirs.extend(dirs)
+            window = (
+                spark.read.option("basePath", tree_root)
+                .parquet(*dirs)
+                .select(*cols)
+                .dropDuplicates()
+            )
+            if tree != "state" and consumed >= 0:
+                window = window.filter(F.col("batch_id") > consumed)
+                if window.isEmpty():
+                    # every row in the window was already consumed by
+                    # the ann fold: writing an empty v=k dir would cost
+                    # a write job now and a parquet max-scan in every
+                    # later vacuum_consumed_events walk (ADVICE r11). The
+                    # tail dirs still fold away — their rows' effect is
+                    # physical in the ann index, and the readers'
+                    # stale_through filter hides them regardless.
+                    continue
+            window.write.mode("overwrite").parquet(f"{out_dir}/{tree}_versions/v={k}")
+        if folded_dirs:
+            man = publish_fold(
+                spark,
+                root,
+                {"version": k, "through_batch": through_batch},
+                folded_dirs if prune_state else (),
+            )
     if vacuum_events:
         vacuum_consumed_events(spark, out_dir)
-    return man
+    return man or {"version": 0, "through_batch": -1}
 
 
 def _read_tree(
-    spark: SparkSession,
-    out_dir: str,
-    tree: str,
-    cols: list[str],
-    before_batch: int,
+    spark: SparkSession, out_dir: str, tree: str, before_batch: int
 ) -> DataFrame | None:
     """Folded ``{tree}_versions`` (one root, ``v <= version`` partition
     filter — constant scan-branch count) ∪ the uncompacted
-    ``{tree}/batch_id=N`` tail (constructed from the watermark, O(tail)
-    point lookups).
-
-    The manifest is re-read AFTER the tail enumeration (the ADVICE r9
-    pattern from ``load_stream_ann_state``): a concurrent compaction
-    with ``prune_state`` could fold-and-delete the enumerated tail
-    between the two reads — anchoring on the stale watermark would
-    silently LOSE those batches' rows. If the watermark advanced, the
-    enumeration retries against the new anchor; the residual window
-    (prune after return, during the caller's read) fails LOUDLY with
-    missing files, never silently. In-process callers (the
-    ``foreachBatch`` loop) are sequential and take one pass."""
+    ``{tree}/batch_id=N`` tail, anchored on the ``state`` manifest
+    through :func:`streaming.state.anchored_read` (a concurrent
+    compaction with ``prune_state`` cannot make the tail silently lose
+    rows)."""
     fs = state_fs(spark, out_dir)
-    for _ in range(5):
-        man = read_json(fs, _state_manifest_path(out_dir))
-        after = man["through_batch"] if man else -1
-        tail = _read_prior_batches(
+    cols = STATE_TREES[tree]
+    man, tail = anchored_read(
+        spark,
+        f"{out_dir}/state",
+        lambda after: read_prior_batches(
             spark, f"{out_dir}/{tree}", cols, before_batch, after_batch=after
-        )
-        man2 = read_json(fs, _state_manifest_path(out_dir))
-        if (man2["through_batch"] if man2 else -1) == after:
-            break
-        man = man2
-    else:
-        raise RuntimeError(
-            f"{tree} watermark kept advancing across 5 enumeration "
-            "attempts — a compaction loop is racing this reader"
-        )
-    parts = []
+        ),
+    )
     if man and man["version"] > 0 and fs.is_dir(f"{out_dir}/{tree}_versions"):
         # memoized per manifest version (operators.cache.memo_df): the
         # folded tree is write-once below the watermark, and the eager
@@ -510,15 +482,9 @@ def _read_tree(
                 "not retain batch_id. Re-ingest into a fresh out_dir "
                 "(or migrate the folded versions) before resuming."
             )
-        parts.append(ver.filter(F.col("v") <= man["version"]).select(*cols))
-    if tail is not None:
-        parts.append(tail)
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        folded = ver.filter(F.col("v") <= man["version"]).select(*cols)
+        return folded if tail is None else folded.unionByName(tail)
+    return tail
 
 
 def read_ingest_state(
@@ -531,13 +497,7 @@ def read_ingest_state(
     computation when the doc is re-processed (the reference's page ->
     vector-ids manifest, ``Notion_openai_vector_etl.py``
     `save_manifest`, SURVEY §2.2 K4)."""
-    return _read_tree(
-        spark,
-        out_dir,
-        "state",
-        ["doc_id", "content_hash", "vec_ids", "batch_id"],
-        before_batch,
-    )
+    return _read_tree(spark, out_dir, "state", before_batch)
 
 
 def _read_events(
@@ -554,7 +514,7 @@ def _read_events(
     (:func:`compact_pipeline_ann_state`) run on independent cadences,
     so a folded ``{tree}_versions`` row can carry a batch_id on either
     side of the ann watermark."""
-    ev = _read_tree(spark, out_dir, tree, ["vec_id", "batch_id"], before_batch)
+    ev = _read_tree(spark, out_dir, tree, before_batch)
     if ev is None:
         return None
     return ev.filter(
@@ -589,6 +549,21 @@ def read_revived_vectors(
     return _read_events(spark, out_dir, "revive", before_batch, after_batch)
 
 
+def _dead_vectors(stale: DataFrame, revive: DataFrame | None) -> DataFrame:
+    """vec_ids whose newest stale event outranks their newest revive
+    event (module docstring: the ordering that makes an A->B->A revert
+    serve version A again)."""
+    sb = stale.groupBy("vec_id").agg(F.max("batch_id").alias("sb"))
+    if revive is None:
+        return sb.select("vec_id")
+    rb = revive.groupBy("vec_id").agg(F.max("batch_id").alias("rb"))
+    return (
+        sb.join(rb, "vec_id", "left")
+        .filter(F.col("sb") > F.coalesce(F.col("rb"), F.lit(-1)))
+        .select("vec_id")
+    )
+
+
 def load_pipeline_ann_state(
     spark: SparkSession,
     out_dir: str,
@@ -598,8 +573,7 @@ def load_pipeline_ann_state(
     """The composed pipeline's probe-ready ANN view: the ann_stream
     state (stored base ∪ committed deltas) MINUS the dead set — a
     vec_id is dead iff its newest unconsumed stale event outranks its
-    newest revive event (module docstring: the event ordering is what
-    makes an A->B->A revert serve version A again). Events at or below
+    newest revive event (:func:`_dead_vectors`). Events at or below
     the ann manifest's ``stale_through`` watermark were CONSUMED by
     :func:`compact_pipeline_ann_state` — their effect is already
     physical in the folded version (dead vectors reclaimed, duplicate
@@ -615,37 +589,16 @@ def load_pipeline_ann_state(
     still sit in the folded/base trees. Those vec_ids (a churn-sized
     set) get a scoped full-row dedup; every other row passes through
     untouched — no index-wide shuffle on the serve path."""
-    from notion_vector_store_etl_pipeline_spark.streaming.ann_stream import (
-        load_stream_ann_state,
-    )
-
     index, c_ids, c_mat = load_stream_ann_state(
         spark, f"{out_dir}/ann", ivf_index_path, before_batch
     )
-    ann_man = read_compaction_manifest(f"{out_dir}/ann", spark)
-    consumed = (ann_man or {}).get("stale_through", -1)
+    consumed = _stale_through(spark, out_dir)
     stale = read_stale_vectors(spark, out_dir, before_batch, after_batch=consumed)
-    revive = read_revived_vectors(
-        spark, out_dir, before_batch, after_batch=consumed
-    )
-    rb = (
-        revive.groupBy("vec_id").agg(F.max("batch_id").alias("rb"))
-        if revive is not None
-        else None
-    )
+    revive = read_revived_vectors(spark, out_dir, before_batch, after_batch=consumed)
     if stale is not None:
-        sb = stale.groupBy("vec_id").agg(F.max("batch_id").alias("sb"))
-        if rb is not None:
-            dead = (
-                sb.join(rb, "vec_id", "left")
-                .filter(F.col("sb") > F.coalesce(F.col("rb"), F.lit(-1)))
-                .select("vec_id")
-            )
-        else:
-            dead = sb.select("vec_id")
-        index = index.join(dead, "vec_id", "left_anti")
-    if rb is not None:
-        dup_ids = rb.select("vec_id")
+        index = index.join(_dead_vectors(stale, revive), "vec_id", "left_anti")
+    if revive is not None:
+        dup_ids = revive.select("vec_id")
         index = index.join(dup_ids, "vec_id", "left_anti").unionByName(
             index.join(dup_ids, "vec_id", "left_semi").dropDuplicates(["vec_id"])
         )
@@ -665,7 +618,8 @@ def compact_pipeline_ann_state(
 ) -> dict | None:
     """The composed pipeline's ann compaction: fold the ``{out}/ann``
     delta tail through ``through_batch`` into the next index version
-    like :func:`streaming.ann_stream.compact_ann_stream_state` — but
+    with the same fold body as
+    :func:`streaming.ann_stream.compact_ann_stream_state` — but
     CONSUME the stale/revive event window on the way (VERDICT r10 #2):
 
     - the window's dead vec_ids (newest stale outranks newest revive,
@@ -682,98 +636,40 @@ def compact_pipeline_ann_state(
       before and after the fold while its subtraction list stays
       O(fold window).
 
-    Idempotent below the watermark like both wings' compactions; a
-    crash between the version write and the publish leaves an orphan
-    version dir the retried fold overwrites. The generic
-    ``compact_ann_stream_state`` must NOT be pointed at a pipeline
+    The generic ``compact_ann_stream_state`` must NOT be pointed at a pipeline
     tree for reclamation (it folds verbatim and advances only
     ``through_batch``) — doing so is still CORRECT (events stay
     unconsumed and the serve path keeps subtracting them), just
     unreclaimed. With ``vacuum_consumed=True`` (default) the fold runs
-    :func:`vacuum_consumed_events` itself after advancing
-    ``stale_through`` (VERDICT r11 #6): event VERSIONS fully below the
+    :func:`vacuum_consumed_events` itself once ``stale_through`` covers
+    ``through_batch`` (VERDICT r11 #6): event VERSIONS fully below the
     new watermark delete here, at the moment they become history,
     instead of lingering until the next state fold's ``vacuum_events``
     pass (consumed rows in the un-folded batch TAIL still wait for the
-    state fold+prune, as before). The streaming wrapper wires this to
-    its ``vacuum_events`` knob so a stream configured to KEEP event
-    history keeps it everywhere."""
-    from notion_vector_store_etl_pipeline_spark.operators.statefs import (
-        batch_dirs as _batch_dirs,
-    )
+    state fold+prune, as before); a replayed fold re-runs the
+    idempotent vacuum, finishing one a crash cut short. The streaming
+    wrapper wires this to its ``vacuum_events`` knob so a stream
+    configured to KEEP event history keeps it everywhere."""
 
-    ann_dir = f"{out_dir}/ann"
-    fs = state_fs(spark, ann_dir)
-    man = read_compaction_manifest(ann_dir, spark)
-    prev = man["through_batch"] if man else -1
-    if through_batch <= prev:
-        return man
-    deltas = _batch_dirs(fs, f"{ann_dir}/delta", prev, through_batch + 1)
-    stale_prev = (man or {}).get("stale_through", -1)
-    stale_ev = read_stale_vectors(
-        spark, out_dir, through_batch + 1, after_batch=stale_prev
+    def window_events(man: dict | None):
+        after = (man or {}).get("stale_through", -1)
+        stale = read_stale_vectors(spark, out_dir, through_batch + 1, after_batch=after)
+        revive = read_revived_vectors(spark, out_dir, through_batch + 1, after_batch=after)
+        if stale is None or stale.isEmpty():
+            return None, revive
+        return _dead_vectors(stale, revive), revive
+
+    man = fold_ann_state(
+        spark, f"{out_dir}/ann", through_batch, base_index_path,
+        prune_deltas, retain_versions, rebuild_centroids, rebuild_sample_mod,
+        events=window_events,
     )
-    revive_ev = read_revived_vectors(
-        spark, out_dir, through_batch + 1, after_batch=stale_prev
-    )
-    has_events = stale_ev is not None and not stale_ev.isEmpty()
-    if not deltas and not rebuild_centroids and not has_events:
-        return man
-    dead = None
-    dedup_rows = False
-    if has_events:
-        sb = stale_ev.groupBy("vec_id").agg(F.max("batch_id").alias("sb"))
-        if revive_ev is not None:
-            rb = revive_ev.groupBy("vec_id").agg(F.max("batch_id").alias("rb"))
-            dead = (
-                sb.join(rb, "vec_id", "left")
-                .filter(F.col("sb") > F.coalesce(F.col("rb"), F.lit(-1)))
-                .select("vec_id")
-            )
-        else:
-            dead = sb.select("vec_id")
-    if revive_ev is not None and not revive_ev.isEmpty():
-        dedup_rows = True
-    k = (man["version"] + 1) if man else 1
-    base = man["index_path"] if man else base_index_path
-    out_path = f"{ann_dir}/index_versions/v{k}"
-    if rebuild_centroids:
-        rebuild_ivf_index(
-            spark,
-            base,
-            deltas,
-            out_path,
-            sample_mod=rebuild_sample_mod,
-            drop_vec_ids=dead,
-            dedup_rows=dedup_rows,
-        )
-    else:
-        compact_ivf_index(
-            spark, base, deltas, out_path, drop_vec_ids=dead, dedup_rows=dedup_rows
-        )
-    manifest = {
-        "version": k,
-        "index_path": out_path,
-        "through_batch": through_batch,
-        "centroids": "refreshed" if rebuild_centroids else "carried",
-        "stale_through": through_batch,
-    }
-    _write_manifest(ann_dir, manifest, spark)
-    if vacuum_consumed:
-        # consumed event versions become pure history at THIS publish —
+    if vacuum_consumed and (man or {}).get("stale_through") == through_batch:
+        # consumed event versions become pure history at the publish —
         # reclaim them now (idempotent, watermark-walk cheap) rather
         # than waiting for the next state fold's vacuum_events pass
         vacuum_consumed_events(spark, out_dir)
-    if prune_deltas:
-        for d in deltas:
-            fs.delete_recursive(d)
-    if retain_versions is not None:
-        from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
-            vacuum_index_versions,
-        )
-
-        vacuum_index_versions(spark, ann_dir, k, retain_versions)
-    return manifest
+    return man
 
 
 def streaming_ingest_etl(
@@ -838,28 +734,13 @@ def streaming_ingest_etl(
     ``rebuild_ann_every=R`` upgrades every R-th ann fold to a centroid
     refresh). Each keeps its per-batch read O(K + versions) instead of
     O(stream age)."""
-    register_paginated_source(spark)
-
-    base_dedup_manifest = {
-        "version": 0,
-        "index_path": None if lsh_index_table else lsh_index_path,
-        "index_table": lsh_index_table,
-        "corpus_base": corpus_path,
-        "through_batch": -1,
-    }
-
     def _process(batch: DataFrame, batch_id: int) -> None:
-        # compaction boundaries BEFORE the empty-batch return: an empty
-        # K-th batch must still fold its tail (each fold is idempotent;
-        # deferring it to 2K lets the tail grow unbounded on an unlucky
-        # cadence of idle pages). Folds cover COMMITTED batches only
-        # (everything before this one); replays hit the watermark and
-        # no-op.
+        # each fold on its own cadence, before the empty-batch return
+        # (streaming.state.fold_due)
         global _PROFILE_BID
         _PROFILE_BID = batch_id
         _t = time.perf_counter()
-        at_boundary = lambda every: every and batch_id > 0 and batch_id % every == 0  # noqa: E731
-        if at_boundary(compact_state_every):
+        if fold_due(batch_id, compact_state_every):
             compact_ingest_state(
                 spark,
                 out_dir,
@@ -868,30 +749,24 @@ def streaming_ingest_etl(
                 vacuum_events=vacuum_events,
             )
         dedup_man = None
-        if update_index:
-            if at_boundary(compact_dedup_every):
-                dedup_man = compact_stream_state(
-                    spark,
-                    out_dir,
-                    through_batch=batch_id - 1,
-                    base_index_path=lsh_index_path,
-                    base_index_table=lsh_index_table,
-                    base_corpus_path=corpus_path,
-                    prune_deltas=compact_dedup_prune,
-                    retain_versions=compact_dedup_retain,
-                    major=bool(
-                        compact_dedup_major_every
-                        and (batch_id // compact_dedup_every)
-                        % compact_dedup_major_every
-                        == 0
-                    ),
-                    auto_major_rows=compact_dedup_major_rows,
-                    num_hashes=num_hashes,
-                    bands=bands,
-                )
-            else:
-                dedup_man = read_compaction_manifest(out_dir, spark)
-        if at_boundary(compact_ann_every):
+        if update_index and fold_due(batch_id, compact_dedup_every):
+            dedup_man = compact_stream_state(
+                spark,
+                out_dir,
+                through_batch=batch_id - 1,
+                base_index_path=lsh_index_path,
+                base_index_table=lsh_index_table,
+                base_corpus_path=corpus_path,
+                prune_deltas=compact_dedup_prune,
+                retain_versions=compact_dedup_retain,
+                major=upgrade_due(batch_id, compact_dedup_every, compact_dedup_major_every),
+                auto_major_rows=compact_dedup_major_rows,
+                num_hashes=num_hashes,
+                bands=bands,
+            )
+        elif update_index:
+            dedup_man = read_compaction_manifest(out_dir, spark)
+        if fold_due(batch_id, compact_ann_every):
             compact_pipeline_ann_state(
                 spark,
                 out_dir,
@@ -900,10 +775,7 @@ def streaming_ingest_etl(
                 prune_deltas=compact_ann_prune,
                 retain_versions=compact_ann_retain,
                 vacuum_consumed=vacuum_events,
-                rebuild_centroids=bool(
-                    rebuild_ann_every
-                    and (batch_id // compact_ann_every) % rebuild_ann_every == 0
-                ),
+                rebuild_centroids=upgrade_due(batch_id, compact_ann_every, rebuild_ann_every),
                 rebuild_sample_mod=rebuild_sample_mod,
             )
         _t = _mark(batch_id, "folds", _t)
@@ -961,50 +833,14 @@ def streaming_ingest_etl(
                 # crash-replay skips identically.
                 return
         _t = _mark(batch_id, "skip", _t)
-        if update_index:
-            # probe corpus ∪ committed stream state: anchor on the
-            # dedup compaction manifest (folded index version + folded
-            # clean corpus) and union only the uncompacted tail — the
-            # dedup wing's exact read shape (streaming/dedup_stream.py)
-            anchor = dedup_man or base_dedup_manifest
-            lsh_index = _load_anchor_index(spark, anchor)
-            corpus_docs = _load_anchor_corpus(spark, anchor, out_dir)
-            after = anchor["through_batch"]
-            deltas = _read_prior_batches(
-                spark,
-                f"{out_dir}/index_delta",
-                ["sid", "band", "bucket"],
-                batch_id,
-                after,
-            )
-            if deltas is not None:
-                lsh_index = lsh_index.unionByName(deltas)
-            prior_clean = _read_prior_batches(
-                spark,
-                f"{out_dir}/clean",
-                ["doc_id", "text", "batch_id"],
-                batch_id,
-                after,
-            )
-            if prior_clean is not None:
-                # per-doc LATEST text in the tail: an updated doc has
-                # clean rows in several batches, and the verify
-                # universe wants one (current) text per sid. The
-                # anti-join is a broadcast filter on the big side — no
-                # corpus shuffle. A doc edited across FOLD windows is
-                # handled one level down: compact_stream_state records
-                # its id in the superseded sidecar and
-                # _load_anchor_corpus resolves latest-wins, so the
-                # verify universe carries exactly one (current) text
-                # per sid (r11b — closed the flag-against-retired-text
-                # residual).
-                corpus_docs = _merge_latest_tail(corpus_docs, prior_clean)
-        else:
-            if lsh_index_table:
-                lsh_index = load_lsh_index_bucketed(spark, lsh_index_table)
-            else:
-                lsh_index = load_lsh_index(spark, lsh_index_path)
-            corpus_docs = spark.read.parquet(corpus_path).select("doc_id", "text")
+        # probe corpus ∪ committed stream state — the dedup wing's
+        # exact read shape; without update_index, the stored base alone
+        lsh_index, corpus_docs = dedup_anchor_view(
+            spark,
+            out_dir,
+            anchor_manifest(dedup_man, lsh_index_path, lsh_index_table, corpus_path),
+            batch_id if update_index else None,
+        )
         # resolve the IVF anchor through the ann tree's compaction
         # manifest: after a rebuild_centroids fold on {out}/ann, the
         # published version carries a REFRESHED sidecar — assigning new
@@ -1012,8 +848,9 @@ def streaming_ingest_etl(
         # them that the refreshed sidecar's probes never select (silent
         # recall collapse; the same rule ann_stream re-reads its anchor
         # per batch for)
-        ann_man = read_compaction_manifest(f"{out_dir}/ann", spark)
-        ivf_anchor = ann_man["index_path"] if ann_man else ivf_index_path
+        ann_anchor = ivf_anchor(
+            read_compaction_manifest(f"{out_dir}/ann", spark), ivf_index_path
+        )
         _t = _mark(batch_id, "anchor_load", _t)
         # intra_batch rides update_index: intra-stream dedup that
         # caught a pair split ACROSS batches but let the same pair
@@ -1025,7 +862,7 @@ def streaming_ingest_etl(
             todo,
             corpus_docs,
             lsh_index,
-            ivf_anchor,
+            ann_anchor,
             threshold,
             num_hashes,
             bands,
@@ -1053,30 +890,11 @@ def streaming_ingest_etl(
                 f"{out_dir}/index_delta/batch_id={batch_id}"
             )
         _t = _mark(batch_id, "write_outputs", _t)
-        # plain sorted files, not partitionBy(list_id) — the micro-batch
-        # delta small-files fix; see ann_stream's delta write for the
-        # full rationale (row-group stats replace partition pruning on
-        # the tail; the fold restores the partitioned layout)
-        assigned.repartition("list_id").sortWithinPartitions("list_id").write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/ann/delta/batch_id={batch_id}/vectors")
-        # writer-side anchor re-validation (ADVICE r10, mirroring
-        # ann_stream): an OUT-OF-BAND rebuild publishing between the
-        # anchor read above and the delta landing leaves old-centroid
-        # list_ids above the new watermark — permanent once folded.
-        # Fail LOUDLY before the state write: the stream restart
-        # replays this batch against the current sidecar (every write
-        # so far is a batch_id-keyed overwrite). In-process folds
-        # (compact_ann_every) are sequential and never race.
-        ann_man2 = read_compaction_manifest(f"{out_dir}/ann", spark)
-        anchor2 = ann_man2["index_path"] if ann_man2 else ivf_index_path
-        if anchor2 != ivf_anchor:
-            raise RuntimeError(
-                f"composed ingest batch {batch_id}: IVF anchor changed "
-                f"{ivf_anchor!r} -> {anchor2!r} during the batch (concurrent "
-                "external rebuild) — restart the stream to replay this "
-                "batch against the current sidecar"
-            )
+        # fails LOUDLY before the state write if an out-of-band rebuild
+        # moved the IVF anchor during the batch (write_ivf_delta)
+        write_ivf_delta(
+            spark, assigned, f"{out_dir}/ann", batch_id, ann_anchor, ivf_index_path
+        )
         _t = _mark(batch_id, "write_ann", _t)
         # stale/revive events: every doc (re)processed this batch
         # supersedes its LATEST prior version's vectors. Latest-version
@@ -1162,17 +980,8 @@ def streaming_ingest_etl(
         )
         _mark(batch_id, "write_state", _t)
 
-    docs = (
-        spark.readStream.format("paginated")
-        .option("path", source_path)
-        .option("page_size", str(page_size))
-        .option("pages_per_batch", str(pages_per_batch))
-        .load()
-    )
-    return (
-        docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return foreach_page_batch(
+        spark, source_path, page_size, pages_per_batch, checkpoint_dir, _process
     )
 
 

@@ -176,7 +176,7 @@ def tree_bytes(root: str) -> int:
 
 
 def _ann_stale_through(spark, out: str) -> int:
-    from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
+    from notion_vector_store_etl_pipeline_spark.streaming.state import (
         read_compaction_manifest,
     )
 
@@ -386,7 +386,7 @@ def main() -> int:
             if s[key] > bound:
                 failures.append(f"{key}={s[key]} at age {age} exceeds bound {bound}")
     if major or major_rows:
-        from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
+        from notion_vector_store_etl_pipeline_spark.streaming.state import (
             read_compaction_manifest,
         )
 

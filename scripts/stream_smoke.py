@@ -44,9 +44,9 @@ from pyspark.sql import functions as F
 from notion_vector_store_etl_pipeline_spark import get_spark
 from notion_vector_store_etl_pipeline_spark.operators import dedup as D
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
-    read_compaction_manifest,
     streaming_dedup_ingest,
 )
+from notion_vector_store_etl_pipeline_spark.streaming.state import read_compaction_manifest
 
 
 def main() -> int:

@@ -219,7 +219,6 @@ def _run_stream(spark, tmp_path, tag, page_size, chain_policy):
     return flagged, clean
 
 
-@pytest.mark.slow
 def test_chain_split_across_batches_equals_one_pass_twin(spark, tmp_path):
     """THE cross-path pin: the A~B~C chain arriving one doc per
     micro-batch (the stream's inherently sequential composition) must

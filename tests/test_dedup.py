@@ -510,11 +510,10 @@ def test_length_filter_float_edge_keeps_boundary_pair(spark):
     assert fast == brute
 
 
-def test_word_shingles_hof_short_docs_empty_not_crash(spark):
-    """Documents with fewer than k words must shingle to [] — the HOF
-    formulation's sequence(0, n-k) used to emit [0, -1] for n < k
-    (Spark infers step -1) and crash element_at with an out-of-range
-    index. Output must match the pandas-UDF word_shingles."""
+def test_word_shingles_short_docs_empty_not_crash(spark):
+    """Documents with fewer than k words, empty documents and NULL text
+    all shingle to [] instead of crashing; a k-word-or-longer document
+    yields its distinct k-word windows."""
     rows = [
         (1, "only two"),
         (2, ""),
@@ -522,24 +521,18 @@ def test_word_shingles_hof_short_docs_empty_not_crash(spark):
         (4, "one two three four"),
     ]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    hof = {
-        r.doc_id: r.sh
-        for r in df.select(
-            "doc_id", D.word_shingles_hof(F.col("text"), 3).alias("sh")
-        ).collect()
-    }
-    udf = {
+    got = {
         r.doc_id: r.sh
         for r in df.select(
             "doc_id", D.word_shingles(F.col("text"), 3).alias("sh")
         ).collect()
     }
-    assert hof[1] == [] and hof[2] == []
-    assert hof[4] == ["one two three", "two three four"]
-    # NULL text also lands in the guard's [] branch (size(NULL) = -1),
-    # so the two variants now agree on every row including NULLs
-    for doc_id in (1, 2, 3, 4):
-        assert hof[doc_id] == udf[doc_id], doc_id
+    assert got == {
+        1: [],
+        2: [],
+        3: [],
+        4: ["one two three", "two three four"],
+    }
 
 
 def test_jaccard_pairs_stop_shingle_cap_single_window(spark):

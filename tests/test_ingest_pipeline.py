@@ -162,7 +162,6 @@ def test_streaming_composed_etl_matches_batch_twin(spark, tmp_path):
     assert {v for v, *_ in s_chunks} == {v for v, _ in s_assigned}
 
 
-@pytest.mark.slow
 def test_streaming_composed_etl_restart_and_skip(spark, tmp_path):
     """Source grows and the stream restarts on the same checkpoint:
     an unchanged re-sent doc is SKIPPED (no duplicate chunks/vectors),
@@ -248,13 +247,12 @@ def test_streaming_composed_etl_state_compaction(spark, tmp_path):
     twin, the skip contract survives a restart READING FROM THE FOLDED
     state (the re-sent doc's batch dirs were pruned), and the tail the
     per-batch read enumerates is bounded by the watermark."""
-    from notion_vector_store_etl_pipeline_spark.operators.statefs import (
-        read_json,
-        state_fs,
-    )
+    from notion_vector_store_etl_pipeline_spark.operators.statefs import state_fs
     from notion_vector_store_etl_pipeline_spark.streaming.ingest_pipeline import (
-        _state_manifest_path,
         read_ingest_state,
+    )
+    from notion_vector_store_etl_pipeline_spark.streaming.state import (
+        read_compaction_manifest,
     )
 
     incoming, corpus_path, lsh_path, ivf_path = _fixture(spark, tmp_path)
@@ -272,7 +270,7 @@ def test_streaming_composed_etl_state_compaction(spark, tmp_path):
     _run(spark, src, corpus_path, lsh_path, ivf_path, out_p, ckpt_p, **kw)
     assert _outputs(spark, out_c) == _outputs(spark, out_p)
 
-    man = read_json(state_fs(spark, out_c), _state_manifest_path(out_c))
+    man = read_compaction_manifest(f"{out_c}/state", spark)
     assert man and man["version"] >= 1 and man["through_batch"] >= 1
     # folded batch dirs were pruned; the folded rows are still visible
     fs = state_fs(spark, out_c)

@@ -26,7 +26,6 @@ from notion_vector_store_etl_pipeline_spark.operators import dedup as D
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
     _load_anchor_corpus,
     _load_anchor_index,
-    _write_manifest,
     compact_stream_state,
     latest_committed_batch,
     read_compaction_manifest,
@@ -36,6 +35,7 @@ from notion_vector_store_etl_pipeline_spark.streaming.ingest_pipeline import (
     compact_ingest_state,
     compact_pipeline_ann_state,
 )
+from notion_vector_store_etl_pipeline_spark.streaming.state import write_manifest
 
 from tests.test_ingest_pipeline_r11 import (  # noqa: F401  (fixture deps)
     _revert_lifecycle,
@@ -200,7 +200,7 @@ def test_presignature_manifest_major_guarded_by_probe(spark, tmp_path):
     assert man["signature"] == [32, 8, False]
     # simulate a pre-upgrade manifest: drop the signature record
     legacy = {k: v for k, v in man.items() if k != "signature"}
-    _write_manifest(out, legacy, spark)
+    write_manifest(out, legacy, spark)
     assert "signature" not in read_compaction_manifest(out, spark)
 
     # wrong params: the probe reproduces no bucket -> loud refusal
@@ -236,7 +236,7 @@ def test_presignature_assume_signature_override(spark, tmp_path):
         base_index_path=index_path, base_corpus_path=corpus_path,
     )
     legacy = {k: v for k, v in man.items() if k != "signature"}
-    _write_manifest(out, legacy, spark)
+    write_manifest(out, legacy, spark)
     # explicit opt-in skips the probe and trusts the caller
     man2 = compact_stream_state(
         spark, out, through_batch=1, major=True,

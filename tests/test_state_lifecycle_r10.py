@@ -309,9 +309,7 @@ def test_vacuum_watermark_bounds_rescans(spark, tmp_path, monkeypatch):
         read_json,
         state_fs,
     )
-    from notion_vector_store_etl_pipeline_spark.streaming import (
-        dedup_stream as DS,
-    )
+    from notion_vector_store_etl_pipeline_spark.streaming import state as DS
 
     out = str(tmp_path / "vac")
     fs = state_fs(spark, out)

@@ -23,7 +23,6 @@ and post-crash batches probe state rebuilt across the kill.
 
 from __future__ import annotations
 
-import pytest
 import os
 import signal
 import subprocess
@@ -169,7 +168,6 @@ def _disposition(spark, out, base):
     return flagged, survivors
 
 
-@pytest.mark.slow
 def test_kill_mid_fold_then_restart_matches_uncrashed_run(spark, tmp_path):
     base, src = _setup(spark, tmp_path)
 

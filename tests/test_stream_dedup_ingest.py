@@ -167,7 +167,7 @@ def test_stream_replay_ignores_own_crashed_artifacts(spark, tmp_path):
     a run died AFTER writing batch 0's clean docs + index delta but
     BEFORE the epoch commit, the restart replays batch 0 — and must
     ignore the crashed attempt's own artifacts (strict batch_id bound
-    in _read_prior_batches). Without the bound, the replayed doc finds
+    in streaming.state.read_prior_batches). Without the bound, the replayed doc finds
     its own signature in the delta index and flags itself as its own
     duplicate."""
     import pandas as pd
@@ -728,7 +728,6 @@ def test_latest_committed_batch(spark, tmp_path):
     assert latest_committed_batch(ckpt) == n_batches - 1
 
 
-@pytest.mark.slow
 def test_stream_restart_resumes_against_compacted_state(spark, tmp_path):
     """Ops-shaped lifecycle: run 1 ingests 12 one-doc batches and
     compacts at batch 10 (manifest v1, through batch 9); the source
