@@ -58,41 +58,6 @@ def persist_tracked(df: DataFrame, eager: bool = False) -> DataFrame:
     return df
 
 
-def tracked_snapshot() -> tuple:
-    """Identity snapshot of the currently tracked persists — pair with
-    :func:`release_tracked_except` to scope a composite operator's
-    cache lifetime to the operator call (streaming probe_batch: the
-    call ends with an eager checkpoint, so every cache registered
-    DURING it — its own and nested operators' — is fully consumed by
-    then and safe to drop, ADVICE r9).
-
-    The snapshot holds STRONG references to the DataFrames themselves,
-    not bare ``id()`` values: CPython recycles addresses after GC, so
-    an ids-only snapshot could wrongly 'keep' (leak) a NEW DataFrame
-    persisted later at a reused address. The token is opaque — treat
-    it as such."""
-    return tuple(_PERSISTED)
-
-
-def release_tracked_except(snapshot: tuple) -> None:
-    """Unpersist every tracked entry registered since ``snapshot`` was
-    taken, leaving pre-existing entries (and their positions) alone."""
-    # identity check is safe here precisely because `snapshot` keeps
-    # the originals alive (see tracked_snapshot)
-    keep_ids = {id(df) for df in snapshot}
-    keep = []
-    while _PERSISTED:
-        df = _PERSISTED.pop()
-        if id(df) in keep_ids:
-            keep.append(df)
-        else:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    _PERSISTED.extend(reversed(keep))
-
-
 def release_cache() -> None:
     """Unpersist every intermediate registered so far. Entries whose
     session has since stopped are dropped silently (same rationale as

@@ -33,24 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from notion_vector_store_etl_pipeline_spark.operators.cache import (
-    persist_tracked as _persist_tracked,
-)
-
-
-def _persist_eager(df: DataFrame) -> DataFrame:
-    """Tracked eager persist (operators.cache): for kernel outputs read
-    by two consumers of one downstream action — lazy persist would let
-    the consumers race the cache populate and re-run the Arrow kernel
-    per branch (the jaccard_pairs_prefix lesson, dedup.py).
-
-    Cache lifetime: the entry stays tracked until the session calls
-    ``release_cache()`` (or ``spark.catalog.clearCache()``). Callers
-    that invoke the IVF blocked operators repeatedly in one session
-    (ad-hoc scripts, notebooks) should release between calls or the
-    corpus-sized assignments accumulate for the session lifetime
-    (ADVICE r14)."""
-    return _persist_tracked(df, eager=True)
+from notion_vector_store_etl_pipeline_spark.operators.cache import persist_tracked
 
 
 _PAIR_SCHEMA = StructType(
@@ -966,10 +949,9 @@ def ivf_blocked_pairs(
     calls (bench.py and the parity sweep do) or the corpus-sized cached
     assignments accumulate for the session lifetime (ADVICE r14).
     """
-    assigned = _persist_eager(
-        nearest_lists(
-            vecs, cent_ids, cent_mat, probes, id_col=id_col, emb_col=emb_col
-        )
+    assigned = persist_tracked(
+        nearest_lists(vecs, cent_ids, cent_mat, probes, id_col=id_col, emb_col=emb_col),
+        eager=True,
     )
     return blocked_pairs_from_assigned(assigned, threshold, id_col, emb_col)
 
@@ -1105,10 +1087,9 @@ def ivf_blocked_probe(
     # and the replicated join branch would otherwise each run the
     # assignment GEMM over the full input (mapInPandas is opaque to
     # column pruning)
-    assigned = _persist_eager(
-        nearest_lists(
-            tagged, cent_ids, cent_mat, probes, id_col=id_col, emb_col=emb_col
-        )
+    assigned = persist_tracked(
+        nearest_lists(tagged, cent_ids, cent_mat, probes, id_col=id_col, emb_col=emb_col),
+        eager=True,
     )
     return _bipartite_list_probe(assigned, threshold, id_col, emb_col)
 

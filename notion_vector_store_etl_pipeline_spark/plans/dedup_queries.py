@@ -424,9 +424,7 @@ def minhash_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(batch-side signatures + bipartite bucket join + candidate-local "
     "verify), the number that matters at 100 TB where the corpus is "
     "1000x the daily batch. The index parquet is partitioned by band "
-    "and bucket-sorted within files (write_lsh_index); at cluster "
-    "scale, write through layout.write_bucketed on `bucket` to make "
-    "the recurring probe join exchange-free on the corpus side.",
+    "and bucket-sorted within files (write_lsh_index).",
 )
 def minhash_probe_stored_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from notion_vector_store_etl_pipeline_spark.operators.index_memo import (

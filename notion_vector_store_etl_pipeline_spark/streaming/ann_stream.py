@@ -286,10 +286,6 @@ def probe_vector_batch(
     UPDATE (re-embed), not a duplicate: batch wins, same-id pairs are
     excluded — mirroring the text probe's universe rule.
     """
-    from notion_vector_store_etl_pipeline_spark.operators.cache import (
-        release_tracked_except,
-        tracked_snapshot,
-    )
     from notion_vector_store_etl_pipeline_spark.operators.dedup import (
         CHAIN_POLICIES,
         sequential_firstwins_pairs,
@@ -304,87 +300,80 @@ def probe_vector_batch(
         raise ValueError(
             f"chain_policy must be one of {CHAIN_POLICIES}, got {chain_policy!r}"
         )
-    local_persists: list[DataFrame] = []
-    tracked_before = tracked_snapshot()
-
-    def _persist(df: DataFrame) -> DataFrame:
-        df = df.persist()
-        local_persists.append(df)
-        return df
-
     batch0 = batch  # original columns: clean is returned in this shape
     batch = batch.select(F.col(id_col).alias("vec_id"), F.col(emb_col).alias("emb"))
     # assign the batch once and pin it: it feeds the probed-list semi
     # filter, the union's batch branch, and the kernel's block-count
-    # join (micro-batch-sized frame, same contract as the text probe)
-    batch_asg = _persist(
+    # join (micro-batch-sized frame, same contract as the text probe).
+    # The other two pins are taken on their paths only; one finally
+    # releases whichever were taken, whatever the call raises.
+    batch_asg = (
         nearest_lists(batch, cent_ids, cent_mat, probes, id_col="vec_id", emb_col="emb")
         .select("vec_id", "emb", F.lit(True).alias("_is_batch"), "list_id")
+        .persist()
     )
-    corpus = corpus_vectors
-    fresh_assign = "list_id" not in corpus.columns
-    if fresh_assign:
-        corpus = nearest_lists(
-            corpus, cent_ids, cent_mat, 1, id_col=id_col, emb_col=emb_col
-        )
-    corpus_side = (
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(emb_col).alias("emb"),
-            F.lit(False).alias("_is_batch"),
-            "list_id",
-        )
-        # same-id exclusion: a re-embedded id collides with its own old
-        # entry — that is an update passing through, not a near-dup
-        .join(batch.select("vec_id"), "vec_id", "left_anti")
-        # only lists the batch probes are read (pruned scan when the
-        # corpus is a stored list_id-partitioned tree)
-        .join(F.broadcast(batch_asg.select("list_id").distinct()), "list_id", "left_semi")
-        .select("vec_id", "emb", "_is_batch", "list_id")
-    )
-    if fresh_assign:
-        # Fresh-assigned corpus (the one-pass batch twin, never the
-        # stream's stored-tree path): the probe kernel's block-count
-        # aggregate and its replicated join branch are two consumers of
-        # one action, and mapInPandas is opaque to column pruning — so
-        # un-persisted, the corpus assignment GEMM runs twice (r14;
-        # guide §1.2). Eager so the branches can't race the cache.
-        # The stored path stays un-persisted on purpose: there the
-        # count branch reads only the list_id partition column, which
-        # is cheaper than materializing the vectors.
-        corpus_side = _persist(corpus_side)
-        corpus_side.count()
-    flagged = _bipartite_list_probe(
-        corpus_side.unionByName(batch_asg.select(*corpus_side.columns)),
-        threshold,
-        "vec_id",
-        "emb",
-    ).localCheckpoint(eager=True)
-
-    if intra_batch:
-        survivors = _persist(
-            batch.join(
-                flagged.select(F.col("batch_id").alias("vec_id")), "vec_id", "left_anti"
+    corpus_pin = survivors = None
+    try:
+        corpus = corpus_vectors
+        fresh_assign = "list_id" not in corpus.columns
+        if fresh_assign:
+            corpus = nearest_lists(
+                corpus, cent_ids, cent_mat, 1, id_col=id_col, emb_col=emb_col
             )
+        corpus_side = (
+            corpus.select(
+                F.col(id_col).alias("vec_id"),
+                F.col(emb_col).alias("emb"),
+                F.lit(False).alias("_is_batch"),
+                "list_id",
+            )
+            # same-id exclusion: a re-embedded id collides with its own
+            # old entry — that is an update passing through, not a
+            # near-dup
+            .join(batch.select("vec_id"), "vec_id", "left_anti")
+            # only lists the batch probes are read (pruned scan when the
+            # corpus is a stored list_id-partitioned tree)
+            .join(F.broadcast(batch_asg.select("list_id").distinct()), "list_id", "left_semi")
+            .select("vec_id", "emb", "_is_batch", "list_id")
         )
-        # micro-batch-sized: fixed small block count, no auto-sizing
-        # count() job per batch
-        intra_pairs = cosine_selfjoin_pairs(
-            survivors, threshold, id_col="vec_id", emb_col="emb", n_blocks=8
-        )
-        if chain_policy == "sequential":
-            intra_pairs = sequential_firstwins_pairs(intra_pairs)
-        intra = intra_pairs.select(
-            F.col("b_id").alias("batch_id"), F.col("a_id").alias("corpus_id"), "score"
-        )
-        flagged = flagged.unionByName(intra).localCheckpoint(eager=True)
+        if fresh_assign:
+            # Fresh-assigned corpus (the one-pass batch twin, never the
+            # stream's stored-tree path): the probe kernel's block-count
+            # aggregate and its replicated join branch are two consumers
+            # of one action, and mapInPandas is opaque to column pruning
+            # — so un-persisted, the corpus assignment GEMM runs twice
+            # (r14; guide §1.2). Eager so the branches can't race the
+            # cache. The stored path stays un-persisted on purpose: there
+            # the count branch reads only the list_id partition column,
+            # which is cheaper than materializing the vectors.
+            corpus_side = corpus_pin = corpus_side.persist()
+            corpus_side.count()
+        flagged = _bipartite_list_probe(
+            corpus_side.unionByName(batch_asg.select(*corpus_side.columns)),
+            threshold,
+            "vec_id",
+            "emb",
+        ).localCheckpoint(eager=True)
 
-    for df in local_persists:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    release_tracked_except(tracked_before)
+        if intra_batch:
+            survivors = batch.join(
+                flagged.select(F.col("batch_id").alias("vec_id")), "vec_id", "left_anti"
+            ).persist()
+            # micro-batch-sized: fixed small block count, no auto-sizing
+            # count() job per batch
+            intra_pairs = cosine_selfjoin_pairs(
+                survivors, threshold, id_col="vec_id", emb_col="emb", n_blocks=8
+            )
+            if chain_policy == "sequential":
+                intra_pairs = sequential_firstwins_pairs(intra_pairs)
+            intra = intra_pairs.select(
+                F.col("b_id").alias("batch_id"), F.col("a_id").alias("corpus_id"), "score"
+            )
+            flagged = flagged.unionByName(intra).localCheckpoint(eager=True)
+    finally:
+        for df in (batch_asg, corpus_pin, survivors):
+            if df is not None:
+                df.unpersist()
     clean = batch0.join(
         flagged.select(F.col("batch_id").alias(id_col)).dropDuplicates(),
         id_col,

@@ -68,10 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from notion_vector_store_etl_pipeline_spark.operators.cache import (
-    memo_df,
-    release_cache,
-)
+from notion_vector_store_etl_pipeline_spark.operators.cache import memo_df
 from notion_vector_store_etl_pipeline_spark.operators.statefs import (
     batch_dirs,
     state_fs,
@@ -85,7 +82,6 @@ from notion_vector_store_etl_pipeline_spark.operators.dedup import (
     compact_lsh_index,
     jaccard_verify_sets,
     load_lsh_index,
-    load_lsh_index_bucketed,
     lsh_bucket_pairs,
     melted_signature_buckets,
     minhash_probe_candidates,
@@ -93,7 +89,6 @@ from notion_vector_store_etl_pipeline_spark.operators.dedup import (
     shingle_sets,
     signatures_from_sets,
     write_lsh_index,
-    write_lsh_index_bucketed,
 )
 from notion_vector_store_etl_pipeline_spark.sources.paginated import foreach_page_batch
 from notion_vector_store_etl_pipeline_spark.streaming.state import (
@@ -371,12 +366,9 @@ def compact_stream_state(
     out_dir: str,
     through_batch: int,
     base_index_path: str | None = None,
-    base_index_table: str | None = None,
     base_corpus_path: str | None = None,
     dense_bucket_cap: int | None = DENSE_BUCKET_CAP,
     keep: int = PROBE_DENSE_KEEP,
-    bucketed_table: str | None = None,
-    n_buckets: int = 32,
     prune_deltas: bool = False,
     retain_versions: int | None = None,
     major: bool = False,
@@ -395,9 +387,6 @@ def compact_stream_state(
     - index: ``compact_lsh_index`` over the current anchor (manifest
       version if any, else the base index) + the delta tail
       ``(prev_through, through_batch]`` -> ``index_versions/v{k}``.
-      With ``bucketed_table`` set, each version is also registered as
-      a bucketed TABLE ``{bucketed_table}_v{k}`` so the probe join
-      stays exchange-free on the index side across compactions.
     - corpus: the clean tail is rewritten ONCE into the
       ``corpus_versions/v=<k>`` PARTITION of a single versions root —
       additive (the base corpus and prior versions are never
@@ -458,6 +447,7 @@ def compact_stream_state(
     man, k = open_fold(spark, out_dir, through_batch)
     if k is None:
         return man
+    anchor = anchor_manifest(man, base_index_path, base_corpus_path)
     prev_through = watermark(man)
     delta_dirs = batch_dirs(
         state_fs(spark, out_dir), f"{out_dir}/index_delta", prev_through, through_batch + 1
@@ -479,9 +469,7 @@ def compact_stream_state(
         # have no verify text. The flag clears with this fold's own
         # manifest publish; a crash before that replays idempotent
         # deletes, never skips one.
-        vacuum_index_versions(
-            spark, out_dir, man["version"], man["version"] - pending + 1, bucketed_table
-        )
+        vacuum_index_versions(spark, out_dir, man["version"], man["version"] - pending + 1)
         vacuum_retired_corpus(spark, out_dir, pending)
     if (
         not major
@@ -524,10 +512,8 @@ def compact_stream_state(
             "params yields an index no probe signature can hit; pass the "
             "stream's own params"
         )
-    anchor = anchor_manifest(man, base_index_path, base_index_table, base_corpus_path)
     idx_out = f"{out_dir}/index_versions/v{k}"
     corpus_out = f"{out_dir}/corpus_versions/v={k}"
-    tbl = f"{bucketed_table}_v{k}" if bucketed_table else None
     window = read_prior_batches(
         spark,
         f"{out_dir}/clean",
@@ -566,25 +552,19 @@ def compact_stream_state(
                 dense_bucket_cap=dense_bucket_cap,
                 keep=keep,
             )
-            if tbl:
-                write_lsh_index_bucketed(idx, tbl, n_buckets, path=idx_out)
-            else:
-                write_lsh_index(idx, idx_out)
+            write_lsh_index(idx, idx_out)
         finally:
             cur.unpersist()
     else:
         compact_lsh_index(
             spark,
-            base_path=None if anchor["index_table"] else anchor["index_path"],
+            base_path=anchor["index_path"],
             delta_dir=f"{out_dir}/index_delta",
             out_path=idx_out,
             dense_bucket_cap=dense_bucket_cap,
             keep=keep,
             after_batch=prev_through,
             through_batch=through_batch,
-            bucketed_table=tbl,
-            n_buckets=n_buckets,
-            base_table=anchor["index_table"],
             delta_dirs=delta_dirs,
         )
         if window is not None:
@@ -631,8 +611,7 @@ def compact_stream_state(
                 sup.unpersist()
     manifest = {
         "version": k,
-        "index_path": None if tbl else idx_out,
-        "index_table": tbl,
+        "index_path": idx_out,
         "corpus_base": anchor["corpus_base"],
         "through_batch": through_batch,
         # a MAJOR fold sets the floor; minor folds carry it unchanged
@@ -664,7 +643,6 @@ def compact_stream_state(
         manifest,
         delta_dirs if prune_deltas else (),
         retain_versions=None if major else retain_versions,
-        bucketed_table=bucketed_table,
     )
 
 
@@ -691,14 +669,14 @@ def vacuum_retired_corpus(
 def _load_anchor_index(spark: SparkSession, manifest: dict) -> DataFrame:
     # memoized per anchor identity (operators.cache.memo_df): index
     # versions are write-once dirs named by the manifest they publish
-    # with, so the (path-or-table, version) key bumps on every fold and
-    # the eager parquet listing stops re-running per micro-batch
+    # with, so the (path, version) key bumps on every fold and the
+    # eager parquet listing stops re-running per micro-batch
     # (VERDICT r13 #1)
-    table, path = manifest.get("index_table"), manifest.get("index_path")
+    path = manifest["index_path"]
     return memo_df(
         spark,
-        ("anchor_index", table or path, manifest["version"]),
-        lambda: load_lsh_index_bucketed(spark, table) if table else load_lsh_index(spark, path),
+        ("anchor_index", path, manifest["version"]),
+        lambda: load_lsh_index(spark, path),
     )
 
 
@@ -793,18 +771,21 @@ def _load_anchor_corpus_uncached(
 
 
 def anchor_manifest(
-    manifest: dict | None,
-    index_path: str | None,
-    index_table: str | None,
-    corpus_path: str,
+    manifest: dict | None, index_path: str | None, corpus_path: str
 ) -> dict:
     """The dedup anchor: the published ``manifest``, or — before the
-    first fold — version 0 over the caller's stored index (``index_table``
-    wins over ``index_path``) and base corpus."""
+    first fold — version 0 over the caller's stored index and base
+    corpus. A manifest that anchors on a bucketed index TABLE (a layout
+    older builds could publish) is rejected before any index read."""
+    if manifest and manifest.get("index_table"):
+        raise ValueError(
+            f"dedup manifest version {manifest['version']} anchors on the bucketed "
+            f"index table {manifest['index_table']!r}; only the parquet index layout "
+            "(write_lsh_index) is supported — rebuild the index and restart the stream"
+        )
     return manifest or {
         "version": 0,
-        "index_path": None if index_table else index_path,
-        "index_table": index_table,
+        "index_path": index_path,
         "corpus_base": corpus_path,
         "through_batch": -1,
     }
@@ -847,7 +828,7 @@ def streaming_dedup_ingest(
     spark: SparkSession,
     source_path: str,
     corpus_path: str,
-    index_path: str | None,
+    index_path: str,
     out_dir: str,
     checkpoint_dir: str,
     threshold: float = 0.2,
@@ -857,9 +838,7 @@ def streaming_dedup_ingest(
     page_size: int = 100,
     pages_per_batch: int = 2,
     update_index: bool = True,
-    index_table: str | None = None,
     compact_every: int | None = None,
-    compact_bucketed_table: str | None = None,
     compact_prune_deltas: bool = False,
     compact_retain_versions: int | None = None,
     compact_major_every: int | None = None,
@@ -874,9 +853,7 @@ def streaming_dedup_ingest(
     checkpoint). ``corpus_path``: the existing corpus docs (text needed
     for exact verification). ``index_path``: the stored LSH index built
     from exactly that corpus (``build_lsh_index`` -> ``write_lsh_index``
-    — caller owns keeping the two in step, one "corpus version");
-    ``index_table`` anchors on a BUCKETED index table instead
-    (``write_lsh_index_bucketed``), the exchange-free probe layout.
+    — caller owns keeping the two in step, one "corpus version").
     Outputs under ``out_dir``: ``flagged/ingest_batch=N`` (near-dup
     pairs), ``clean/batch_id=N`` (surviving docs), ``index_delta/
     batch_id=N`` (the melted buckets of surviving docs, read back by
@@ -886,8 +863,7 @@ def streaming_dedup_ingest(
     ``compact_every=K``: every K-th batch folds committed state into
     the next compacted version (see :func:`compact_stream_state` and
     the module docstring) so per-batch cost stays O(batch + K) instead
-    of O(stream age). ``compact_bucketed_table`` keeps each compacted
-    index version bucketed. ``compact_retain_versions=N`` vacuums
+    of O(stream age). ``compact_retain_versions=N`` vacuums
     index versions superseded by more than N compactions (storage
     stays O(N x index), not O(stream age)).
     ``compact_major_every=M`` upgrades every M-th compaction to a
@@ -909,9 +885,7 @@ def streaming_dedup_ingest(
                 out_dir,
                 through_batch=batch_id - 1,
                 base_index_path=index_path,
-                base_index_table=index_table,
                 base_corpus_path=corpus_path,
-                bucketed_table=compact_bucketed_table,
                 prune_deltas=compact_prune_deltas,
                 retain_versions=compact_retain_versions,
                 major=upgrade_due(batch_id, compact_every, compact_major_every),
@@ -927,7 +901,7 @@ def streaming_dedup_ingest(
         index, docs = dedup_anchor_view(
             spark,
             out_dir,
-            anchor_manifest(man, index_path, index_table, corpus_path),
+            anchor_manifest(man, index_path, corpus_path),
             batch_id if update_index else None,
         )
         probed = probe_batch(
@@ -963,7 +937,6 @@ def streaming_dedup_ingest(
             probed[2].write.mode("overwrite").parquet(
                 f"{out_dir}/index_delta/batch_id={batch_id}"
             )
-        release_cache()
 
     return foreach_page_batch(
         spark, source_path, page_size, pages_per_batch, checkpoint_dir, _process

@@ -676,14 +676,13 @@ def streaming_ingest_etl(
     spark: SparkSession,
     source_path: str,
     corpus_path: str,
-    lsh_index_path: str | None,
+    lsh_index_path: str,
     ivf_index_path: str,
     out_dir: str,
     checkpoint_dir: str,
     threshold: float = 0.2,
     num_hashes: int = 32,
     bands: int = 8,
-    lsh_index_table: str | None = None,
     page_size: int = 100,
     pages_per_batch: int = 1,
     max_len: int = 400,
@@ -755,7 +754,6 @@ def streaming_ingest_etl(
                 out_dir,
                 through_batch=batch_id - 1,
                 base_index_path=lsh_index_path,
-                base_index_table=lsh_index_table,
                 base_corpus_path=corpus_path,
                 prune_deltas=compact_dedup_prune,
                 retain_versions=compact_dedup_retain,
@@ -838,7 +836,7 @@ def streaming_ingest_etl(
         lsh_index, corpus_docs = dedup_anchor_view(
             spark,
             out_dir,
-            anchor_manifest(dedup_man, lsh_index_path, lsh_index_table, corpus_path),
+            anchor_manifest(dedup_man, lsh_index_path, corpus_path),
             batch_id if update_index else None,
         )
         # resolve the IVF anchor through the ann tree's compaction

@@ -61,7 +61,7 @@ def state_file(root: str, name: str = "manifest.json") -> str:
 def read_compaction_manifest(root: str, spark: SparkSession | None = None) -> dict | None:
     """The manifest of state root ``root``, or ``None`` before the first
     fold: ``version`` (k), ``through_batch`` (the watermark) and the
-    stream's own anchor keys (index path/table, corpus base and floor,
+    stream's own anchor keys (index path, corpus base and floor,
     centroid and event watermarks). A scheme'd ``root`` (``s3a://…``)
     needs ``spark``; a present-but-corrupt manifest raises."""
     return read_json(state_fs(spark, root), state_file(root))
@@ -158,7 +158,6 @@ def publish_fold(
     manifest: dict,
     folded_dirs: list[str] | tuple = (),
     retain_versions: int | None = None,
-    bucketed_table: str | None = None,
 ) -> dict:
     """Last step of a fold whose version is written: publish
     ``manifest``, then delete ``folded_dirs`` (batch dirs whose rows the
@@ -170,7 +169,7 @@ def publish_fold(
     for d in folded_dirs:
         fs.delete_recursive(d)
     if retain_versions is not None:
-        vacuum_index_versions(spark, root, manifest["version"], retain_versions, bucketed_table)
+        vacuum_index_versions(spark, root, manifest["version"], retain_versions)
     return manifest
 
 
@@ -179,27 +178,24 @@ def vacuum_index_versions(
     out_dir: str,
     current_version: int,
     retain_versions: int,
-    bucketed_table: str | None = None,
 ) -> list[int]:
     """Delete superseded index versions ``j <= current_version -
     retain_versions`` under ``{out_dir}/index_versions`` (each index
     version contains everything its predecessors did — only the
     manifest-published latest is ever probed; retention > 1 keeps a
-    rollback margin). For bucketed compactions the versioned catalog
-    entry ``{bucketed_table}_v{j}`` is dropped too (its storage IS the
-    version dir, written via ``path=``, so the dir delete reclaims
-    it). Crash-safe by construction: only versions strictly below the
-    already-published manifest are touched, and re-running is an
-    idempotent no-op. Returns the vacuumed version numbers.
+    rollback margin). Crash-safe by construction: only versions
+    strictly below the already-published manifest are touched, and
+    re-running is an idempotent no-op. Returns the vacuumed version
+    numbers.
 
     A ``_compaction/vacuum.json`` watermark records the highest
     version already vacuumed, so each call probes only the versions
     ADDED since the last vacuum — without it every compaction would
-    re-issue exists()/DROP TABLE for every version ever retired, an
-    O(stream-age) per-compaction cost (~3k object-store probes a month
-    into a compact_every=10, 1k-batches/day stream). The watermark is
-    written AFTER the deletions: a crash between them replays a few
-    idempotent deletes on the next call, never skips one."""
+    re-issue exists() for every version ever retired, an O(stream-age)
+    per-compaction cost (~3k object-store probes a month into a
+    compact_every=10, 1k-batches/day stream). The watermark is written
+    AFTER the deletions: a crash between them replays a few idempotent
+    deletes on the next call, never skips one."""
     if retain_versions < 1:
         raise ValueError("retain_versions must be >= 1 (the live version)")
     fs = state_fs(spark, out_dir)
@@ -209,10 +205,7 @@ def vacuum_index_versions(
     gone = []
     for j in range(start, cut + 1):
         vdir = f"{out_dir}/index_versions/v{j}"
-        found = fs.exists(vdir)
-        if bucketed_table is not None:
-            spark.sql(f"DROP TABLE IF EXISTS {bucketed_table}_v{j}")
-        if found:
+        if fs.exists(vdir):
             fs.delete_recursive(vdir)
             gone.append(j)
     if cut >= start:

@@ -151,7 +151,7 @@ def main() -> int:
     # so the ratio is noisy in both directions — the mult*2.5 bound is a
     # coarse regression tripwire for grossly supralinear plans, not a
     # precise linearity proof; the per-operator scale claims rest on the
-    # dedicated smokes (blocked_neardup/ivf/probe_layout), not this sweep.
+    # dedicated smokes (blocked_neardup/ivf), not this sweep.
     for name, (small, big) in cases.items():
         small().count()  # warm
         t0 = time.perf_counter(); small().count(); t_small = time.perf_counter() - t0

@@ -18,9 +18,6 @@ next-round #1/#6). Options exercise the round-9 lifecycle pieces:
                         data rivals the corpus itself, which is what
                         makes the uncompacted run's O(stream-age)
                         data term visible inside a bounded smoke)
-    --bucketed          anchor on a BUCKETED index table
-                        (write_lsh_index_bucketed), the exchange-free
-                        probe layout
     --intra             also dedup within each micro-batch
 
 Prints one line per batch (batch id, docs, trigger seconds) plus the
@@ -61,7 +58,6 @@ def main() -> int:
             compact_every = int(f.split("=")[1])
         if f.startswith("--stream-frac="):
             stream_frac = int(f.split("=")[1])
-    bucketed = "--bucketed" in flags
     intra = "--intra" in flags
     prune = "--prune" in flags
 
@@ -94,16 +90,11 @@ def main() -> int:
         t0 = time.monotonic()
         index = D.build_lsh_index(corpus)
         index_path = f"{work}/lsh_index"
-        index_table = None
-        if bucketed:
-            index_table = "stream_smoke_idx"
-            D.write_lsh_index_bucketed(index, index_table, 32, path=index_path)
-        else:
-            D.write_lsh_index(index, index_path)
+        D.write_lsh_index(index, index_path)
         build_s = time.monotonic() - t0
         print(
             f"corpus={n_corpus} stream={n_stream} batches={n_batches} "
-            f"page={page_size} bucketed={bucketed} compact_every={compact_every} "
+            f"page={page_size} compact_every={compact_every} "
             f"intra={intra} index_build_s={build_s:.2f}"
         )
 
@@ -112,15 +103,13 @@ def main() -> int:
             spark,
             stream_file,
             corpus_path,
-            None if bucketed else index_path,
+            index_path,
             out,
             ckpt,
             page_size=page_size,
             pages_per_batch=1,
             update_index=True,
-            index_table=index_table,
             compact_every=compact_every,
-            compact_bucketed_table=("stream_smoke_cidx" if bucketed else None),
             compact_prune_deltas=prune,
             intra_batch=intra,
         )
@@ -160,7 +149,6 @@ def main() -> int:
             "n_stream": n_stream,
             "n_batches": len(series),
             "page_size": page_size,
-            "bucketed": bucketed,
             "compact_every": compact_every,
             "prune": prune,
             "intra": intra,
@@ -182,10 +170,6 @@ def main() -> int:
         print(json.dumps(summary))
         return 0
     finally:
-        if bucketed:
-            for t in spark.catalog.listTables():
-                if t.name.startswith("stream_smoke"):
-                    spark.sql(f"DROP TABLE IF EXISTS {t.name}")
         shutil.rmtree(work, ignore_errors=True)
         spark.stop()
 

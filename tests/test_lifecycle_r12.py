@@ -8,6 +8,8 @@
 - a MAJOR rebuild on a manifest that predates the ``signature`` field is
   guarded by a bucket-reproduction probe instead of silently trusting
   the caller's params;
+- a published manifest that anchors on a bucketed index table (a
+  layout older builds wrote) is rejected before any index read;
 - the major fold's physical below-floor vacuum is deferred one fold
   cycle (out-of-process readers keep a read margin) — the deferred-
   delete pins themselves live in test_ingest_pipeline_r11b.py's major
@@ -26,6 +28,7 @@ from notion_vector_store_etl_pipeline_spark.operators import dedup as D
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
     _load_anchor_corpus,
     _load_anchor_index,
+    anchor_manifest,
     compact_stream_state,
     latest_committed_batch,
     read_compaction_manifest,
@@ -245,6 +248,36 @@ def test_presignature_assume_signature_override(spark, tmp_path):
     )
     assert man2 is not None and man2["corpus_floor"] == man2["version"]
     D.release_cache()
+
+
+def test_legacy_bucketed_table_manifest_rejected(spark, tmp_path):
+    """State written by older builds may hold a published manifest that
+    anchors on a bucketed index TABLE, a layout no longer read. Both
+    the fold and the anchor read reject it with a ValueError naming the
+    version and the table, before any index read (the plain loader
+    would otherwise fail on the manifest's null ``index_path``)."""
+    out = str(tmp_path / "out")
+    legacy = {
+        "version": 3,
+        "index_path": None,
+        "index_table": "lsh_cidx_v3",
+        "corpus_base": str(tmp_path / "corpus"),
+        "through_batch": 5,
+        "corpus_floor": 0,
+        "signature": [32, 8, False],
+        "superseded_rows": 0,
+    }
+    write_manifest(out, legacy, spark)
+    index_path = str(tmp_path / "lsh_index")
+    with pytest.raises(ValueError, match=r"version 3 .*'lsh_cidx_v3'"):
+        compact_stream_state(
+            spark, out, through_batch=9,
+            base_index_path=index_path, base_corpus_path=legacy["corpus_base"],
+        )
+    with pytest.raises(ValueError, match=r"version 3 .*'lsh_cidx_v3'"):
+        anchor_manifest(
+            read_compaction_manifest(out, spark), index_path, legacy["corpus_base"]
+        )
 
 
 @pytest.mark.slow

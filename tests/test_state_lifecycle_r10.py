@@ -295,6 +295,51 @@ def test_probe_batch_releases_its_own_caches(spark):
     assert len(c) + len({r.batch_id for r in f}) == batch.count()
 
 
+def test_probe_vector_batch_releases_its_pins(spark, monkeypatch):
+    """The embedding probe's three pins (the assigned batch, the
+    fresh-assigned corpus side, the intra-batch survivors) must not
+    outlive the call, on return AND when the call raises mid-probe.
+    A bare corpus with ``intra_batch=True`` takes all three. What may
+    survive are localCheckpoint blocks only (the probe's flagged frames
+    and the sequential peel's rounds), never a persist()."""
+    import numpy as np
+
+    from notion_vector_store_etl_pipeline_spark.operators import similarity
+    from notion_vector_store_etl_pipeline_spark.streaming.ann_stream import (
+        probe_vector_batch,
+    )
+
+    schema = "vec_id: long, emb: array<double>"
+    batch = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.99, 0.1]), (3, [0.0, 1.0])], schema
+    )
+    # one corpus vector in each IVF list, near-dup of no batch vector
+    corpus = spark.createDataFrame([(100, [-1.0, 0.0]), (101, [0.0, -1.0])], schema)
+    cent_ids = np.array([0, 1], dtype=np.int64)
+    cent_mat = np.array([[1.0, 0.0], [0.0, 1.0]])
+
+    def pinned_rdds() -> int:
+        # cached RDDs that are not (local) checkpoints: persist() pins
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return sum(not r.rdd().isCheckpointed() for r in rdds)
+
+    before = pinned_rdds()
+    flagged, clean = probe_vector_batch(
+        batch, corpus, cent_ids, cent_mat, 0.5, probes=1, intra_batch=True
+    )
+    assert pinned_rdds() == before
+    assert sorted((r.batch_id, r.corpus_id) for r in flagged.collect()) == [(2, 1)]
+    assert sorted(r.vec_id for r in clean.collect()) == [1, 3]
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("intra stage failed")
+
+    monkeypatch.setattr(similarity, "cosine_selfjoin_pairs", boom)
+    with pytest.raises(RuntimeError, match="intra stage failed"):
+        probe_vector_batch(batch, corpus, cent_ids, cent_mat, 0.5, probes=1, intra_batch=True)
+    assert pinned_rdds() == before
+
+
 def test_vacuum_watermark_bounds_rescans(spark, tmp_path, monkeypatch):
     """The vacuum.json watermark (r10 review finding 6): each call
     probes only versions added since the last vacuum — the watermark
