@@ -19,9 +19,13 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from notion_vector_store_etl_pipeline_spark.pipeline import PipelineResult
 
 TRUTHY = {"1", "true", "yes", "y", "on"}  # reference parse_bool (`:52-55`)
 
@@ -120,6 +124,7 @@ def load_state(spark: SparkSession, path: str) -> DataFrame:
         STATE_COLUMNS,
         recover_state,
     )
+    from notion_vector_store_etl_pipeline_spark.session import empty_frame
 
     schema = (
         "block_id BIGINT, prior_let STRING, prior_hash STRING, "
@@ -133,12 +138,12 @@ def load_state(spark: SparkSession, path: str) -> DataFrame:
     recover_state(path, spark=spark)
     missing = not os.path.exists(path) if "://" not in path else False
     if missing:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     try:
         return spark.read.parquet(path).select(*STATE_COLUMNS)
     except Exception as exc:  # remote FS: only PATH_NOT_FOUND means missing
         if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         raise
 
 
@@ -193,6 +198,32 @@ def run_streaming(spark: SparkSession, args) -> int:
     return 0
 
 
+def count_run(result: PipelineResult, dry_run: bool = False) -> dict[str, int]:
+    """Persist the frames the run's actions share and count its summary.
+
+    ``to_process`` (the snapshot⋈state join with its content hash) feeds
+    the processed count, the stale set, the chunker and the state
+    commit; ``chunk_rows`` (the chunker output) feeds the chunk count,
+    the JSONL records and the state commit's chunk-id lists. Persisting
+    the two runs the join and the chunker once per run; the caller
+    unpersists them. The skip count reads ``joined``, which Catalyst
+    prunes to its key columns (no text read, no hash computed); it is
+    exact because ``to_skip`` is never NULL. A dry run counts processed
+    and skipped only and persists nothing.
+    """
+    plan = result.plan
+    if not dry_run:
+        plan.to_process.persist()
+    n_process = plan.to_process.count()
+    counts = {"processed": n_process, "skipped": plan.joined.count() - n_process}
+    if dry_run:
+        return counts
+    result.chunk_rows.persist()
+    counts["chunks"] = result.chunk_rows.count()
+    counts["stale_vectors"] = result.stale_vectors.count()
+    return counts
+
+
 def main(argv: list[str] | None = None) -> int:
     from notion_vector_store_etl_pipeline_spark import get_spark
     from notion_vector_store_etl_pipeline_spark.operators.incremental import commit_state
@@ -245,26 +276,24 @@ def main(argv: list[str] | None = None) -> int:
 
     state = load_state(spark, args.state_path)
     result = run_pipeline(snapshot, state, max_len=args.chunk_char_len)
-
-    # several actions consume the same upstream plan (counts, the JSONL
-    # write, the state commit) — persist the two shared frames so the
-    # snapshot/state join and the chunker run once, not per action
-    result.plan.to_process.persist()
-    result.records.persist()
-    n_process = result.plan.to_process.count()
-    n_skip = result.plan.to_skip.count()
-    if dry_run:  # discover without processing (`:746-748`)
-        print(f"[dry-run] would process {n_process} files, skip {n_skip} (unchanged)")
-        return 0
-
-    n_chunks = result.records.count()
-    n_stale = result.stale_vectors.count()
-    write_chunks_jsonl(result.records, args.output_dir)
-    commit_state(result.next_state, args.state_path)
+    try:
+        counts = count_run(result, dry_run)
+        if dry_run:  # discover without processing (`:746-748`)
+            print(
+                f"[dry-run] would process {counts['processed']} files, "
+                f"skip {counts['skipped']} (unchanged)"
+            )
+            return 0
+        write_chunks_jsonl(result.records, args.output_dir)
+        commit_state(result.next_state, args.state_path)
+    finally:
+        result.chunk_rows.unpersist()
+        result.plan.to_process.unpersist()
     # the reference's run summary (`:771-776`)
     print(
-        f"processed={n_process} skipped={n_skip} chunks={n_chunks} "
-        f"stale_vectors={n_stale} state={args.state_path} output={args.output_dir}"
+        f"processed={counts['processed']} skipped={counts['skipped']} "
+        f"chunks={counts['chunks']} stale_vectors={counts['stale_vectors']} "
+        f"state={args.state_path} output={args.output_dir}"
     )
     return 0
 

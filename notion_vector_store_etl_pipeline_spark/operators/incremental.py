@@ -89,14 +89,14 @@ def plan_increment(snapshot: DataFrame, state: DataFrame) -> IncrementPlan:
     # the reference's cache-hit check (`:691-694`) returns before the
     # needs-vector branch, so a skipped row (let unchanged + has ids)
     # NEVER deletes its live vectors — even when its stored hash
-    # differs. Without the ~to_skip guard such a row lands in to_skip
-    # (state keeps its ids, doc never reprocessed) AND in the delete
-    # set: permanently dangling document.
+    # differs. Deriving the set from `to_process` keeps such a row out
+    # (it would otherwise land in to_skip, keeping its ids in state, AND
+    # in the delete set: a permanently dangling document), and lets a
+    # caller that persists `to_process` count the set from that cache
+    # instead of re-running the join.
     stale = (
-        flagged.filter(
-            F.col("needs_vector")
-            & ~F.col("to_skip")
-            & (_n_ids(F.col("vector_file_ids")) > 0)
+        to_process.filter(
+            F.col("needs_vector") & (_n_ids(F.col("vector_file_ids")) > 0)
         )
         .select("block_id", F.explode("vector_file_ids").alias("stale_vector_id"))
     )

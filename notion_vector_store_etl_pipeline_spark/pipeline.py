@@ -40,6 +40,7 @@ from notion_vector_store_etl_pipeline_spark.operators.sinks import chunk_records
 class PipelineResult:
     plan: IncrementPlan
     chunks: DataFrame       # chunked records for to-process rows
+    chunk_rows: DataFrame   # chunker output without the document text
     records: DataFrame      # upload-shaped records (id, text, metadata)
     next_state: DataFrame   # state after upsert
     stale_vectors: DataFrame
@@ -60,19 +61,25 @@ def run_pipeline(
 
     # keep every snapshot column (callers may carry labels through),
     # drop the state/flag columns the join added
-    to_process = plan.to_process.drop(
+    docs = plan.to_process.drop(
         "prior_let", "prior_hash", "vector_file_ids", "to_skip", "needs_vector"
     )
-    if extract is not None:
-        to_process = extract(to_process)
+    to_process = extract(docs) if extract is not None else docs
 
     chunks = explode_chunks(to_process, text_col="text", max_len=max_len)
     chunks = chunks.withColumn(
         "chunk_id",
         chunk_id(F.col("src"), F.col("content_hash"), F.col("chunk_index")),
     ).withColumnRenamed("src", "source")
+    # records and the per-doc chunk-id lists both derive from this one
+    # narrow projection, so a caller that persists it runs extract and
+    # the chunker once; it leaves out the document text, which `chunks`
+    # would repeat once per chunk
+    chunk_rows = chunks.select(
+        "block_id", "chunk_id", "chunk_index", "source", "content_hash", "chunk_text"
+    )
 
-    records = chunk_records(chunks, ingested_at=ingested_at)
+    records = chunk_records(chunk_rows, ingested_at=ingested_at)
 
     # state is recorded for EVERY processed doc, not just docs that
     # produced chunks — the reference writes its manifest entry
@@ -81,12 +88,14 @@ def run_pipeline(
     # (empty/whitespace text) out of the upsert: its OLD state row
     # survived, still claiming the hash and vector ids of the previous
     # version, so every later run re-emitted the same already-deleted
-    # ids as stale and reprocessed the doc forever (r10 review).
-    chunk_ids_per_doc = chunks.groupBy("block_id").agg(
+    # ids as stale and reprocessed the doc forever (r10 review). The
+    # doc keys come from `docs`, before extract, so the state side
+    # never re-runs that stage.
+    chunk_ids_per_doc = chunk_rows.groupBy("block_id").agg(
         F.sort_array(F.collect_list("chunk_id")).alias("vector_file_ids")
     )
     processed = (
-        to_process.select(
+        docs.select(
             "block_id",
             F.col("let").alias("prior_let"),
             F.col("content_hash").alias("prior_hash"),
@@ -102,6 +111,7 @@ def run_pipeline(
     return PipelineResult(
         plan=plan,
         chunks=chunks,
+        chunk_rows=chunk_rows,
         records=records,
         next_state=next_state,
         stale_vectors=plan.stale_vectors,

@@ -58,13 +58,14 @@ def register(name: str, oracle: Optional[str] = None, doc: str = ""):
 # vintage first, then r4), recomputed each round from the
 # CORRECTNESS_r0*.json files.
 _PRIORITY = (
-    # (a) operators changed since the last driver rows (8): the minhash
+    # (a) operators changed since their last proof rows (9): the minhash
     # family because minhash_lsh_candidates now pairs buckets from one
     # (band, bucket) aggregation and the verify shares its set math
     # with the stream probe (jaccard_verify_sets); the r15-changed trio
     # (ngram_jaccard_selfjoin's single-window stop-shingle cap, the
     # components/BFS driver loop, pagerank's primed caches) that never
-    # got its after-change proof row.
+    # got its after-change proof row; stale_detect, whose delete set
+    # plan_increment now derives from to_process.
     "dedup_chain_sequential",
     "minhash_lsh_neardup",
     "minhash_neardup_components",
@@ -73,9 +74,11 @@ _PRIORITY = (
     "ngram_jaccard_selfjoin",
     "graph_reachability",
     "graph_pagerank",
+    "stale_detect",
     # (b) oldest proof rows first (scripts/coverage_manifest.py after
-    # round 15): the whole remaining round-11 vintage (32 names, age 4
-    # — at the budget), so after this window the oldest proof is r12.
+    # round 15): the whole remaining round-11 vintage (31 names here
+    # plus stale_detect in (a), age 4 — at the budget), so after this
+    # window the oldest proof is r12.
     "knn_topk",
     "lateral_top_item",
     "levenshtein_neardup_titles",
@@ -100,7 +103,6 @@ _PRIORITY = (
     "simhash_buckets",
     "simhash_neardup",
     "sort_topk",
-    "stale_detect",
     "state_load",
     "topk_per_group",
     "tpch_q15_top_supplier",

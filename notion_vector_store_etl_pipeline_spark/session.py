@@ -15,7 +15,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -41,3 +43,22 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def empty_frame(spark: SparkSession, schema: StructType | str) -> DataFrame:
+    """A typed empty frame built in the JVM.
+
+    ``spark.createDataFrame`` over an empty Python list parallelizes it:
+    a ``Scan ExistingRDD`` of unknown size that costs a job with Python
+    workers and that the optimizer cannot reason about. A
+    typed-null projection of ``range(1)`` under a false filter is an
+    empty ``LocalRelation`` to Catalyst instead, so joins and unions
+    against it fold away (``PropagateEmptyRelation``).
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return (
+        spark.range(1)
+        .where(F.lit(False))
+        .select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields])
+    )

@@ -200,8 +200,10 @@ def read_store(spark, path: str):
     if not files:
         from pyspark.sql.types import StringType, StructField, StructType
 
+        from notion_vector_store_etl_pipeline_spark.session import empty_frame
+
         schema = StructType(
             [StructField(f, StringType()) for f in manifest.get("fields", [])]
         )
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     return spark.read.json(files)

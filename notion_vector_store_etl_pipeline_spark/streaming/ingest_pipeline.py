@@ -102,6 +102,7 @@ from notion_vector_store_etl_pipeline_spark.operators.statefs import (
     state_fs,
     write_json_atomic,
 )
+from notion_vector_store_etl_pipeline_spark.session import empty_frame
 from notion_vector_store_etl_pipeline_spark.sources.paginated import foreach_page_batch
 from notion_vector_store_etl_pipeline_spark.streaming.ann_stream import (
     fold_ann_state,
@@ -937,8 +938,7 @@ def streaming_ingest_etl(
                 .dropDuplicates()
             )
         else:
-            stale = spark.createDataFrame([], "vec_id long")
-            revive = spark.createDataFrame([], "vec_id long")
+            stale = revive = empty_frame(spark, "vec_id long")
         stale.write.mode("overwrite").parquet(
             f"{out_dir}/stale/batch_id={batch_id}"
         )

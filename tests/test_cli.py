@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import pathlib
+import re
 
 import pytest
 
@@ -66,6 +67,94 @@ def test_cli_max_files_limit(spark, tmp_path, capsys):
         "--state-path", state, "--dry-run", "--max-files", "7",
     )
     assert "would process 7" in line
+
+
+# A tiny corpus for exact summary counts: line lengths are chosen so
+# that, at --chunk-char-len 40, doc 1 packs into several chunks and
+# doc 3 (whitespace only) into none. A zero-chunk doc has no vector ids,
+# so the skip rule (state + unchanged let + ids) never holds for it and
+# every run reprocesses it.
+CHUNK_LEN = 40
+V0 = {i: f"doc {i} line one\ndoc {i} line two" for i in range(12)}
+V0[1] = "\n".join(f"doc 1 line {k} with some padding words" for k in range(5))
+V0[3] = "   \n  \n "
+EDITED = (1, 5)
+ADDED = 12
+V1 = dict(V0)
+V1[1] = V0[1] + "\nan added last line for the edit"
+V1[5] = "doc 5 now has new text"
+V1[ADDED] = "a new doc\nwith two lines"
+
+
+def _write_docs(data_dir, texts: dict[int, str]) -> str:
+    import pandas as pd
+
+    data_dir.mkdir()
+    ids = sorted(texts)
+    pd.DataFrame(
+        {
+            "doc_id": pd.Series(ids, dtype="int64"),
+            "source": [f"src{i}" for i in ids],
+            "text": [texts[i] for i in ids],
+            "lang": ["en"] * len(ids),
+        }
+    ).to_parquet(data_dir / "documents.parquet", index=False)
+    return str(data_dir)
+
+
+SUMMARY = re.compile(r"processed=(\d+) skipped=(\d+) chunks=(\d+) stale_vectors=(\d+)")
+DRY = re.compile(r"would process (\d+) files, skip (\d+)")
+
+
+def _counts(line: str, pattern: re.Pattern) -> tuple[int, ...]:
+    m = pattern.search(line)
+    assert m, line
+    return tuple(int(x) for x in m.groups())
+
+
+def test_cli_summary_counts_exact(spark, tmp_path, capsys):
+    """All four summary numbers of a cold load, of a rerun after 2 edits
+    and 1 new doc, and of a dry run, against counts computed from the
+    chunker kernel."""
+    from notion_vector_store_etl_pipeline_spark.operators.chunker import greedy_chunk_text
+
+    def n_chunks(text):
+        return len(greedy_chunk_text(text, CHUNK_LEN))
+
+    assert n_chunks(V0[1]) > 1 and n_chunks(V0[3]) == 0
+    v0 = _write_docs(tmp_path / "v0", V0)
+    v1 = _write_docs(tmp_path / "v1", V1)
+    state = str(tmp_path / "state")
+    common = ("--state-path", state, "--chunk-char-len", str(CHUNK_LEN))
+
+    line = _run(capsys, "--data-dir", v0, "--output-dir", str(tmp_path / "o0"), *common)
+    assert _counts(line, SUMMARY) == (len(V0), 0, sum(map(n_chunks, V0.values())), 0)
+
+    redo = (*EDITED, ADDED, 3)  # the zero-chunk doc is redone every run
+    line = _run(capsys, "--data-dir", v1, "--output-dir", str(tmp_path / "o1"), *common)
+    assert _counts(line, SUMMARY) == (
+        len(redo),
+        len(V1) - len(redo),
+        sum(n_chunks(V1[i]) for i in redo),
+        sum(n_chunks(V0[i]) for i in EDITED),  # the edited docs' old chunk ids
+    )
+
+    line = _run(capsys, "--data-dir", v1, "--dry-run", *common)
+    assert _counts(line, DRY) == (1, len(V1) - 1)
+
+
+def test_cli_releases_its_caches(spark, tmp_path, capsys):
+    """A normal run and a dry run leave the session's persisted RDDs as
+    they found them: the frames the CLI persists are released on every
+    return path."""
+    data = _write_docs(tmp_path / "v0", V0)
+    def persisted() -> int:  # the map is a snapshot: re-read it each time
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    for extra in (("--output-dir", str(tmp_path / "o")), ("--dry-run",)):
+        before = persisted()
+        _run(capsys, "--data-dir", data, "--state-path", str(tmp_path / "state"), *extra)
+        assert persisted() == before, extra
 
 
 HEX = "0123456789abcdef0123456789abcdef"

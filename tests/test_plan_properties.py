@@ -147,3 +147,55 @@ def test_winnowing_hash_array_materialized_once(spark):
     two projections and the hashing goes O(n_words^2) per document."""
     plan = plan_of(spark, "winnowing_fingerprint")
     assert plan.count("md5") == 1, plan[:4000]
+
+
+def _executed_nodes(df) -> list[str]:
+    """One-line strings of the physical operators a fresh action on
+    ``df`` runs. An ``InMemoryTableScan`` is a leaf here: the plan of a
+    cached relation ran when the cache filled, not in this action."""
+    stack = [df.select("*")._jdf.queryExecution().executedPlan()]
+    out = []
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        out.append(node.simpleString(100))
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_batch_cli_run_hashes_and_chunks_once(spark, tmp_path, capsys):
+    """The batch CLI's plans (PLANS.md "batch CLI run"): with no state
+    the snapshot⋈state join folds away; once ``count_run`` has persisted
+    its two frames, the records and the state commit read the chunker
+    output from cache, and the stale count reads ``to_process`` instead
+    of re-scanning (and re-hashing) the documents."""
+    from notion_vector_store_etl_pipeline_spark.__main__ import (
+        build_snapshot,
+        count_run,
+        load_state,
+        main,
+    )
+    from notion_vector_store_etl_pipeline_spark.pipeline import run_pipeline
+
+    state = str(tmp_path / "state")
+    cold = run_pipeline(build_snapshot(spark, SF_SMOKE), load_state(spark, state))
+    nodes = _executed_nodes(cold.plan.to_process)
+    assert not [n for n in nodes if "Join" in n or "ExistingRDD" in n], nodes
+
+    assert main(["--data-dir", SF_SMOKE, "--state-path", state,
+                 "--output-dir", str(tmp_path / "out")]) == 0
+    capsys.readouterr()
+    rerun = run_pipeline(build_snapshot(spark, SF_SMOKE), load_state(spark, state))
+    try:
+        count_run(rerun)
+        for name, df in (("records", rerun.records), ("next_state", rerun.next_state)):
+            nodes = _executed_nodes(df)
+            assert not [n for n in nodes if "ArrowEvalPython" in n], (name, nodes)
+        nodes = _executed_nodes(rerun.stale_vectors.groupBy().count())
+        assert not [n for n in nodes if "documents.parquet" in n], nodes
+    finally:
+        rerun.chunk_rows.unpersist()
+        rerun.plan.to_process.unpersist()
