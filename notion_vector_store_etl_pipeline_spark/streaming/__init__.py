@@ -1,7 +1,3 @@
-from notion_vector_store_etl_pipeline_spark.streaming.windows import stream_tumbling_counts
-from notion_vector_store_etl_pipeline_spark.streaming.incremental_stream import (
-    incremental_foreach_batch,
-)
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
     probe_batch,
     streaming_dedup_ingest,
@@ -10,22 +6,10 @@ from notion_vector_store_etl_pipeline_spark.streaming.ann_stream import (
     load_stream_ann_state,
     streaming_vector_ingest,
 )
-from notion_vector_store_etl_pipeline_spark.streaming.enrich import (
-    stream_dedup_first_wins,
-    stream_static_enrich,
-    stream_stream_interval_join,
-    stream_status_counts,
-)
 
 __all__ = [
     "probe_batch",
     "streaming_dedup_ingest",
     "streaming_vector_ingest",
     "load_stream_ann_state",
-    "stream_tumbling_counts",
-    "incremental_foreach_batch",
-    "stream_static_enrich",
-    "stream_stream_interval_join",
-    "stream_dedup_first_wins",
-    "stream_status_counts",
 ]

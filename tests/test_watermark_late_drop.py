@@ -1,81 +1,11 @@
-"""Watermark late-data semantics (SURVEY §2.10): an event that arrives
-AFTER the watermark has passed its window must be dropped — that drop
-is what bounds streaming state on an unbounded input.
-
-Batch structure (maxFilesPerTrigger=1, distinct file mod-times):
-  batch 0: three events in hour-0
-  batch 1: an hour-6 event (advances the watermark to 04:00...)
-  batch 2: spacer (...which takes effect ONE BATCH LATER: Spark applies
-           the watermark computed from batch N at the start of batch
-           N+2 — hour-0's window is evicted/emitted HERE with count 3)
-  batch 3: a LATE hour-0 event (dropped: its window is finalized) and a
-           fresh hour-6 event (absorbed into the still-open window)
-Append mode must emit hour-0 exactly once with count 3, and never emit
-the still-open hour-6 window.
+"""Watermark semantics (SURVEY §2.10): a watermarked stream emits only
+windows the watermark has closed — that withholding is what bounds
+streaming state on an unbounded input.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-
-from pyspark.sql import Row, functions as F
-
-from notion_vector_store_etl_pipeline_spark.streaming import stream_tumbling_counts
-
-# FileStreamSource orders files by modification time; stamping each
-# batch's files with an explicit, widely spaced mtime makes the batch
-# order deterministic regardless of filesystem timestamp granularity or
-# scheduler variance (and removes the 1.1s sleeps this test used to
-# rely on).
-_MTIME_BASE = 1_700_000_000  # any fixed epoch; only relative order matters
-_MTIME_STEP = 60
-
-
-def _write(spark, src, rows, stamped={}):
-    df = spark.createDataFrame(
-        [Row(ts=ts, event_type="click", value=1.0) for ts in rows]
-    ).select(F.to_timestamp("ts").alias("ts"), "event_type", "value")
-    df.coalesce(1).write.mode("append").parquet(src)
-    batch = len(stamped.setdefault(src, []))
-    mtime = _MTIME_BASE + batch * _MTIME_STEP
-    for f in glob.glob(os.path.join(src, "*.parquet")):
-        if f not in stamped[src]:
-            os.utime(f, (mtime, mtime))
-            stamped[src].append(f)
-
-
-def test_late_event_beyond_watermark_is_dropped(spark, tmp_path):
-    src = str(tmp_path / "src")
-    _write(spark, src, ["2024-06-01 00:10:00", "2024-06-01 00:20:00", "2024-06-01 00:30:00"])
-    _write(spark, src, ["2024-06-01 06:00:00"])
-    _write(spark, src, ["2024-06-01 06:10:00"])  # spacer: watermark now live
-    _write(spark, src, ["2024-06-01 00:40:00", "2024-06-01 06:30:00"])
-
-    schema = "ts timestamp, event_type string, value double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = stream_tumbling_counts(stream, watermark="2 hours")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("late_drop")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    rows = spark.sql("SELECT * FROM late_drop").collect()
-    got = {str(r.window_start): r.n_events for r in rows}
-    # hour-0 finalized before the late 00:40 event arrived -> 3, not 4
-    assert got.get("2024-06-01 00:00:00") == 3, got
-    # emitted exactly once (no re-emission when the late row was dropped)
-    assert len(rows) == len(got), rows
-    # hour-6 is still open at end-of-input; append mode must not emit it
-    assert "2024-06-01 06:00:00" not in got, got
+from pyspark.sql import functions as F
 
 
 def test_streaming_session_window_subset_of_batch(spark, tmp_path):
