@@ -847,7 +847,7 @@ def rebuild_ivf_index(
     so a shifted ingest stream crowds its vectors into the few lists
     nearest the old distribution; at fixed n_probes the probe then
     scans a shrinking fraction of the true neighbors and recall
-    decays (measured in scripts/rebuild_smoke.py). The rebuild:
+    decays (recorded in SCALE_SMOKE_R10.md §1). The rebuild:
 
     1. resample centroids from base ∪ deltas (the union's OWN
        ``id % sample_mod`` carve-out — new-population vectors are now

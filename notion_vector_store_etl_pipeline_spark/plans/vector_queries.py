@@ -529,7 +529,7 @@ def _ivf_rebuilt_neighbors(spark: SparkSession, sf_dir: str, qb=None) -> DataFra
     ``rebuild_ivf_index``: resample centroids from the UNION and
     reassign every vector — the periodic refresh that stops a shifted
     ingest distribution from crowding into the old centroids' lists
-    (recall decay measured in scripts/rebuild_smoke.py; rebuilt ≡
+    (recall decay recorded in SCALE_SMOKE_R10.md §1; rebuilt ≡
     fresh-on-union pinned in tests/test_ann_recall.py). The whole
     chain (base, delta, rebuild) is memoized as one stored artifact —
     per-run cost is the pruned probe of the REBUILT index alone, the

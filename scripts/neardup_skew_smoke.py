@@ -20,7 +20,7 @@ plus ONE template cluster of `n_hot` vectors at sigma=0.01 around a
 single point, fixed seed. Centroids are carved from the BASE only —
 the realistic hot-list situation is a sidecar built BEFORE the
 template flood arrives (the same stale-centroid scenario
-rebuild_smoke.py measures for recall; between rebuilds, THIS guard is
+SCALE_SMOKE_R10.md §1 records for recall; between rebuilds, THIS guard is
 what keeps per-task memory bounded). A carve-out over the full
 population would sample centroids inside the cluster and dilute it
 (first version of this smoke measured exactly that: top list 1,638).
