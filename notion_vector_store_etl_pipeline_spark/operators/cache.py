@@ -78,7 +78,7 @@ def release_cache() -> None:
 # reads (folded index version, corpus versions, folded skip state)
 # every micro-batch pays that listing ~6x per batch even when the
 # compaction watermark has not moved (measured: ~1.5 s of the ~12 s
-# fixed per-batch overhead, scripts/profile_stream_batch.py).
+# fixed per-batch overhead, SCALE_SMOKE_R14.md §1).
 #
 # Soundness contract: callers key each entry on the inputs' VERSION —
 # the compaction-manifest version whose trees are write-once by the

@@ -608,7 +608,7 @@ def _read_ivf_vectors(spark, path: str) -> DataFrame:
 # load_ivf_index once per micro-batch against an anchor path that only
 # changes at fold/rebuild boundaries, and the sidecar collect is a
 # full Spark job (~1 s of the measured ~12 s fixed per-batch overhead,
-# scripts/profile_stream_batch.py). Reuse is gated on the sidecar
+# SCALE_SMOKE_R14.md §1). Reuse is gated on the sidecar
 # dir's file snapshot (name/mtime/length via the path's own Hadoop
 # FileSystem — the bloom sketch memo's discipline, operators/bloom.py):
 # index versions are write-once dirs, so an equal snapshot means equal
