@@ -44,17 +44,6 @@ def safe_filename(name: Column, fallback: str = "file") -> Column:
     return F.coalesce(F.nullif(base, F.lit("")), F.lit(fallback))
 
 
-def ensure_extension(filename: Column, url: Column) -> Column:
-    """Extension repair (`:171-179`): if the filename has no '.', borrow
-    the extension of the url basename when it has one."""
-    url_base = F.coalesce(url_basename(url), F.lit(""))
-    url_ext = F.when(url_base.contains("."), F.element_at(F.split(url_base, r"\."), -1))
-    return F.when(
-        ~filename.contains(".") & url_ext.isNotNull(),
-        F.concat_ws(".", filename, url_ext),
-    ).otherwise(filename)
-
-
 def normalize_uuid(raw: Column) -> Column:
     """Strip hyphens; if exactly 32 hex chars, re-hyphenate 8-4-4-4-12,
     else NULL (the reference raises, `:72-76`; NULL is the relational

@@ -34,19 +34,10 @@ def regex_tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(TOKEN_PATTERN), 0)
 
 
-def token_count(text: Column) -> Column:
-    return F.size(ws_tokens(text))
-
-
 def stopword_ratio(text: Column) -> Column:
     toks = ws_tokens(F.lower(text))
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
     return n_stop.cast("double") / F.nullif(F.size(toks).cast("double"), F.lit(0.0))
-
-
-def punct_ratio(text: Column) -> Column:
-    n_punct = F.length(F.regexp_replace(text, "[^!-/:-@\\[-`{-~]", ""))
-    return n_punct.cast("double") / F.nullif(F.length(text).cast("double"), F.lit(0.0))
 
 
 def marker_hits(text: Column, markers: tuple[str, ...]) -> Column:

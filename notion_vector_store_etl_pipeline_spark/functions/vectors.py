@@ -33,11 +33,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
 
 
-def cosine_f(a: Column, b: Column) -> Column:
-    """Cosine over raw float arrays (casts to double first)."""
-    return cosine(as_double(a), as_double(b))
-
-
 def hash_embedding(text: Column, dim: int = 8) -> Column:
     """Deterministic stand-in embedding: ``dim`` (<= 8) doubles in
     [-1, 1), each carved from 8 hex chars of sha2(text). The composed
