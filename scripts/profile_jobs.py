@@ -20,6 +20,7 @@ import json
 import os
 import sys
 import time
+import urllib.error
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -58,6 +59,20 @@ def rest(app_id: str, path: str):
         return json.loads(r.read())
 
 
+def stage_run_ms(app_id: str, sid: int) -> int:
+    """Executor run time of one stage's completed attempts. A skipped
+    stage (its exchange or cache reused) is listed in the job's
+    stageIds but has no attempts, so the REST lookup is a 404: it ran
+    for 0 ms."""
+    try:
+        attempts = rest(app_id, f"/stages/{sid}")
+    except urllib.error.HTTPError as e:
+        if e.code == 404:
+            return 0
+        raise
+    return sum(s.get("executorRunTime", 0) for s in attempts if s.get("status") == "COMPLETE")
+
+
 def main() -> int:
     names = sys.argv[1:]
     registry = load_registry()
@@ -85,15 +100,8 @@ def main() -> int:
         total_job_ms = 0
         print(f"\n=== {name}: {elapsed:.3f}s wall, {len(jobs)} jobs ===")
         for j in jobs:
-            sub = time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-            comp = time.strptime(j["completionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-            # second resolution is too coarse; use stage metrics instead
-            dur_ms = sum(
-                s.get("executorRunTime", 0)
-                for sid in j["stageIds"]
-                for s in [st for st in rest(app_id, f"/stages/{sid}")]
-                if s.get("status") == "COMPLETE"
-            )
+            # job timestamps have second resolution; sum stage metrics instead
+            dur_ms = sum(stage_run_ms(app_id, sid) for sid in j["stageIds"])
             total_job_ms += dur_ms
             nm = (j.get("name") or "")[:90]
             print(
