@@ -14,7 +14,8 @@ Layout
                    dedup, similarity, text stats, multimodal)
 - ``plans``      : the named-query registry consumed by ``__spark_entry__.py``
                    (each query: PySpark callable + DuckDB oracle SQL)
-- ``streaming``  : Structured Streaming wrappers (incremental foreachBatch, windows)
+- ``streaming``  : Structured Streaming jobs: the CLI's streaming ETL and the
+                   ingest-dedup, IVF and composed ingest streams
 
 Design stance (SURVEY.md §7): every operator is a pure function
 DataFrame → DataFrame, declared with the DataFrame API so Catalyst
