@@ -1,7 +1,7 @@
 """Every package module is reached from a live entry point.
 
 A module is live when the static import closure of the repo's entry
-points contains it. The roots are the driver contract
+points contains it. The roots are the registry entry point
 (``__spark_entry__.py``), the registry bench (``bench.py``), the product
 benchmark (``perfbench/*.py``), the batch CLI (the package
 ``__main__.py``) and every registry module ``load_registry`` imports by
@@ -54,12 +54,6 @@ def _package_chain(dotted: str, local_dir: pathlib.Path) -> list[pathlib.Path]:
     return found
 
 
-def _dotted_of(path: pathlib.Path) -> str:
-    rel = path.relative_to(ROOT).with_suffix("")
-    parts = rel.parts[:-1] if rel.name == "__init__" else rel.parts
-    return ".".join(parts)
-
-
 def _imports(path: pathlib.Path) -> list[pathlib.Path]:
     tree = ast.parse(path.read_text(), filename=str(path))
     here = path.parent
@@ -69,14 +63,10 @@ def _imports(path: pathlib.Path) -> list[pathlib.Path]:
             for alias in node.names:
                 out += _package_chain(alias.name, here)
         elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                pkg = _dotted_of(path).split(".")
-                if path.name != "__init__.py":
-                    pkg = pkg[:-1]
-                pkg = pkg[: len(pkg) - (node.level - 1)]
-                base = ".".join(pkg + ([node.module] if node.module else []))
-            else:
-                base = node.module
+            # The repo imports absolutely; a relative import would need
+            # resolving against the importing package first.
+            assert node.level == 0, f"{path}:{node.lineno}: relative import"
+            base = node.module
             out += _package_chain(base, here)
             # ``from pkg.sub import mod`` imports the submodule ``mod``.
             for alias in node.names:
