@@ -297,7 +297,7 @@ def main() -> None:
         # 2-10x from external load (measured 4s vs 22s for identical
         # code at load avg ~6). Two trials normally; if they disagree
         # by >2x the host was noisy, so take one more.
-        # clearCache BEFORE each timed trial, not once after all
+        # release_cache BEFORE each timed trial, not once after all
         # trials: queries that persist() intermediates (minhash's
         # exact-pair set, pagerank's nodes/edges_deg) build
         # plan-canonically-identical DAGs on every call, so trial 2
@@ -315,12 +315,10 @@ def main() -> None:
         # and say so.
         if os.environ.get("SPARK_GRAFT_BENCH_WARM") == "1":
             release_cache()
-            spark.catalog.clearCache()
             run(fn(spark, SF_DIR))
 
         def one_trial():
             release_cache()
-            spark.catalog.clearCache()
             # the Bloom sketch memo (operators/bloom.py) would otherwise
             # make trial 2+ memo-warm while every other query is cold —
             # min-of-trials must compare like with like across rounds
@@ -359,7 +357,6 @@ def main() -> None:
         }
         # also drop residue before the next query's first trial
         release_cache()
-        spark.catalog.clearCache()
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     canaries = [m["canary_sec"] for m in meta.values()]

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 if TYPE_CHECKING:
+    from notion_vector_store_etl_pipeline_spark.operators.cache import CacheScope
     from notion_vector_store_etl_pipeline_spark.pipeline import PipelineResult
 
 TRUTHY = {"1", "true", "yes", "y", "on"}  # reference parse_bool (`:52-55`)
@@ -198,27 +199,30 @@ def run_streaming(spark: SparkSession, args) -> int:
     return 0
 
 
-def count_run(result: PipelineResult, dry_run: bool = False) -> dict[str, int]:
-    """Persist the frames the run's actions share and count its summary.
+def count_run(
+    result: PipelineResult, scope: CacheScope, dry_run: bool = False
+) -> dict[str, int]:
+    """Pin the frames the run's actions share in ``scope`` and count its
+    summary.
 
     ``to_process`` (the snapshot⋈state join with its content hash) feeds
     the processed count, the stale set, the chunker and the state
     commit; ``chunk_rows`` (the chunker output) feeds the chunk count,
-    the JSONL records and the state commit's chunk-id lists. Persisting
-    the two runs the join and the chunker once per run; the caller
-    unpersists them. The skip count reads ``joined``, which Catalyst
+    the JSONL records and the state commit's chunk-id lists. Pinning
+    the two runs the join and the chunker once per run; the caller's
+    scope releases them. The skip count reads ``joined``, which Catalyst
     prunes to its key columns (no text read, no hash computed); it is
     exact because ``to_skip`` is never NULL. A dry run counts processed
-    and skipped only and persists nothing.
+    and skipped only and pins nothing.
     """
     plan = result.plan
     if not dry_run:
-        plan.to_process.persist()
+        scope.persist(plan.to_process)
     n_process = plan.to_process.count()
     counts = {"processed": n_process, "skipped": plan.joined.count() - n_process}
     if dry_run:
         return counts
-    result.chunk_rows.persist()
+    scope.persist(result.chunk_rows)
     counts["chunks"] = result.chunk_rows.count()
     counts["stale_vectors"] = result.stale_vectors.count()
     return counts
@@ -226,6 +230,7 @@ def count_run(result: PipelineResult, dry_run: bool = False) -> dict[str, int]:
 
 def main(argv: list[str] | None = None) -> int:
     from notion_vector_store_etl_pipeline_spark import get_spark
+    from notion_vector_store_etl_pipeline_spark.operators.cache import cache_scope
     from notion_vector_store_etl_pipeline_spark.operators.incremental import commit_state
     from notion_vector_store_etl_pipeline_spark.operators.sinks import write_chunks_jsonl
     from notion_vector_store_etl_pipeline_spark.pipeline import run_pipeline
@@ -276,8 +281,8 @@ def main(argv: list[str] | None = None) -> int:
 
     state = load_state(spark, args.state_path)
     result = run_pipeline(snapshot, state, max_len=args.chunk_char_len)
-    try:
-        counts = count_run(result, dry_run)
+    with cache_scope() as c:
+        counts = count_run(result, c, dry_run)
         if dry_run:  # discover without processing (`:746-748`)
             print(
                 f"[dry-run] would process {counts['processed']} files, "
@@ -286,9 +291,6 @@ def main(argv: list[str] | None = None) -> int:
             return 0
         write_chunks_jsonl(result.records, args.output_dir)
         commit_state(result.next_state, args.state_path)
-    finally:
-        result.chunk_rows.unpersist()
-        result.plan.to_process.unpersist()
     # the reference's run summary (`:771-776`)
     print(
         f"processed={counts['processed']} skipped={counts['skipped']} "

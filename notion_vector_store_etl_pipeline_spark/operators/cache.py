@@ -1,72 +1,68 @@
-"""Tracked DataFrame persistence.
+"""The package's one persist API: two cache lifetimes, no tracking list.
 
-Several operators persist intermediates that feed multiple consumers of
-one lazy plan (shingle tables, LSH candidate sets, HLL sketch tables).
-Because plans are lazy, the operator cannot unpersist them itself — the
-cache must outlive plan construction. ``persist_tracked`` registers
-every such persist so ``release_cache()`` can free them all between
-runs; long-lived sessions (the parity sweep, the correctness driver)
-otherwise accumulate executor memory (ADVICE r6). bench.py instead
-calls ``spark.catalog.clearCache()`` between queries, which drops these
-too.
+- :func:`persist` pins a cache that must OUTLIVE the call: registry
+  operators return lazy plans that read shared intermediates (shingle
+  tables, LSH candidates, HLL sketches, BFS frontiers). The session
+  holds it until :func:`release_cache`, which long-lived sessions
+  (bench.py, the parity sweep, perfbench) call between queries.
+- :func:`cache_scope` pins caches that die WITH the call: each
+  ``c.persist()`` pin is unpersisted when the block exits, on return or
+  raise. A frame that outlives the scope should not need its pins for
+  speed (the stream probes return ``localCheckpoint``-backed frames); one
+  that still reads a dropped cache recomputes, it never errors.
+
+``eager=True`` materializes the cache with one ``count()``. Use it when
+several branches of ONE later action read the frame: a lazy cache is
+raced by those branches, each re-running the upstream plan (measured
+2-5x end-to-end on the prefix-filter join). The cost is a Spark job at
+plan construction (the registry caveat in plans.__init__).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from contextlib import contextmanager
+from typing import Iterator
 
-_PERSISTED: list[DataFrame] = []
-
-
-def _still_cached(df: DataFrame) -> bool:
-    """True when the DataFrame's cache is still live. ``storageLevel``
-    is a JVM round-trip; a module-level entry can outlive its
-    SparkSession (sequential test sessions), in which case the property
-    access raises — treat that as 'cache gone' and drop the entry
-    (ADVICE r7)."""
-    try:
-        lvl = df.storageLevel
-        return lvl.useMemory or lvl.useDisk
-    except Exception:
-        return False
+from pyspark.sql import DataFrame, SparkSession
 
 
-def persist_tracked(df: DataFrame, eager: bool = False) -> DataFrame:
-    """persist() with registration so release_cache() can free it later.
-
-    ``eager=True`` materializes immediately (count()): needed when
-    several branches of ONE downstream action read the DataFrame — with
-    a lazy persist those branches race to compute it before the cache
-    populates, re-running the whole upstream pipeline per branch
-    (measured 2-5x end-to-end blowup on the prefix-filter join). The
-    cost is that plan construction launches a Spark job — callers of
-    registry fn()s that persist eagerly must expect that side effect
-    (documented in plans.__init__).
-    """
+def persist(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.persist()``, plus one ``count()`` when ``eager``."""
     df = df.persist()
-    _PERSISTED.append(df)
-    # self-prune: sessions that clear caches via
-    # spark.catalog.clearCache() alone (bench.py historically) never
-    # empty this list, so it would accumulate a DataFrame reference per
-    # persist for the session lifetime. Once the list is large, drop
-    # entries whose cache is already gone (storageLevel reset by
-    # clearCache/unpersist) — a cheap driver-local check.
-    if len(_PERSISTED) > 256:
-        _PERSISTED[:] = [d for d in _PERSISTED if _still_cached(d)]
     if eager:
         df.count()
     return df
 
 
+class CacheScope:
+    def __init__(self) -> None:
+        self.pins: list[DataFrame] = []
+
+    def persist(self, df: DataFrame, eager: bool = False) -> DataFrame:
+        """:func:`persist`, unpersisted when the scope exits."""
+        self.pins.append(df)
+        return persist(df, eager)
+
+
+@contextmanager
+def cache_scope() -> Iterator[CacheScope]:
+    """``with cache_scope() as c: x = c.persist(df, eager=...)``. On
+    exit every pin is unpersisted, newest first (dependents before
+    their inputs)."""
+    scope = CacheScope()
+    try:
+        yield scope
+    finally:
+        for df in reversed(scope.pins):
+            df.unpersist()
+
+
 def release_cache() -> None:
-    """Unpersist every intermediate registered so far. Entries whose
-    session has since stopped are dropped silently (same rationale as
-    the self-prune above)."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:
-            pass
+    """Clear the active session's cache: every ``persist()``, while
+    ``localCheckpoint`` blocks stay readable. No active session: no-op."""
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        spark.catalog.clearCache()
 
 
 # ---------------------------------------------------------------------------

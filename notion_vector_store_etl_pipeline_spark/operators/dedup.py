@@ -17,9 +17,10 @@ hashing, so these are rows-only for the SQL oracle and are instead
 verified in pytest against exact Jaccard ground truth.
 
 Several operators persist intermediates that feed multiple plan
-consumers. Because plans are lazy, the operator cannot unpersist them
-itself — call :func:`release_cache` (or ``spark.catalog.clearCache()``)
-once the final DataFrame has been materialized.
+consumers (``operators.cache.persist``). Because plans are lazy, the
+operator cannot unpersist them itself — call
+``operators.cache.release_cache()`` once the final DataFrame has been
+materialized.
 """
 
 from __future__ import annotations
@@ -30,22 +31,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from notion_vector_store_etl_pipeline_spark.operators.cache import persist as _persist
+
 # 2^31-1: keeps a*h+b < 2^62, safe for 64-bit ANSI arithmetic
 MERSENNE_PRIME = (1 << 31) - 1
 
 # band-bucket polynomial combiner (prime > 2^20): acc*C + mh stays
 # < 2^31 * 2^21 < 2^52, exact in BIGINT arithmetic in both engines
 BUCKET_COMBINE = 1_048_583
-
-# shared tracked-persist registry (operators.cache); release_cache is
-# re-exported here because scale smokes and tests import it from this
-# module historically
-from notion_vector_store_etl_pipeline_spark.operators.cache import (  # noqa: E402
-    persist_tracked as _persist,
-    release_cache,
-)
-
-__all__ = ["release_cache"]
 
 
 def normalized_text(text: Column) -> Column:

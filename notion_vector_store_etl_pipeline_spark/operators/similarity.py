@@ -33,7 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from notion_vector_store_etl_pipeline_spark.operators.cache import persist_tracked
+from notion_vector_store_etl_pipeline_spark.operators.cache import persist
 
 
 _PAIR_SCHEMA = StructType(
@@ -944,12 +944,13 @@ def ivf_blocked_pairs(
     there the count branch reads only the list_id partition column,
     which is strictly cheaper than materializing the vectors.
 
-    The persisted assignment is TRACKED (operators.cache): sessions
-    calling this operator repeatedly must ``release_cache()`` between
-    calls (bench.py and the parity sweep do) or the corpus-sized cached
-    assignments accumulate for the session lifetime (ADVICE r14).
+    The persisted assignment outlives the call (the returned plan reads
+    it): sessions calling this operator repeatedly must
+    ``operators.cache.release_cache()`` between calls (bench.py and the
+    parity sweep do) or the corpus-sized cached assignments accumulate
+    for the session lifetime (ADVICE r14).
     """
-    assigned = persist_tracked(
+    assigned = persist(
         nearest_lists(vecs, cent_ids, cent_mat, probes, id_col=id_col, emb_col=emb_col),
         eager=True,
     )
@@ -1070,10 +1071,11 @@ def ivf_blocked_probe(
     scope by design (same charter as the text probe: the stream wing
     owns intra-batch).
 
-    The eagerly persisted assignment is TRACKED (operators.cache):
-    sessions calling this operator repeatedly must ``release_cache()``
-    between calls or the cached corpus-sized assignments accumulate
-    for the session lifetime (ADVICE r14).
+    The eagerly persisted assignment outlives the call (the returned
+    plan reads it): sessions calling this operator repeatedly must
+    ``operators.cache.release_cache()`` between calls or the cached
+    corpus-sized assignments accumulate for the session lifetime
+    (ADVICE r14).
     """
     from pyspark.sql import functions as F
 
@@ -1087,7 +1089,7 @@ def ivf_blocked_probe(
     # and the replicated join branch would otherwise each run the
     # assignment GEMM over the full input (mapInPandas is opaque to
     # column pruning)
-    assigned = persist_tracked(
+    assigned = persist(
         nearest_lists(tagged, cent_ids, cent_mat, probes, id_col=id_col, emb_col=emb_col),
         eager=True,
     )

@@ -19,16 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# tracked persists (operators.cache): the iterative loops persist the
-# edge relation and every level's frontier, and those caches must
-# outlive plan construction (the returned union reads them) — so the
-# operator cannot unpersist them itself. Tracking lets long-lived
-# sessions (parity sweep, correctness driver) free them via
-# release_cache() between queries instead of accumulating one edge
-# relation + one frontier per level per query for the session lifetime
-# (the ADVICE-r6 problem persist_tracked was built for).
+# BFS persists the edge relation and every level's frontier: the
+# returned union reads those caches, so they must outlive the call
+# (release_cache() frees them between queries). connected_components
+# returns a checkpointed frame, so its pins live in a cache_scope and
+# die with the call.
 from notion_vector_store_etl_pipeline_spark.operators.cache import (
-    persist_tracked as _persist,
+    cache_scope,
+    persist as _persist,
 )
 
 
@@ -133,37 +131,34 @@ def connected_components(
     )
     from pyspark.sql.types import DecimalType, IntegralType
 
-    und = _persist(und.repartition("src"))
-    labels = _persist(nodes.select("node", F.col("node").alias("label")))
-    # INTEGRAL node ids (every engine caller: doc_id/vec_id longs) get
-    # the cheap sum-based convergence check in _propagate; everything
-    # else falls back to the join check. Scale-0 decimals are integral
-    # too; fractional types (Double/Float, decimal with scale > 0) are
-    # deliberately EXCLUDED (ADVICE r14): cast('decimal(38,0)') rounds,
-    # so distinct fractional labels can collapse to equal sums and the
-    # loop would declare convergence while labels are still changing.
-    # Strings cast to NULL, same failure mode.
-    dt = labels.schema["label"].dataType
-    numeric = isinstance(dt, IntegralType) or (
-        isinstance(dt, DecimalType) and dt.scale == 0
-    )
-    if numeric:
-        # one job primes the cache AND seeds the convergence invariant:
-        # row count (broadcast decision) + label sum (see _propagate).
-        # collect(), not first(): first() is executeTake, which probed
-        # the 1-row aggregate with 2-3 incremental jobs (profiled r15).
-        n_nodes, label_sum = labels.agg(
-            F.count(F.lit(1)), F.sum(F.col("label").cast("decimal(38,0)"))
-        ).collect()[0]
-    else:
-        n_nodes, label_sum = labels.count(), None
-
-    try:
+    with cache_scope() as c:
+        und = c.persist(und.repartition("src"))
+        labels = c.persist(nodes.select("node", F.col("node").alias("label")))
+        # INTEGRAL node ids (every engine caller: doc_id/vec_id longs) get
+        # the cheap sum-based convergence check in _propagate; everything
+        # else falls back to the join check. Scale-0 decimals are integral
+        # too; fractional types (Double/Float, decimal with scale > 0) are
+        # deliberately EXCLUDED (ADVICE r14): cast('decimal(38,0)') rounds,
+        # so distinct fractional labels can collapse to equal sums and the
+        # loop would declare convergence while labels are still changing.
+        # Strings cast to NULL, same failure mode.
+        dt = labels.schema["label"].dataType
+        numeric = isinstance(dt, IntegralType) or (
+            isinstance(dt, DecimalType) and dt.scale == 0
+        )
+        if numeric:
+            # one job primes the cache AND seeds the convergence invariant:
+            # row count (broadcast decision) + label sum (see _propagate).
+            # collect(), not first(): first() is executeTake, which probed
+            # the 1-row aggregate with 2-3 incremental jobs (profiled r15).
+            n_nodes, label_sum = labels.agg(
+                F.count(F.lit(1)), F.sum(F.col("label").cast("decimal(38,0)"))
+            ).collect()[0]
+        else:
+            n_nodes, label_sum = labels.count(), None
         return _propagate(
             und, labels, n_nodes, label_sum, numeric, max_iters, broadcast_rows
         )
-    finally:
-        und.unpersist()
 
 
 def _propagate(
@@ -177,67 +172,67 @@ def _propagate(
         agg = (
             labels.unionByName(prop).groupBy("node").agg(F.min("label").alias("label"))
         )
-        # The path-halving self-join below consumes `agg` on two
+        # `agg` is pinned for its round only (one scope per round). The
+        # path-halving self-join below consumes `agg` on two
         # DIFFERENT keys (a.label vs b.node), so its two exchanges are
         # not canonically equal and exchange reuse cannot fire — without
         # a cache each side re-runs the whole propagation join+aggregate
         # (profiled r15: two ~equal heavy jobs per round). Persist and
         # materialize it ONCE; both exchanges then read the cache
         # (guide §5: cache a frame with >1 consumer when recompute is
-        # the expensive path). The materializing action doubles as the
-        # convergence check for integral ids: sum(agg) is computed in
-        # the SAME job.
-        agg = agg.persist()
-        # Convergence, integral ids: the PRE-halving label sum stopped
-        # shrinking. Labels are non-increasing (the min-aggregate
-        # includes the node's own label; halving substitutes a label's
-        # label, itself ≤), so sum(agg_k) is non-increasing and
-        # sum(agg_{k+1}) == sum(agg_k) forces agg_{k+1} == labels_k ==
-        # agg_k pointwise: propagation changed nothing, labels are
-        # constant across every edge, hence equal to the component min,
-        # and halving is the identity — the previous round's labels ARE
-        # the fixpoint, so the final halving join is skipped too.
-        # decimal(38,0): exact, no 64-bit overflow for any realistic
-        # node-id domain. Non-integral ids keep the join-based check.
-        if numeric:
-            new_sum = agg.agg(
-                F.sum(F.col("label").cast("decimal(38,0)"))
-            ).collect()[0][0]
-            # Overflow hardening (ADVICE r14): a decimal(38,0) overflow
-            # makes F.sum return NULL on both sides and None == None
-            # would silently declare convergence — treat a None sum as
-            # "changed" so overflow degrades to extra rounds, never to
-            # early exit. Exception: an EMPTY node set also sums to
-            # NULL, and there n_nodes==0 proves the (empty) fixpoint.
-            if new_sum == label_sum and (new_sum is not None or n_nodes == 0):
-                agg.unpersist()
-                break
-            label_sum = new_sum
-        # pointer jumping (path halving): follow node -> label -> label's
-        # label in the same round, so convergence is O(log diameter)
-        # rounds instead of O(diameter) — the difference between 4 and 40
-        # shuffles on a long near-dup chain
-        a, b = agg.alias("a"), agg.alias("b")
-        new_labels = a.join(b, F.col("a.label") == F.col("b.node")).select(
-            F.col("a.node").alias("node"), F.col("b.label").alias("label")
-        )
-        # localCheckpoint (not just persist): each round's plan references
-        # the previous round's, so without truncation the logical plan
-        # doubles per iteration and planning itself OOMs long before the
-        # data does
-        new_labels = new_labels.localCheckpoint(eager=True)
-        if not numeric:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
+        # the expensive path). For integral ids the materializing action
+        # is the convergence check below: sum(agg) primes the cache in
+        # the SAME job. Other ids have no such job, so the pin is eager:
+        # a lazy one would be raced by the two self-join exchanges.
+        with cache_scope() as c:
+            agg = c.persist(agg, eager=not numeric)
+            # Convergence, integral ids: the PRE-halving label sum stopped
+            # shrinking. Labels are non-increasing (the min-aggregate
+            # includes the node's own label; halving substitutes a label's
+            # label, itself ≤), so sum(agg_k) is non-increasing and
+            # sum(agg_{k+1}) == sum(agg_k) forces agg_{k+1} == labels_k ==
+            # agg_k pointwise: propagation changed nothing, labels are
+            # constant across every edge, hence equal to the component min,
+            # and halving is the identity — the previous round's labels ARE
+            # the fixpoint, so the final halving join is skipped too.
+            # decimal(38,0): exact, no 64-bit overflow for any realistic
+            # node-id domain. Non-integral ids keep the join-based check.
+            if numeric:
+                new_sum = agg.agg(
+                    F.sum(F.col("label").cast("decimal(38,0)"))
+                ).collect()[0][0]
+                # Overflow hardening (ADVICE r14): a decimal(38,0) overflow
+                # makes F.sum return NULL on both sides and None == None
+                # would silently declare convergence — treat a None sum as
+                # "changed" so overflow degrades to extra rounds, never to
+                # early exit. Exception: an EMPTY node set also sums to
+                # NULL, and there n_nodes==0 proves the (empty) fixpoint.
+                if new_sum == label_sum and (new_sum is not None or n_nodes == 0):
+                    break
+                label_sum = new_sum
+            # pointer jumping (path halving): follow node -> label -> label's
+            # label in the same round, so convergence is O(log diameter)
+            # rounds instead of O(diameter) — the difference between 4 and 40
+            # shuffles on a long near-dup chain
+            a, b = agg.alias("a"), agg.alias("b")
+            new_labels = a.join(b, F.col("a.label") == F.col("b.node")).select(
+                F.col("a.node").alias("node"), F.col("b.label").alias("label")
             )
-        else:
-            changed = 1
-        agg.unpersist()
-        labels.unpersist()
+            # localCheckpoint (not just persist): each round's plan references
+            # the previous round's, so without truncation the logical plan
+            # doubles per iteration and planning itself OOMs long before the
+            # data does
+            new_labels = new_labels.localCheckpoint(eager=True)
+            if not numeric:
+                changed = (
+                    new_labels.alias("n")
+                    .join(labels.alias("o"), "node")
+                    .filter(F.col("n.label") != F.col("o.label"))
+                    .limit(1)
+                    .count()
+                )
+            else:
+                changed = 1
         labels = new_labels
         if changed == 0:
             break

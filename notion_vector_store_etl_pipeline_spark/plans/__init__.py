@@ -11,11 +11,13 @@ the driver sorts columns by name and hashes values.
 Registry contract caveat: a few queries whose plan reads a heavy
 intermediate from multiple branches persist it EAGERLY at fn() call
 time (hll_sketch_union, the prefix-filter jaccard family) — for those,
-fn() launches a Spark job before the caller runs any action, and the
-cache is held until ``operators.cache.release_cache()`` (or
-``spark.catalog.clearCache()``) is called. Long-lived sessions that
-loop over the registry should release between queries, as bench.py and
-scripts/parity_check.py do.
+fn() launches a Spark job before the caller runs any action. More
+queries persist lazily (the minhash/jaccard dedup family, BFS,
+pagerank, the blocked IVF family); every such cache outlives fn()
+because the returned plan reads it, and is held until
+``operators.cache.release_cache()`` clears the session's cache.
+Long-lived sessions that loop over the registry should release between
+queries, as bench.py and scripts/parity_check.py do.
 """
 
 from __future__ import annotations

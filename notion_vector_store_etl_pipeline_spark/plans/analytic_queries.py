@@ -168,19 +168,19 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "event_type.",
 )
 def hll_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from notion_vector_store_etl_pipeline_spark.operators.cache import persist_tracked
+    from notion_vector_store_etl_pipeline_spark.operators.cache import persist
 
     events = load_table(spark, sf_dir, "events")
     # sketches feeds BOTH the per_type branch and the global union row;
-    # eager tracked persist so the events scan + HLL aggregation runs
-    # once per action instead of twice. Side effects (fn() launches a
-    # job; cache is held until release_cache()/clearCache()) are part
-    # of the registry contract — see plans.__init__ docstring.
+    # eager persist so the events scan + HLL aggregation runs once per
+    # action instead of twice. Side effects (fn() launches a job; the
+    # cache is held until release_cache()) are part of the registry
+    # contract — see plans.__init__ docstring.
     sketches = events.groupBy("event_type").agg(
         F.hll_sketch_agg("user_id", F.lit(14)).alias("sk"),
         F.countDistinct("user_id").alias("exact_users"),
     )
-    sketches = persist_tracked(sketches, eager=True)
+    sketches = persist(sketches, eager=True)
 
     def within(sk_col: str) -> "F.Column":
         # exact_users = 0 (a group whose user_ids are all NULL) would

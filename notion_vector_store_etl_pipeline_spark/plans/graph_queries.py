@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from notion_vector_store_etl_pipeline_spark.operators.cache import (
-    persist_tracked as _persist,
+    persist as _persist,
 )
 from notion_vector_store_etl_pipeline_spark.operators.traversal import (
     bfs_reachability,
@@ -217,10 +217,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at sf0.1). This is the standard iterative-analytics contract on
     # Spark: materialize what every iteration reads, shuffle only the
     # rank updates.
-    # tracked persists (operators.cache): the unrolled plan reads these
-    # caches after this function returns, so they can't be unpersisted
-    # here — tracking lets long-lived sessions (parity sweep, driver)
-    # free them via release_cache() between queries
+    # operators.cache.persist: the unrolled plan reads these caches
+    # after this function returns, so they can't be unpersisted here;
+    # long-lived sessions (parity sweep, driver) free them via
+    # release_cache() between queries
     nodes = _persist(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from notion_vector_store_etl_pipeline_spark.functions import vectors as V
-from notion_vector_store_etl_pipeline_spark.operators.cache import persist_tracked
+from notion_vector_store_etl_pipeline_spark.operators.cache import persist
 from notion_vector_store_etl_pipeline_spark.plans import register
 from notion_vector_store_etl_pipeline_spark.sources import load_table
 
@@ -1118,7 +1118,7 @@ def neardup_probe_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the formatted plan). The frame is micro-batch-sized (probes x
     # batch rows), the same persist contract the streaming probe_batch
     # uses; eager so concurrent branches can't race the cache populate.
-    batch_asg = persist_tracked(
+    batch_asg = persist(
         nearest_lists(
             batch, c_ids, c_mat, _IVF_BLOCK_PROBES, id_col="vec_id", emb_col="emb"
         ).select("vec_id", "emb", F.lit(True).alias("_is_batch"), "list_id"),

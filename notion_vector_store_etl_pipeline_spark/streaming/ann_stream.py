@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from notion_vector_store_etl_pipeline_spark.operators.cache import cache_scope
 from notion_vector_store_etl_pipeline_spark.operators.similarity import (
     compact_ivf_index,
     load_ivf_sidecar,
@@ -305,15 +306,13 @@ def probe_vector_batch(
     # assign the batch once and pin it: it feeds the probed-list semi
     # filter, the union's batch branch, and the kernel's block-count
     # join (micro-batch-sized frame, same contract as the text probe).
-    # The other two pins are taken on their paths only; one finally
+    # The other two pins are taken on their paths only; the scope
     # releases whichever were taken, whatever the call raises.
-    batch_asg = (
-        nearest_lists(batch, cent_ids, cent_mat, probes, id_col="vec_id", emb_col="emb")
-        .select("vec_id", "emb", F.lit(True).alias("_is_batch"), "list_id")
-        .persist()
-    )
-    corpus_pin = survivors = None
-    try:
+    with cache_scope() as c:
+        batch_asg = c.persist(
+            nearest_lists(batch, cent_ids, cent_mat, probes, id_col="vec_id", emb_col="emb")
+            .select("vec_id", "emb", F.lit(True).alias("_is_batch"), "list_id")
+        )
         corpus = corpus_vectors
         fresh_assign = "list_id" not in corpus.columns
         if fresh_assign:
@@ -346,8 +345,7 @@ def probe_vector_batch(
             # cache. The stored path stays un-persisted on purpose: there
             # the count branch reads only the list_id partition column,
             # which is cheaper than materializing the vectors.
-            corpus_side = corpus_pin = corpus_side.persist()
-            corpus_side.count()
+            corpus_side = c.persist(corpus_side, eager=True)
         flagged = _bipartite_list_probe(
             corpus_side.unionByName(batch_asg.select(*corpus_side.columns)),
             threshold,
@@ -356,9 +354,11 @@ def probe_vector_batch(
         ).localCheckpoint(eager=True)
 
         if intra_batch:
-            survivors = batch.join(
-                flagged.select(F.col("batch_id").alias("vec_id")), "vec_id", "left_anti"
-            ).persist()
+            survivors = c.persist(
+                batch.join(
+                    flagged.select(F.col("batch_id").alias("vec_id")), "vec_id", "left_anti"
+                )
+            )
             # micro-batch-sized: fixed small block count, no auto-sizing
             # count() job per batch
             intra_pairs = cosine_selfjoin_pairs(
@@ -370,10 +370,6 @@ def probe_vector_batch(
                 F.col("b_id").alias("batch_id"), F.col("a_id").alias("corpus_id"), "score"
             )
             flagged = flagged.unionByName(intra).localCheckpoint(eager=True)
-    finally:
-        for df in (batch_asg, corpus_pin, survivors):
-            if df is not None:
-                df.unpersist()
     clean = batch0.join(
         flagged.select(F.col("batch_id").alias(id_col)).dropDuplicates(),
         id_col,

@@ -68,7 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from notion_vector_store_etl_pipeline_spark.operators.cache import memo_df
+from notion_vector_store_etl_pipeline_spark.operators.cache import cache_scope, memo_df
 from notion_vector_store_etl_pipeline_spark.operators.statefs import (
     batch_dirs,
     state_fs,
@@ -173,8 +173,9 @@ def probe_batch(
     raced by lazy readers), plus ``mb``, pinned lazily because the
     candidate pin's job is its one first reader. The final ``flagged``
     (and ``clean_mb``) is materialized with an eager
-    ``localCheckpoint`` (micro-batch-sized by construction), and all
-    three pins are released before returning. Callers get a
+    ``localCheckpoint`` (micro-batch-sized by construction), and the
+    three pins live in one ``cache_scope``, released when the call
+    returns or raises. Callers get a
     checkpoint-backed ``flagged`` and a ``clean`` that is one cheap
     anti-join over it; no ``release_cache()`` contract to forget, no
     cache accumulation in long direct-caller sessions.
@@ -193,31 +194,32 @@ def probe_batch(
     default here (batches are small by construction)."""
     if chain_policy not in CHAIN_POLICIES:
         raise ValueError(f"chain_policy must be one of {CHAIN_POLICIES}, got {chain_policy!r}")
-    # The three pins are declared up front (persist() is lazy) so one
-    # finally releases them whatever the call raises.
-    sets = shingle_sets(batch).persist()
-    # mb is pinned lazily: the candidate pin's job below is its one
-    # first reader, so it populates mb with no count job of its own
-    mb = melted_signature_buckets(
-        signatures_from_sets(sets, num_hashes, checkable),
-        bands,
-        num_hashes // bands,
-        checkable,
-    ).persist()
-    # Same-id exclusion (r10 review): an UPDATED document — same
-    # doc_id as its corpus entry, changed text — collides with its own
-    # buckets and would be flagged as a near-dup of itself, silently
-    # discarding every edit. A (batch X, corpus X) pair is an update,
-    # not a duplicate; the skip stage upstream already passed it
-    # through deliberately. Pinned eagerly: the verify below reads the
-    # candidates twice in one action (corpus-side semi-join + pair
-    # join), and racing lazy readers would each re-run the index join.
-    cand = minhash_probe_candidates(mb, corpus_index).filter(
-        F.col("a_id") != F.col("b_id")
-    ).persist()
-    try:
-        sets.count()
-        cand.count()
+    with cache_scope() as c:
+        sets = c.persist(shingle_sets(batch), eager=True)
+        # mb is pinned lazily: the candidate pin's job below is its one
+        # first reader, so it populates mb with no count job of its own
+        mb = c.persist(
+            melted_signature_buckets(
+                signatures_from_sets(sets, num_hashes, checkable),
+                bands,
+                num_hashes // bands,
+                checkable,
+            )
+        )
+        # Same-id exclusion (r10 review): an UPDATED document — same
+        # doc_id as its corpus entry, changed text — collides with its own
+        # buckets and would be flagged as a near-dup of itself, silently
+        # discarding every edit. A (batch X, corpus X) pair is an update,
+        # not a duplicate; the skip stage upstream already passed it
+        # through deliberately. Pinned eagerly: the verify below reads the
+        # candidates twice in one action (corpus-side semi-join + pair
+        # join), and racing lazy readers would each re-run the index join.
+        cand = c.persist(
+            minhash_probe_candidates(mb, corpus_index).filter(
+                F.col("a_id") != F.col("b_id")
+            ),
+            eager=True,
+        )
         # Verification needs text on both sides, one text per id.
         # BATCH WINS for ids present on both sides ("the corpus as it
         # will be after this ingest"): an updated doc's pairs verify
@@ -263,8 +265,8 @@ def probe_batch(
             )
             flagged = flagged.unionByName(intra)
         # materialize once (micro-batch-sized); the returned plans then
-        # depend only on checkpointed blocks, so the finally below may
-        # release the pins
+        # depend only on checkpointed blocks, so the scope may release
+        # the pins
         flagged = flagged.localCheckpoint(eager=True)
         clean_mb = None
         if return_clean_buckets:
@@ -290,9 +292,6 @@ def probe_batch(
         if return_clean_buckets:
             return flagged, clean, clean_mb
         return flagged, clean
-    finally:
-        for df in (sets, mb, cand):
-            df.unpersist()
 
 
 def latest_committed_batch(
@@ -541,8 +540,8 @@ def compact_stream_state(
         # one materialization feeds the corpus rewrite AND the index
         # rebuild (the signature pass would otherwise replay the whole
         # resolve-union per consumer)
-        cur = cur.persist()
-        try:
+        with cache_scope() as c:
+            cur = c.persist(cur)
             cur.write.mode("overwrite").parquet(corpus_out)
             idx = build_lsh_index(
                 cur,
@@ -553,8 +552,6 @@ def compact_stream_state(
                 keep=keep,
             )
             write_lsh_index(idx, idx_out)
-        finally:
-            cur.unpersist()
     else:
         compact_lsh_index(
             spark,
@@ -594,21 +591,18 @@ def compact_stream_state(
             # they generate now verify against the doc's CURRENT text only,
             # so they cost verify work, never a wrong flag.
             window_ids = F.broadcast(spark.read.parquet(corpus_out).select("doc_id"))
-            sup = (
-                _load_anchor_corpus(spark, anchor, out_dir)
-                .select("doc_id")
-                .join(window_ids, "doc_id", "left_semi")
-                .dropDuplicates()
-                .persist()
-            )
-            try:
+            with cache_scope() as c:
+                sup = c.persist(
+                    _load_anchor_corpus(spark, anchor, out_dir)
+                    .select("doc_id")
+                    .join(window_ids, "doc_id", "left_semi")
+                    .dropDuplicates()
+                )
                 n_sup = sup.count()
                 if n_sup > 0:
                     sup.write.mode("overwrite").parquet(
                         f"{out_dir}/superseded_versions/v={k}"
                     )
-            finally:
-                sup.unpersist()
     manifest = {
         "version": k,
         "index_path": idx_out,

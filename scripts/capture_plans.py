@@ -60,7 +60,6 @@ def main() -> int:
             f.write("\n")
         print(f"wrote {path}", flush=True)
         release_cache()
-        spark.catalog.clearCache()
     spark.stop()
     return 0
 

@@ -119,7 +119,6 @@ def main() -> int:
             do = [r for r in drows if r not in set(srows)][:3]
             print(f"  spark-only={so}\n  oracle-only={do}")
         release_cache()
-        spark.catalog.clearCache()
     spark.stop()
     print(f"\n{len(failures)} failures: {failures}")
     return 1 if failures else 0

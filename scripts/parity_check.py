@@ -69,12 +69,10 @@ def main() -> int:
             print(f"  cols spark={sorted(cols)} duck={sorted(dcols)}")
             print(f"  spark-only={so}")
             print(f"  duck-only={do}")
-        # queries that eager-persist intermediates (registry contract
-        # caveat in plans.__init__) would otherwise accumulate executor
-        # memory across the full-registry sweep; release_cache also
-        # empties the tracked-persist registry's driver-side references
+        # queries that persist intermediates (registry contract caveat
+        # in plans.__init__) would otherwise accumulate executor memory
+        # across the full-registry sweep
         release_cache()
-        spark.catalog.clearCache()
     spark.stop()
     print(f"\n{len(failures)} failures: {failures}")
     return 1 if failures else 0

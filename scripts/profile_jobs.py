@@ -88,7 +88,6 @@ def main() -> int:
 
     for name in names:
         release_cache()
-        spark.catalog.clearCache()
         clear_sketch_memo()
         jobs_before = {j["jobId"] for j in rest(app_id, "/jobs")}
         t0 = time.perf_counter()

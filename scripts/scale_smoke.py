@@ -181,10 +181,8 @@ def main() -> int:
     # stay comfortably under it (bigger GEMMs amortize better), and the
     # LSH near-dup path must stay near-linear apart from the genuine
     # duplicate groups replication itself creates.
-    from notion_vector_store_etl_pipeline_spark.operators.dedup import (
-        minhash_neardup,
-        release_cache,
-    )
+    from notion_vector_store_etl_pipeline_spark.operators.cache import release_cache
+    from notion_vector_store_etl_pipeline_spark.operators.dedup import minhash_neardup
     from notion_vector_store_etl_pipeline_spark.operators.similarity import (
         cosine_selfjoin_pairs,
     )

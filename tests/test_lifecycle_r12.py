@@ -25,6 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from notion_vector_store_etl_pipeline_spark.operators import dedup as D
+from notion_vector_store_etl_pipeline_spark.operators.cache import release_cache
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
     _load_anchor_corpus,
     _load_anchor_index,
@@ -175,7 +176,7 @@ def test_major_fold_self_heals_presidecar_duplicates(spark, tmp_path):
     assert all(n == 1 for n in per_doc.values()), per_doc
     text5 = rows.filter(F.col("doc_id") == -5).head().text
     assert text5 == _vtext("tenderness"), "newest version must win"
-    D.release_cache()
+    release_cache()
 
 
 def test_presignature_manifest_major_guarded_by_probe(spark, tmp_path):
@@ -220,7 +221,7 @@ def test_presignature_manifest_major_guarded_by_probe(spark, tmp_path):
     man2 = fold(1, major=True)
     assert man2["corpus_floor"] == man2["version"]
     assert man2["signature"] == [32, 8, False]
-    D.release_cache()
+    release_cache()
 
 
 def test_presignature_assume_signature_override(spark, tmp_path):
@@ -247,7 +248,7 @@ def test_presignature_assume_signature_override(spark, tmp_path):
         assume_signature=True,
     )
     assert man2 is not None and man2["corpus_floor"] == man2["version"]
-    D.release_cache()
+    release_cache()
 
 
 def test_legacy_bucketed_table_manifest_rejected(spark, tmp_path):
@@ -326,7 +327,7 @@ def test_size_triggered_major_fold(spark, tmp_path):
     texts = dict(rows)
     assert texts[-5] == _vtext("patience")
     assert len(rows) == len(texts)
-    D.release_cache()
+    release_cache()
 
 
 @pytest.mark.slow

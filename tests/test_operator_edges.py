@@ -2,7 +2,7 @@
 the oracle-parity gate cannot reach because the fixtures never produce
 them: duplicate probe rows through the Bloom pre-filter, '+'/malformed
 escapes through url_basename, the salted-join spreader under ANSI mode,
-and graph_pagerank's persists being release_cache()-able.
+and graph_pagerank's persists being freed by release_cache().
 """
 
 from __future__ import annotations
@@ -69,19 +69,24 @@ def test_salted_join_matches_unsalted(spark):
 
 def test_graph_pagerank_persists_are_tracked(spark):
     """graph_pagerank's two loop-invariant persists (nodes, edge⋈degree)
-    must register with operators.cache so long-lived sessions can free
-    them between queries; raw .persist() leaked them for the session
-    lifetime (the ADVICE-r6 problem persist_tracked exists for)."""
+    outlive the call, because the returned plan reads them; long-lived
+    sessions free them between queries with release_cache() (the
+    ADVICE-r6 problem of caches held for the session lifetime)."""
     from notion_vector_store_etl_pipeline_spark.operators import cache
     from notion_vector_store_etl_pipeline_spark.plans.graph_queries import (
         graph_pagerank,
     )
 
+    def pinned() -> int:  # persist() pins, not localCheckpoint blocks
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return sum(not r.rdd().isCheckpointed() for r in rdds)
+
     cache.release_cache()
+    before = pinned()
     graph_pagerank(spark, SF_SMOKE).count()
-    assert len(cache._PERSISTED) >= 2
+    assert pinned() >= before + 2
     cache.release_cache()
-    assert cache._PERSISTED == []
+    assert pinned() == before
 
 
 def test_group_normalize_single_member_group_is_null_not_nan(spark, tmp_path):

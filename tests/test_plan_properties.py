@@ -168,7 +168,7 @@ def _executed_nodes(df) -> list[str]:
 
 def test_batch_cli_run_hashes_and_chunks_once(spark, tmp_path, capsys):
     """The batch CLI's plans (PLANS.md "batch CLI run"): with no state
-    the snapshot⋈state join folds away; once ``count_run`` has persisted
+    the snapshot⋈state join folds away; once ``count_run`` has pinned
     its two frames, the records and the state commit read the chunker
     output from cache, and the stale count reads ``to_process`` instead
     of re-scanning (and re-hashing) the documents."""
@@ -178,6 +178,7 @@ def test_batch_cli_run_hashes_and_chunks_once(spark, tmp_path, capsys):
         load_state,
         main,
     )
+    from notion_vector_store_etl_pipeline_spark.operators.cache import cache_scope
     from notion_vector_store_etl_pipeline_spark.pipeline import run_pipeline
 
     state = str(tmp_path / "state")
@@ -189,13 +190,10 @@ def test_batch_cli_run_hashes_and_chunks_once(spark, tmp_path, capsys):
                  "--output-dir", str(tmp_path / "out")]) == 0
     capsys.readouterr()
     rerun = run_pipeline(build_snapshot(spark, SF_SMOKE), load_state(spark, state))
-    try:
-        count_run(rerun)
+    with cache_scope() as c:
+        count_run(rerun, c)
         for name, df in (("records", rerun.records), ("next_state", rerun.next_state)):
             nodes = _executed_nodes(df)
             assert not [n for n in nodes if "ArrowEvalPython" in n], (name, nodes)
         nodes = _executed_nodes(rerun.stale_vectors.groupBy().count())
         assert not [n for n in nodes if "documents.parquet" in n], nodes
-    finally:
-        rerun.chunk_rows.unpersist()
-        rerun.plan.to_process.unpersist()

@@ -10,6 +10,9 @@ string (``plans._MODULES``). The closure follows every ``import`` and
 package ``__init__.py`` on the way. A module only its own tests import
 fails here: delete it, or wire it to an entry point.
 
+A second static pin keeps ``operators/cache.py`` the only module that
+persists or unpersists (see ``test_only_the_cache_module_persists``).
+
 Static analysis only: nothing is imported and no Spark session starts.
 """
 
@@ -118,3 +121,53 @@ def test_every_package_module_is_reached():
     # reachable leaves it.
     assert set(unreached) == UNREACHED_BY_DESIGN
 
+
+
+# The one module allowed to persist or unpersist: every other package
+# module pins through operators.cache, either with ``persist(df)`` or
+# with ``c.persist(df)`` on a scope (``with cache_scope() as c``, or a
+# parameter annotated ``CacheScope``), so each cache has one of two
+# known lifetimes. localCheckpoint stays allowed.
+CACHE_MODULE = f"{PKG}/operators/cache.py"
+RAW_CACHE_CALLS = frozenset({"persist", "unpersist", "cache"})
+
+
+def _raw_cache_calls(tree: ast.AST) -> list[ast.Call]:
+    scopes = {
+        item.optional_vars.id
+        for node in ast.walk(tree)
+        if isinstance(node, ast.With)
+        for item in node.items
+        if isinstance(item.context_expr, ast.Call)
+        and isinstance(item.context_expr.func, ast.Name)
+        and item.context_expr.func.id == "cache_scope"
+        and isinstance(item.optional_vars, ast.Name)
+    } | {
+        node.arg
+        for node in ast.walk(tree)
+        if isinstance(node, ast.arg)
+        and isinstance(node.annotation, ast.Name)
+        and node.annotation.id == "CacheScope"
+    }
+    return [
+        node
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in RAW_CACHE_CALLS
+        and not (
+            node.func.attr == "persist"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id in scopes
+        )
+    ]
+
+
+def test_only_the_cache_module_persists():
+    raw = [
+        f"{f.relative_to(ROOT)}:{node.lineno} .{node.func.attr}()"
+        for f in sorted((ROOT / PKG).rglob("*.py"))
+        if str(f.relative_to(ROOT)) != CACHE_MODULE
+        for node in _raw_cache_calls(ast.parse(f.read_text(), filename=str(f)))
+    ]
+    assert raw == []

@@ -1,8 +1,9 @@
 """Round-10 state-layer lifecycle: the streaming wings running their
 manifests/deltas/compaction over a Hadoop-FS URI root (the
 object-store code path, exercised with ``file:`` URIs), version
-retention/vacuum, the empty-compaction-window no-op, and the
-internalized probe_batch cache lifecycle.
+retention/vacuum, the empty-compaction-window no-op, and the text
+probe's same-id update flow. The probes' cache lifecycle is pinned in
+tests/test_cache.py.
 """
 
 from __future__ import annotations
@@ -254,90 +255,6 @@ def test_compaction_empty_window_is_noop(spark, tmp_path):
         through_batch=man1["through_batch"] + 50,
     )
     assert wrote is False and not os.path.exists(str(tmp_path / "never"))
-
-
-def test_probe_batch_releases_its_own_caches(spark):
-    """ADVICE r9 #4: probe_batch's intermediates must not outlive the
-    call — direct callers (tests, registry code) have no release
-    contract to honor. The returned flagged frame is checkpoint-backed
-    and both outputs stay collectible after every probe_batch-internal
-    persist is gone."""
-    from notion_vector_store_etl_pipeline_spark.operators.cache import (
-        _PERSISTED,
-        release_cache,
-    )
-
-    docs = spark.read.parquet(SOURCE).select("doc_id", "text")
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    batch = docs.filter(F.col("doc_id") % 10 == 0).limit(20)
-    index = D.build_lsh_index(corpus)
-
-    # count LIVE JVM-persistent RDDs, not just the global tracker:
-    # probe_batch's own intermediates persist through a LOCAL list the
-    # tracker never sees, so a tracker-only assertion passes even if
-    # the internal unpersist loop is deleted (r10 test review)
-    release_cache()
-    spark.catalog.clearCache()
-    jvm_before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    tracked_before = len(_PERSISTED)
-    flagged, clean = probe_batch(batch, corpus, index)
-    # no new globally-tracked persists leak from the call
-    assert len(_PERSISTED) == tracked_before
-    # the only surviving JVM-side blocks are the returned frames'
-    # localCheckpoints (flagged + clean) — every internal persist is gone
-    jvm_after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert jvm_after - jvm_before <= 2, (
-        f"probe_batch leaked {jvm_after - jvm_before - 2} internal "
-        "persists past the call"
-    )
-    f = flagged.collect()
-    c = clean.collect()
-    assert len(c) + len({r.batch_id for r in f}) == batch.count()
-
-
-def test_probe_vector_batch_releases_its_pins(spark, monkeypatch):
-    """The embedding probe's three pins (the assigned batch, the
-    fresh-assigned corpus side, the intra-batch survivors) must not
-    outlive the call, on return AND when the call raises mid-probe.
-    A bare corpus with ``intra_batch=True`` takes all three. What may
-    survive are localCheckpoint blocks only (the probe's flagged frames
-    and the sequential peel's rounds), never a persist()."""
-    import numpy as np
-
-    from notion_vector_store_etl_pipeline_spark.operators import similarity
-    from notion_vector_store_etl_pipeline_spark.streaming.ann_stream import (
-        probe_vector_batch,
-    )
-
-    schema = "vec_id: long, emb: array<double>"
-    batch = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.99, 0.1]), (3, [0.0, 1.0])], schema
-    )
-    # one corpus vector in each IVF list, near-dup of no batch vector
-    corpus = spark.createDataFrame([(100, [-1.0, 0.0]), (101, [0.0, -1.0])], schema)
-    cent_ids = np.array([0, 1], dtype=np.int64)
-    cent_mat = np.array([[1.0, 0.0], [0.0, 1.0]])
-
-    def pinned_rdds() -> int:
-        # cached RDDs that are not (local) checkpoints: persist() pins
-        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
-        return sum(not r.rdd().isCheckpointed() for r in rdds)
-
-    before = pinned_rdds()
-    flagged, clean = probe_vector_batch(
-        batch, corpus, cent_ids, cent_mat, 0.5, probes=1, intra_batch=True
-    )
-    assert pinned_rdds() == before
-    assert sorted((r.batch_id, r.corpus_id) for r in flagged.collect()) == [(2, 1)]
-    assert sorted(r.vec_id for r in clean.collect()) == [1, 3]
-
-    def boom(*args, **kwargs):
-        raise RuntimeError("intra stage failed")
-
-    monkeypatch.setattr(similarity, "cosine_selfjoin_pairs", boom)
-    with pytest.raises(RuntimeError, match="intra stage failed"):
-        probe_vector_batch(batch, corpus, cent_ids, cent_mat, 0.5, probes=1, intra_batch=True)
-    assert pinned_rdds() == before
 
 
 def test_vacuum_watermark_bounds_rescans(spark, tmp_path, monkeypatch):

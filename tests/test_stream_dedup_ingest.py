@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from notion_vector_store_etl_pipeline_spark.operators import dedup as D
-from notion_vector_store_etl_pipeline_spark.operators.cache import persist_tracked
+from notion_vector_store_etl_pipeline_spark.operators.cache import persist, release_cache
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
     streaming_dedup_ingest,
 )
@@ -74,7 +74,7 @@ def test_stream_probe_matches_batch_probe(spark, tmp_path):
             docs, F.col("doc_id") % 10 == 0, threshold=0.2
         ).collect()
     }
-    D.release_cache()
+    release_cache()
     assert stream_pairs == batch_pairs
     assert batch_pairs, "fixture produced no probe pairs; parity is vacuous"
 
@@ -134,9 +134,9 @@ def test_stream_index_deltas_dedup_across_batches(spark, tmp_path):
     D.write_lsh_index(D.build_lsh_index(corpus), index_path)
 
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    # another caller's tracked cache in the same session: the stream
-    # must leave it alone (its batches register no tracked persist)
-    other = persist_tracked(spark.range(3), eager=True)
+    # another caller's cache in the same session: the stream must
+    # leave it alone (its batches release only their own pins)
+    other = persist(spark.range(3), eager=True)
     # page_size=1, one page per batch -> one doc per micro-batch, in
     # file order: 1001 first, then its near-dup 1002
     _run(
@@ -250,7 +250,7 @@ def test_compact_lsh_index_equals_scratch_build(spark, tmp_path):
             corpus_index=D.load_lsh_index(spark, out_path),
         ).collect()
     }
-    D.release_cache()
+    release_cache()
     scratch_path = str(tmp_path / "scratch_idx")
     D.write_lsh_index(
         D.build_lsh_index(docs.filter(F.col("doc_id") % 10 != 0)), scratch_path
@@ -264,7 +264,7 @@ def test_compact_lsh_index_equals_scratch_build(spark, tmp_path):
             corpus_index=D.load_lsh_index(spark, scratch_path),
         ).collect()
     }
-    D.release_cache()
+    release_cache()
     assert compacted == scratch
     assert scratch, "no probe pairs at fixture scale; equality is vacuous"
     assert batch_docs.count() > 0 and delta_docs.count() > 0
@@ -302,7 +302,7 @@ def test_stored_index_probe_has_no_corpus_side_python(spark, tmp_path):
         n_fresh, n_stored = n_python_stages(fresh), n_python_stages(stored)
         stored_plan = stored._jdf.queryExecution().executedPlan().toString()
     finally:
-        D.release_cache()
+        release_cache()
     assert n_stored < n_fresh, (n_stored, n_fresh)
     assert "idx" in stored_plan  # the index parquet scan is in the plan
 
