@@ -35,6 +35,8 @@ def persist(df: DataFrame, eager: bool = False) -> DataFrame:
 
 
 class CacheScope:
+    """The pins of one :func:`cache_scope` block."""
+
     def __init__(self) -> None:
         self.pins: list[DataFrame] = []
 

@@ -8,6 +8,13 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def pinned_rdds(spark: SparkSession) -> int:
+    """Persistent RDDs that are not (local) checkpoints: the filled
+    caches of persist() pins."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+    return sum(not r.rdd().isCheckpointed() for r in rdds)
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     spark = (

@@ -21,6 +21,8 @@ from notion_vector_store_etl_pipeline_spark.operators.cache import (
     release_cache,
 )
 
+from tests.conftest import pinned_rdds
+
 SOURCE = "/root/testdata/sf0.001/documents.parquet"
 
 
@@ -28,17 +30,6 @@ def _cached(df) -> bool:
     """The session's cache holds ``df``'s plan (materialized or not)."""
     lvl = df.storageLevel
     return lvl.useMemory or lvl.useDisk
-
-
-def _materialized(spark) -> int:
-    """RDDs with blocks in storage."""
-    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-
-
-def _pinned_rdds(spark) -> int:
-    """Persistent RDDs that are not (local) checkpoints: persist() pins."""
-    rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
-    return sum(not r.rdd().isCheckpointed() for r in rdds)
 
 
 def test_scope_releases_its_pins_on_return_and_on_raise(spark):
@@ -72,14 +63,15 @@ def test_closing_a_nested_scope_keeps_the_outer_pins(spark):
 
 
 def test_eager_persist_is_materialized_before_it_returns(spark):
-    before = _materialized(spark)
+    # a cache's RDD is persisted when its first job fills it
+    before = pinned_rdds(spark)
     with cache_scope() as c:
         c.persist(spark.range(121))
-        assert _materialized(spark) == before  # lazy: no job yet
+        assert pinned_rdds(spark) == before  # lazy: no job yet
         c.persist(spark.range(122), eager=True)
-        assert _materialized(spark) == before + 1
+        assert pinned_rdds(spark) == before + 1
     kept = persist(spark.range(123), eager=True)
-    assert _materialized(spark) == before + 1
+    assert pinned_rdds(spark) == before + 1
     kept.unpersist()
 
 
@@ -115,9 +107,9 @@ def test_probe_batch_releases_its_own_caches(spark, monkeypatch):
     index = D.build_lsh_index(corpus)
 
     release_cache()
-    before = _pinned_rdds(spark)
+    before = pinned_rdds(spark)
     flagged, clean = dedup_stream.probe_batch(batch, corpus, index)
-    assert _pinned_rdds(spark) == before
+    assert pinned_rdds(spark) == before
     f = flagged.collect()
     c = clean.collect()
     assert len(c) + len({r.batch_id for r in f}) == batch.count()
@@ -129,7 +121,7 @@ def test_probe_batch_releases_its_own_caches(spark, monkeypatch):
     monkeypatch.setattr(dedup_stream, "jaccard_verify_sets", boom)
     with pytest.raises(RuntimeError, match="verify failed"):
         dedup_stream.probe_batch(batch, corpus, index)
-    assert _pinned_rdds(spark) == before
+    assert pinned_rdds(spark) == before
 
 
 def test_probe_vector_batch_releases_its_pins(spark, monkeypatch):
@@ -155,11 +147,11 @@ def test_probe_vector_batch_releases_its_pins(spark, monkeypatch):
     cent_ids = np.array([0, 1], dtype=np.int64)
     cent_mat = np.array([[1.0, 0.0], [0.0, 1.0]])
 
-    before = _pinned_rdds(spark)
+    before = pinned_rdds(spark)
     flagged, clean = probe_vector_batch(
         batch, corpus, cent_ids, cent_mat, 0.5, probes=1, intra_batch=True
     )
-    assert _pinned_rdds(spark) == before
+    assert pinned_rdds(spark) == before
     assert sorted((r.batch_id, r.corpus_id) for r in flagged.collect()) == [(2, 1)]
     assert sorted(r.vec_id for r in clean.collect()) == [1, 3]
 
@@ -169,4 +161,4 @@ def test_probe_vector_batch_releases_its_pins(spark, monkeypatch):
     monkeypatch.setattr(similarity, "cosine_selfjoin_pairs", boom)
     with pytest.raises(RuntimeError, match="intra stage failed"):
         probe_vector_batch(batch, corpus, cent_ids, cent_mat, 0.5, probes=1, intra_batch=True)
-    assert _pinned_rdds(spark) == before
+    assert pinned_rdds(spark) == before

@@ -16,7 +16,7 @@ from notion_vector_store_etl_pipeline_spark.functions import strings as S
 from notion_vector_store_etl_pipeline_spark.operators.bloom import bloom_prejoin_semi
 from notion_vector_store_etl_pipeline_spark.operators.skew import salted_join
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, pinned_rdds
 
 
 def test_url_basename_mirrors_python_unquote(spark):
@@ -77,16 +77,12 @@ def test_graph_pagerank_persists_are_tracked(spark):
         graph_pagerank,
     )
 
-    def pinned() -> int:  # persist() pins, not localCheckpoint blocks
-        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
-        return sum(not r.rdd().isCheckpointed() for r in rdds)
-
     cache.release_cache()
-    before = pinned()
+    before = pinned_rdds(spark)
     graph_pagerank(spark, SF_SMOKE).count()
-    assert pinned() >= before + 2
+    assert pinned_rdds(spark) >= before + 2
     cache.release_cache()
-    assert pinned() == before
+    assert pinned_rdds(spark) == before
 
 
 def test_group_normalize_single_member_group_is_null_not_nan(spark, tmp_path):

@@ -122,7 +122,6 @@ def test_every_package_module_is_reached():
     assert set(unreached) == UNREACHED_BY_DESIGN
 
 
-
 # The one module allowed to persist or unpersist: every other package
 # module pins through operators.cache, either with ``persist(df)`` or
 # with ``c.persist(df)`` on a scope (``with cache_scope() as c``, or a
