@@ -26,6 +26,22 @@ from tests.conftest import pinned_rdds
 SOURCE = "/root/testdata/sf0.001/documents.parquet"
 
 
+@pytest.fixture(autouse=True, scope="module")
+def _release_module_checkpoints(spark):
+    """The probes here return localCheckpoint-backed frames. Whatever
+    still references them when this module ends lets go later, and
+    Spark's context cleaner then drops their RDDs at some later JVM
+    collection, shifting the persistent-RDD count a later module
+    snapshots (test_cli counts every persistent RDD). Unpersist this
+    module's checkpoint RDDs on the way out instead."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keys())
+    yield
+    for rdd_id, rdd in rdds().items():
+        if rdd_id not in before and rdd.rdd().isCheckpointed():
+            rdd.unpersist(True)
+
+
 def _cached(df) -> bool:
     """The session's cache holds ``df``'s plan (materialized or not)."""
     lvl = df.storageLevel
