@@ -16,6 +16,13 @@ several branches of ONE later action read the frame: a lazy cache is
 raced by those branches, each re-running the upstream plan (measured
 2-5x end-to-end on the prefix-filter join). The cost is a Spark job at
 plan construction (the registry caveat in plans.__init__).
+
+A stream's micro-batch work is bound by its job count, not its data.
+:func:`checkpoint_page` materializes a page-bounded frame in one job
+and hands it back as a frame the planner knows is one small partition,
+with whatever aggregates the job observed on the way (its ids, say).
+Aggregates over such frames, and shuffled hash joins between them,
+plan no ``Exchange``.
 """
 
 from __future__ import annotations
@@ -23,7 +30,8 @@ from __future__ import annotations
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def persist(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -65,6 +73,35 @@ def release_cache() -> None:
     spark = SparkSession.getActiveSession()
     if spark is not None:
         spark.catalog.clearCache()
+
+
+def checkpoint_page(df: DataFrame, **observed: Column) -> tuple[DataFrame, dict]:
+    """Materialize a page-bounded frame (a micro-batch, or a result
+    derived from one) with one eager ``localCheckpoint``. Returns the
+    frame and a dict of aggregates the same job observed over it:
+    ``rows`` (the row count) plus each of ``observed``, e.g.
+    ``ids=F.collect_set("doc_id")``.
+
+    The frame reads the checkpoint in one partition, under a ``limit``
+    of exactly its row count. Neither changes the data; together they
+    tell the planner what a checkpoint hides. Aggregates over the frame
+    then need no ``Exchange``, and neither does a shuffled hash join
+    (``hint("shuffle_hash")``; the planner broadcasts small frames
+    otherwise, a job of its own) between two such frames: the planner
+    re-shuffles a one-partition join side only when it cannot size it
+    (``spark.sql.maxSinglePartitionBytes``). A semi or anti join is
+    pushed below a lazy ``coalesce(1)``, but not below a ``limit``.
+    ``localCheckpoint`` blocks are executor-local and cannot be
+    recomputed: losing an executor before the frame's last reader fails
+    that reader (a stream replays the micro-batch)."""
+    obs = Observation()
+    df = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        *(col.alias(name) for name, col in observed.items()),
+    ).localCheckpoint(eager=True)
+    seen = obs.get
+    return df.coalesce(1).limit(seen["rows"]), seen
 
 
 # ---------------------------------------------------------------------------

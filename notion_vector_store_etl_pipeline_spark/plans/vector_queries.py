@@ -1116,8 +1116,9 @@ def neardup_probe_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dynamic-pruning subqueries) — unpersisted, Spark re-runs the
     # Arrow assignment pass per branch (~6x over the day's ingest in
     # the formatted plan). The frame is micro-batch-sized (probes x
-    # batch rows), the same persist contract the streaming probe_batch
-    # uses; eager so concurrent branches can't race the cache populate.
+    # batch rows), the same persist contract the streaming
+    # probe_vector_batch uses; eager so concurrent branches can't race
+    # the cache populate.
     batch_asg = persist(
         nearest_lists(
             batch, c_ids, c_mat, _IVF_BLOCK_PROBES, id_col="vec_id", emb_col="emb"

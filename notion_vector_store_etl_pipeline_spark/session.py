@@ -9,6 +9,8 @@ the right default on a large cluster:
 - ``shuffle.partitions`` defaults to the local core count; on a real
   cluster this would be ~2-3× total executor cores and AQE coalesces
   the small side down anyway.
+- Python workers get the package's root on their path, so UDFs that
+  live in the package import from any working directory.
 """
 
 from __future__ import annotations
@@ -18,6 +20,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+#: the directory the package is imported from
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -41,6 +46,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     return builder.getOrCreate()
 

@@ -217,9 +217,9 @@ def write_ivf_delta(
     list_id stays a sorted data column — the probe's literal isin()
     filter skips on row-group stats, and the broadcast-semi paths never
     partition-pruned deltas anyway — and the fold restores the
-    list_id-partitioned layout for the standing index. The hash
-    repartition keeps upstream assignment parallel while AQE coalesces
-    a micro-batch's shuffle to ~1 write task.
+    list_id-partitioned layout for the standing index. A micro-batch's
+    delta is page-bounded, so it is written as ONE file sorted in
+    place: no shuffle, one job.
 
     Writer-side anchor re-validation (r10 review): an OUT-OF-BAND
     centroid rebuild racing this batch could publish a refreshed-sidecar
@@ -230,7 +230,7 @@ def write_ivf_delta(
     replays the batch from the checkpoint against the new anchor (the
     overwrite is idempotent). In-process folds are sequential and never
     race."""
-    assigned.repartition("list_id").sortWithinPartitions("list_id").write.mode(
+    assigned.coalesce(1).sortWithinPartitions("list_id").write.mode(
         "overwrite"
     ).parquet(f"{out_dir}/delta/batch_id={batch_id}/vectors")
     now = ivf_anchor(read_compaction_manifest(out_dir, spark), base_index_path)

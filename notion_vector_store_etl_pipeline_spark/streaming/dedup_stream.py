@@ -58,8 +58,9 @@ behavior).
 
 Per-ingest cost: batch-side signatures + a bipartite bucket join +
 candidate-local exact verify. The corpus is touched only by (a) the
-stored-index scan and (b) the verify's candidate semi-join — no
-corpus-side signature work, which at 100 TB is the whole point.
+stored-index scan and (b) the verify's read of the candidate docs, by
+id — no corpus-side signature work, which at 100 TB is the whole
+point.
 """
 
 from __future__ import annotations
@@ -68,7 +69,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from notion_vector_store_etl_pipeline_spark.operators.cache import cache_scope, memo_df
+from notion_vector_store_etl_pipeline_spark.operators.cache import (
+    cache_scope,
+    checkpoint_page,
+    memo_df,
+)
 from notion_vector_store_etl_pipeline_spark.operators.statefs import (
     batch_dirs,
     state_fs,
@@ -84,10 +89,10 @@ from notion_vector_store_etl_pipeline_spark.operators.dedup import (
     load_lsh_index,
     lsh_bucket_pairs,
     melted_signature_buckets,
-    minhash_probe_candidates,
     minhash_signatures,
     shingle_sets,
     signatures_from_sets,
+    word_shingles,
     write_lsh_index,
 )
 from notion_vector_store_etl_pipeline_spark.sources.paginated import foreach_page_batch
@@ -143,20 +148,20 @@ def probe_batch(
     ``corpus_index``, verifying candidates exactly against
     ``corpus_docs`` (which must carry text for every sid the index can
     emit). Returns ``(flagged_pairs, clean_docs)`` — flagged is
-    (batch_id, corpus_id, jaccard); clean is the batch rows with no
-    flagged pair. ``intra_batch=True`` additionally self-joins the
-    corpus survivors; how multi-doc CHAINS among them resolve is
-    ``chain_policy`` (``operators.dedup.CHAIN_POLICIES``):
-    "sequential" (default) keeps the greedy first-wins survivors —
-    the same disposition the stream computes when the chain is split
-    across batches, so output is pagination-invariant; "conservative"
-    flags the higher id of EVERY verified pair (module docstring).
-    ``return_clean_buckets=True`` appends a third element: the melted
-    (sid, band, bucket) rows of the CLEAN docs, checkpoint-backed —
-    the signature pass already ran for the probe, so the index-delta
-    writer reuses it instead of re-running shingle+minhash over the
-    clean docs read back from disk (r10 review; byte-identical rows,
-    the computation is per-row deterministic).
+    (batch_id, corpus_id, jaccard); clean is the batch rows, with every
+    column ``batch`` has, that have no flagged pair.
+    ``intra_batch=True`` additionally self-joins the corpus survivors;
+    how multi-doc CHAINS among them resolve is ``chain_policy``
+    (``operators.dedup.CHAIN_POLICIES``): "sequential" (default) keeps
+    the greedy first-wins survivors — the same disposition the stream
+    computes when the chain is split across batches, so output is
+    pagination-invariant; "conservative" flags the higher id of EVERY
+    verified pair (module docstring). ``return_clean_buckets=True``
+    appends a third element: the melted (sid, band, bucket) rows of the
+    CLEAN docs — the signature pass already ran for the probe, so the
+    index-delta writer reuses it instead of re-running shingle+minhash
+    over the clean docs read back from disk (r10 review; byte-identical
+    rows, the computation is per-row deterministic).
 
     One shingle pass: the batch's text crosses the Python shingle UDF
     exactly once, into ``sets`` = (sid, shingle array). The signatures
@@ -167,131 +172,145 @@ def probe_batch(
     that are candidates, and not overridden by the batch, are shingled
     beyond that.
 
-    Cache lifecycle is fully internal (ADVICE r9): two eager pins,
-    ``sets`` and the candidate pairs (each is read by several branches
-    of a later action, so it is materialized once up front instead of
-    raced by lazy readers), plus ``mb``, pinned lazily because the
-    candidate pin's job is its one first reader. The final ``flagged``
-    (and ``clean_mb``) is materialized with an eager
-    ``localCheckpoint`` (micro-batch-sized by construction), and the
-    three pins live in one ``cache_scope``, released when the call
-    returns or raises. Callers get a
-    checkpoint-backed ``flagged`` and a ``clean`` that is one cheap
-    anti-join over it; no ``release_cache()`` contract to forget, no
-    cache accumulation in long direct-caller sessions.
+    Materializations: a micro-batch is bound by its Spark job count,
+    not its data, so the probe runs on a fixed budget of four
+    :func:`operators.cache.checkpoint_page` materializations, each of
+    which also returns what the next one needs to be planned:
 
-    The trade, stated: ``localCheckpoint`` blocks are executor-local
-    and NON-RECOMPUTABLE — losing an executor between this return and
-    the caller's sink write fails the micro-batch (Structured
-    Streaming then recovers by replaying the batch from the
+    1. the batch rows with their shingle arrays, in one partition (one
+       job; the batch ids ride along), then the batch's bucket rows
+       ``mb`` (one job; the count of distinct buckets rides along);
+    2. the candidate pairs: the corpus index scan, in its own
+       partitions, joined to the broadcast batch buckets (two jobs; the
+       candidate corpus ids ride along);
+    3. the corpus-verified flags (three jobs, below; the flagged ids
+       ride along);
+    4. with ``intra_batch``, and only when two batch rows share a
+       bucket (otherwise no batch docs can pair up and the stage is
+       skipped), the survivors' bucket pairs (one job). Only when there
+       are some are they verified and, under "sequential", peeled
+       (:func:`operators.dedup.sequential_firstwins_pairs`), the result
+       materialized once more.
+
+    The corpus verify runs where the b-side is scanned: the candidate
+    corpus docs are read with an ``isin`` over their ids (shingled where
+    they are scanned), and the page-sized pairs and batch arrays are
+    broadcast into that scan. Jaccard is symmetric, so the scanned side
+    takes the verify's a slot. Corpus scans keep their partitions.
+
+    Everything else is lazy over those checkpoints: the candidates'
+    distinct step, the final flagged union,
+    ``clean`` and the clean buckets. ``clean`` and the clean buckets
+    drop the flagged ids with an ``isin`` filter, so no page frame is
+    joined and no ``groupBy`` or ``dropDuplicates`` over the page plans
+    an ``Exchange``. Their consumers (the caller's sink writes) are the
+    actions.
+
+    No cache is pinned, so there is no release contract: what outlives
+    the call is checkpoint blocks, dropped with the frames that read
+    them. The trade, stated: ``localCheckpoint`` blocks are
+    executor-local and NON-RECOMPUTABLE — losing an executor between
+    this return and the caller's sink write fails the micro-batch
+    (Structured Streaming then recovers by replaying the batch from the
     checkpointed source offsets, so the stream self-heals; a direct
     batch caller must simply re-run the call). A lineage-preserving
-    ``persist()`` would recompute instead of fail, but reintroduces
-    the multiplicative plan growth and the cache-lifetime contract
-    this design removed. On clusters with aggressive spot/deallocation
-    churn, a reliable ``checkpoint()`` into the state root is the
-    alternative; per-micro-batch replay-from-source is the cheaper
-    default here (batches are small by construction)."""
+    ``persist()`` would recompute instead of fail, but reintroduces the
+    multiplicative plan growth and a cache-lifetime contract. On
+    clusters with aggressive spot/deallocation churn, a reliable
+    ``checkpoint()`` into the state root is the alternative;
+    per-micro-batch replay-from-source is the cheaper default here
+    (batches are small by construction)."""
     if chain_policy not in CHAIN_POLICIES:
         raise ValueError(f"chain_policy must be one of {CHAIN_POLICIES}, got {chain_policy!r}")
-    with cache_scope() as c:
-        sets = c.persist(shingle_sets(batch), eager=True)
-        # mb is pinned lazily: the candidate pin's job below is its one
-        # first reader, so it populates mb with no count job of its own
-        mb = c.persist(
-            melted_signature_buckets(
-                signatures_from_sets(sets, num_hashes, checkable),
-                bands,
-                num_hashes // bands,
-                checkable,
+    page, seen = checkpoint_page(
+        batch.coalesce(1).withColumn("__sh", word_shingles(F.col("text"))),
+        ids=F.collect_set("doc_id"),
+    )
+    batch_ids = set(seen["ids"])
+    batch = page.drop("__sh")
+    sets = page.select(F.col("doc_id").alias("sid"), F.col("__sh").alias("sh"))
+    # how many distinct buckets the rows fill: when every row has a
+    # bucket of its own, no two batch docs can pair up
+    mb, seen = checkpoint_page(
+        melted_signature_buckets(
+            signatures_from_sets(sets, num_hashes, checkable),
+            bands,
+            num_hashes // bands,
+            checkable,
+        ),
+        buckets=F.size(F.collect_set(F.struct("band", "bucket"))),
+    )
+    colliding = seen["buckets"] < seen["rows"]
+    # Same-id exclusion (r10 review): an UPDATED document — same
+    # doc_id as its corpus entry, changed text — collides with its own
+    # buckets and would be flagged as a near-dup of itself, silently
+    # discarding every edit. A (batch X, corpus X) pair is an update,
+    # not a duplicate; the skip stage upstream already passed it
+    # through deliberately.
+    cand, seen = checkpoint_page(
+        corpus_index.select(F.col("sid").alias("b_id"), "band", "bucket")
+        .join(
+            F.broadcast(mb.select(F.col("sid").alias("a_id"), "band", "bucket")),
+            ["band", "bucket"],
+        )
+        .filter(F.col("a_id") != F.col("b_id"))
+        .select("a_id", "b_id"),
+        ids=F.collect_set("b_id"),
+    )
+    # Verification needs text on both sides, one text per id.
+    # BATCH WINS for ids present on both sides ("the corpus as it
+    # will be after this ingest"): an updated doc's pairs verify
+    # against its NEW text on either end, so the b-side is the
+    # batch's own arrays plus the shingles of only those candidate
+    # corpus docs the batch does not override.
+    wanted = sorted(set(seen["ids"]) - batch_ids)
+    b_sets = sets.unionByName(
+        shingle_sets(
+            corpus_docs.select("doc_id", "text").filter(F.col("doc_id").isin(wanted))
+        )
+    )
+    # the verify runs where that b-side is scanned: the pairs and the
+    # batch arrays are broadcast into the scan, which takes the a slot
+    # (Jaccard is symmetric)
+    swapped = cand.dropDuplicates().select(
+        F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id")
+    )
+    flagged, seen = checkpoint_page(
+        jaccard_verify_sets(F.broadcast(swapped), b_sets, F.broadcast(sets), threshold).select(
+            F.col("b_id").alias("batch_id"), F.col("a_id").alias("corpus_id"), "jaccard"
+        ),
+        ids=F.collect_set("batch_id"),
+    )
+    flagged_ids = set(seen["ids"])
+    if intra_batch and colliding:
+        # pair up the corpus survivors' buckets (dense-bucket star +
+        # chain guard as in minhash_neardup); verified pairs emit a_id
+        # < b_id, so flagging b_id keeps the lowest id (first-wins)
+        pairs, seen = checkpoint_page(
+            lsh_bucket_pairs(
+                mb.filter(~F.col("sid").isin(sorted(flagged_ids))), DENSE_BUCKET_CAP
             )
         )
-        # Same-id exclusion (r10 review): an UPDATED document — same
-        # doc_id as its corpus entry, changed text — collides with its own
-        # buckets and would be flagged as a near-dup of itself, silently
-        # discarding every edit. A (batch X, corpus X) pair is an update,
-        # not a duplicate; the skip stage upstream already passed it
-        # through deliberately. Pinned eagerly: the verify below reads the
-        # candidates twice in one action (corpus-side semi-join + pair
-        # join), and racing lazy readers would each re-run the index join.
-        cand = c.persist(
-            minhash_probe_candidates(mb, corpus_index).filter(
-                F.col("a_id") != F.col("b_id")
-            ),
-            eager=True,
-        )
-        # Verification needs text on both sides, one text per id.
-        # BATCH WINS for ids present on both sides ("the corpus as it
-        # will be after this ingest"): an updated doc's pairs verify
-        # against its NEW text on either end, so the b-side is the
-        # batch's own arrays plus the shingles of only those candidate
-        # corpus docs the batch does not override.
-        corpus_sets = shingle_sets(
-            corpus_docs.select("doc_id", "text")
-            .join(cand.select(F.col("b_id").alias("doc_id")), "doc_id", "left_semi")
-            .join(batch.select("doc_id"), "doc_id", "left_anti")
-        )
-        flagged = jaccard_verify_sets(
-            cand, sets, sets.unionByName(corpus_sets), threshold
-        ).select(
-            F.col("a_id").alias("batch_id"), F.col("b_id").alias("corpus_id"), "jaccard"
-        )
-        if intra_batch:
-            # truncate lineage before nesting: the intra stage embeds
-            # the corpus-verify plan in its own plan on BOTH union
-            # branches, and Spark expands the shared sub-DAG to a tree
-            # — without the checkpoint the logical plan grows
-            # multiplicatively and planning itself OOMs the driver
-            # (measured: a 3-doc batch). flagged is micro-batch-sized;
-            # an eager localCheckpoint is cheap.
-            flagged = flagged.localCheckpoint(eager=True)
-            # pair up the corpus survivors' buckets (dense-bucket star +
-            # chain guard as in minhash_neardup); verified pairs emit a_id
-            # < b_id, so flagging b_id keeps the lowest id (first-wins)
-            survivor_mb = mb.join(
-                flagged.select(F.col("batch_id").alias("sid")), "sid", "left_anti"
-            )
-            intra_pairs = jaccard_verify_sets(
-                lsh_bucket_pairs(survivor_mb, DENSE_BUCKET_CAP), sets, sets, threshold
-            )
+        if seen["rows"]:
+            intra = jaccard_verify_sets(pairs, F.broadcast(sets), F.broadcast(sets), threshold)
             if chain_policy == "sequential":
                 # resolve chains to the stream-equivalent greedy
                 # disposition (CHAIN_POLICIES in operators.dedup): a~b~c
                 # keeps c, making the flagged set invariant to where
                 # batch boundaries fall
-                intra_pairs = sequential_firstwins_pairs(intra_pairs)
-            intra = intra_pairs.select(
-                F.col("b_id").alias("batch_id"), F.col("a_id").alias("corpus_id"), "jaccard"
-            )
-            flagged = flagged.unionByName(intra)
-        # materialize once (micro-batch-sized); the returned plans then
-        # depend only on checkpointed blocks, so the scope may release
-        # the pins
-        flagged = flagged.localCheckpoint(eager=True)
-        clean_mb = None
-        if return_clean_buckets:
-            # filter the already-computed buckets to clean survivors and
-            # pin them BEFORE mb is released; checkpoint is batch-sized
-            # like flagged. One partition: the cached mb keeps its
-            # shuffle-partition count, and the index-delta writer would
-            # otherwise emit that many tiny files per batch.
-            clean_mb = (
-                mb.join(
-                    flagged.select(F.col("batch_id").alias("sid")).dropDuplicates(),
-                    "sid",
-                    "left_anti",
+                intra = sequential_firstwins_pairs(intra)
+            intra, seen = checkpoint_page(intra, ids=F.collect_set("b_id"))
+            flagged_ids |= set(seen["ids"])
+            flagged = flagged.unionByName(
+                intra.select(
+                    F.col("b_id").alias("batch_id"), F.col("a_id").alias("corpus_id"), "jaccard"
                 )
-                .coalesce(1)
-                .localCheckpoint(eager=True)
             )
-        clean = batch.join(
-            flagged.select(F.col("batch_id").alias("doc_id")).dropDuplicates(),
-            "doc_id",
-            "left_anti",
-        )
-        if return_clean_buckets:
-            return flagged, clean, clean_mb
-        return flagged, clean
+    drop = sorted(flagged_ids)
+    clean = batch.filter(~F.col("doc_id").isin(drop))
+    if return_clean_buckets:
+        return flagged, clean, mb.filter(~F.col("sid").isin(drop))
+    return flagged, clean
 
 
 def latest_committed_batch(

@@ -90,7 +90,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from notion_vector_store_etl_pipeline_spark.functions import vectors as V
-from notion_vector_store_etl_pipeline_spark.operators.cache import memo_df
+from notion_vector_store_etl_pipeline_spark.operators.cache import (
+    checkpoint_page,
+    memo_df,
+)
 from notion_vector_store_etl_pipeline_spark.operators.dedup import load_lsh_index
 from notion_vector_store_etl_pipeline_spark.operators.similarity import (
     load_ivf_sidecar,
@@ -219,8 +222,12 @@ def ingest_stage(
     from the buckets the probe already derived from its one shingle
     pass over the batch (probe_batch docstring)."""
     _t = time.perf_counter()
+    # probe_batch shingles only (doc_id, text), once, and its clean
+    # frame keeps every column it is given: the chunk stage's source
+    # column rides along, so clean_full is a lazy filter over the
+    # probe's checkpoint, not a rejoin pinned of its own
     probed = probe_batch(
-        todo.select("doc_id", "text"),
+        todo.select("doc_id", "text", "source"),
         corpus_docs,
         lsh_index,
         threshold,
@@ -230,28 +237,17 @@ def ingest_stage(
         return_clean_buckets=return_clean_buckets,
         chain_policy=chain_policy,
     )
-    flagged, clean = probed[0], probed[1]
+    flagged, clean_full = probed[0], probed[1]
     _t = _mark(_PROFILE_BID, "kernel:probe", _t)
-    # probe_batch consumes only (doc_id, text), shingles that text
-    # once, and returns checkpoint-backed frames with its own pins
-    # already released; rejoin for the chunk stage's source column.
-    # localCheckpoint (ingest-batch-sized, the same contract
-    # probe_batch's outputs use): clean_full feeds the clean sink and
-    # the chunk stage, and chunks feeds BOTH the linkage sink and the
-    # assignment — unpinned, the chunk+embed pipeline would run once
-    # per consuming action.
-    clean_full = (
-        todo.join(clean.select("doc_id"), "doc_id", "left_semi")
-        .select("doc_id", "text", "source")
-        .localCheckpoint(eager=True)
-    )
+    # clean_full stays lazy: this stage pins nothing, and keeps its
+    # slot in the stage profile
     _t = _mark(_PROFILE_BID, "kernel:clean_pin", _t)
     # sidecar only — the vectors scan would be discarded, and its
     # eager listing cost ~1 s/batch (VERDICT r13 #1); the memo behind
     # load_ivf_sidecar makes repeat anchors free
     c_ids, c_mat = load_ivf_sidecar(spark, ivf_index_path)
     _t = _mark(_PROFILE_BID, "kernel:ivf_load", _t)
-    chunks = embedded_chunks(clean_full, max_len).localCheckpoint(eager=True)
+    chunks, _ = checkpoint_page(embedded_chunks(clean_full, max_len))
     _t = _mark(_PROFILE_BID, "kernel:chunk_embed", _t)
     assigned = quantize_and_assign(
         chunks.select("vec_id", "emb"), c_ids, c_mat, topn=1, id_col="vec_id", emb_col="emb"
@@ -778,14 +774,15 @@ def streaming_ingest_etl(
                 rebuild_sample_mod=rebuild_sample_mod,
             )
         _t = _mark(batch_id, "folds", _t)
-        if batch.isEmpty():
+        # pin the micro-batch once, as a one-partition page frame: it
+        # feeds the skip join AND the final state write — two
+        # independent sink actions that would otherwise re-pull the
+        # source frame. The pin's row count is the empty-batch test.
+        batch, seen = checkpoint_page(
+            batch.withColumn("content_hash", F.sha2(F.col("text"), 256)).coalesce(1)
+        )
+        if not seen["rows"]:
             return
-        # pin the micro-batch once: it feeds the skip join AND the
-        # final state write — two independent sink actions that would
-        # otherwise re-pull the source frame
-        batch = batch.withColumn(
-            "content_hash", F.sha2(F.col("text"), 256)
-        ).localCheckpoint(eager=True)
         _t = _mark(batch_id, "pin_batch", _t)
         prior = read_ingest_state(spark, out_dir, batch_id)
         todo = batch
@@ -809,18 +806,18 @@ def streaming_ingest_etl(
             # ever-seen set) mis-skips an A->B->A revert: its
             # version-A vec_ids were staled when B superseded them,
             # so the doc would be served with B's embeddings forever
-            # (ADVICE r10). localCheckpoint: todo feeds the probe AND
-            # the clean rejoin; unpinned, the state scan and anti-join
-            # would re-execute once per downstream action.
+            # (ADVICE r10). Pinned: todo feeds the probe AND the state
+            # write; unpinned, the state scan and anti-join would
+            # re-execute once per downstream action.
             latest = prior.groupBy("doc_id").agg(
                 F.max(F.struct("batch_id", "content_hash"))["content_hash"].alias(
                     "content_hash"
                 )
             )
-            todo = batch.join(
-                latest, ["doc_id", "content_hash"], "left_anti"
-            ).localCheckpoint(eager=True)
-            if todo.isEmpty():
+            todo, seen = checkpoint_page(
+                batch.join(latest, ["doc_id", "content_hash"], "left_anti")
+            )
+            if not seen["rows"]:
                 # every doc in this batch was skipped (a verbatim
                 # re-feed): nothing to probe, chunk, or record. Writing
                 # the empty artifacts anyway is not just waste — the
@@ -960,12 +957,15 @@ def streaming_ingest_etl(
         # (r12 review; the skip decision itself only needs the hash of
         # the latest EXISTING row, which the prior processed/flagged
         # row already carries).
+        # todo and chunks are page checkpoints: the aggregate and the
+        # hash join run in their one partition, so the write is the one
+        # job (a broadcast of the small side would be a second)
         (
             todo.select("doc_id", "content_hash")
             .join(
-                chunks.groupBy("doc_id").agg(
-                    F.collect_list("vec_id").alias("vec_ids")
-                ),
+                chunks.groupBy("doc_id")
+                .agg(F.collect_list("vec_id").alias("vec_ids"))
+                .hint("shuffle_hash"),
                 "doc_id",
                 "left",
             )

@@ -133,7 +133,8 @@ def test_probe_batch_releases_its_own_caches(spark, monkeypatch):
     def boom(*args, **kwargs):
         raise RuntimeError("verify failed")
 
-    # the verify runs after all three pins are taken
+    # the corpus verify runs after the batch and its candidates are
+    # materialized
     monkeypatch.setattr(dedup_stream, "jaccard_verify_sets", boom)
     with pytest.raises(RuntimeError, match="verify failed"):
         dedup_stream.probe_batch(batch, corpus, index)

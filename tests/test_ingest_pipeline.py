@@ -363,3 +363,62 @@ def test_changed_doc_old_vectors_go_stale(spark, tmp_path):
         .collect()
     }
     assert other_vecs and other_vecs <= served
+
+
+class _StageJobs(list):
+    """A stage profile (``ingest_pipeline._PROFILE``) that also counts
+    the Spark jobs of each stage: the stream runs its jobs in the
+    query's run-id job group, and a stage owns the group's jobs since
+    the previous stage ended."""
+
+    def __init__(self, spark):
+        super().__init__()
+        self.spark = spark
+        self.seen: set[int] = set()
+        self.jobs: dict[tuple[int, str], int] = {}
+
+    def append(self, item) -> None:
+        super().append(item)
+        batch, stage, _ = item
+        (query,) = self.spark.streams.active
+        group = str(query.runId)
+        new = set(self.spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+        self.jobs[(batch, stage)] = len(new - self.seen)
+        self.seen |= new
+
+
+#: per-stage job ceilings of the composed stream's first batch
+BATCH0_JOB_BUDGET = {
+    "kernel:probe": 10,
+    "kernel:clean_pin": 1,
+    "write_state": 2,
+    "write_ann": 1,
+}
+
+
+def test_composed_stream_batch0_job_budget(spark, tmp_path):
+    """The first micro-batch (no prior state: no skip or event work) is
+    bound by its job count, not its 50 docs. The probe runs in four
+    page materializations, nothing is pinned between the probe and the
+    chunk stage, and the state and ANN writes aggregate and sort their
+    one-partition inputs in place: each stage stays within its
+    budget."""
+    from notion_vector_store_etl_pipeline_spark.streaming import ingest_pipeline as IP
+
+    incoming, corpus_path, lsh_path, ivf_path = _fixture(spark, tmp_path)
+    src = str(tmp_path / "incoming.parquet")
+    _write_source(incoming.orderBy("doc_id").toPandas(), src)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    profile = IP._PROFILE = _StageJobs(spark)
+    try:
+        _run(
+            spark, src, corpus_path, lsh_path, ivf_path, out, ckpt,
+            page_size=incoming.count(), pages_per_batch=1,
+        )
+    finally:
+        IP.disable_stage_profile()
+    jobs = {stage: n for (batch, stage), n in profile.jobs.items() if batch == 0}
+    assert set(BATCH0_JOB_BUDGET) <= set(jobs), jobs
+    over = {s: jobs[s] for s, cap in BATCH0_JOB_BUDGET.items() if jobs[s] > cap}
+    assert not over, jobs
+    assert spark.read.parquet(f"{out}/clean").count() > 0

@@ -197,3 +197,47 @@ def test_batch_cli_run_hashes_and_chunks_once(spark, tmp_path, capsys):
             assert not [n for n in nodes if "ArrowEvalPython" in n], (name, nodes)
         nodes = _executed_nodes(rerun.stale_vectors.groupBy().count())
         assert not [n for n in nodes if "documents.parquet" in n], nodes
+
+
+def test_probe_batch_plans_no_exchange_over_the_page(spark, tmp_path, monkeypatch):
+    """The stream's dedup probe (PLANS.md "stream probe"): a micro-batch
+    is bound by its job count, and a hash exchange over a page-bounded
+    frame is a job of its own. No frame ``probe_batch`` materializes,
+    and none it returns, plans an ``Exchange hashpartitioning``: the
+    page frames are one partition the planner can size, and the joins
+    with the stored index and the corpus broadcast the page side. The
+    batch holds an intra-batch pair, so the intra verify runs. The
+    policy is "conservative": the "sequential" peel over verified
+    pairs is ``operators.dedup.sequential_firstwins_pairs``'s own plan,
+    not the probe's, and a single pair resolves the same either way."""
+    from pyspark.sql import functions as F
+
+    from notion_vector_store_etl_pipeline_spark.operators import dedup as D
+    from notion_vector_store_etl_pipeline_spark.streaming import dedup_stream
+
+    plans = []
+    real = dedup_stream.checkpoint_page
+
+    def recording(df, **observed):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, **observed)
+
+    monkeypatch.setattr(dedup_stream, "checkpoint_page", recording)
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("doc_id", "text")
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    D.write_lsh_index(D.build_lsh_index(corpus), str(tmp_path / "lsh"))
+    index = D.load_lsh_index(spark, str(tmp_path / "lsh"))
+    pair = " ".join(f"pair{i}" for i in range(40))
+    extra = spark.createDataFrame([(900001, pair), (900002, pair + " tail")], "doc_id long, text string")
+    batch = docs.filter(F.col("doc_id") % 10 == 0).unionByName(extra)
+    out = dedup_stream.probe_batch(
+        batch, corpus, index, intra_batch=True, return_clean_buckets=True,
+        chain_policy="conservative",
+    )
+    assert (900002, 900001) in {(r.batch_id, r.corpus_id) for r in out[0].collect()}
+    plans += [df._jdf.queryExecution().executedPlan().toString() for df in out]
+    # six materializations (page, buckets, candidates, verify, intra
+    # pairs, intra verify) and the three outputs
+    assert len(plans) == 9, len(plans)
+    for plan in plans:
+        assert "Exchange hashpartitioning" not in plan, plan[:4000]

@@ -710,10 +710,14 @@ def _jobs_in(spark, group, fn):
 
 def test_probe_batch_job_ceiling(spark):
     """probe_batch is bound by job count, not data, at micro-batch
-    size: the batch crosses the shingle UDF once and every later stage
-    reads the two pins. A 100-doc batch with no intra pairs (five
-    cross-id near-dups of corpus docs) stays within 30 jobs; the
-    composition that shingled the batch four times launched 44 here."""
+    size: page materializations, no exchange over the page. A 100-doc
+    batch with no intra pairs (five cross-id near-dups of corpus docs)
+    runs 7 jobs: the batch's shingle sets (1) and bucket rows (1), the
+    candidate pairs (broadcast + scan, 2) and the corpus verify (two
+    broadcasts + scan, 3); no two batch docs share a bucket, so there
+    is no intra stage. The composition that shingled the batch four
+    times launched 44 here, the one with pinned caches and shuffles
+    30."""
     import random
 
     from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
@@ -749,4 +753,4 @@ def test_probe_batch_job_ceiling(spark):
     ]
     assert clean.count() == 95
     assert clean_mb.select("sid").distinct().count() == 95
-    assert jobs <= 30, jobs
+    assert jobs <= 7, jobs
