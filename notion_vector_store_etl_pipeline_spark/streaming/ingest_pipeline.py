@@ -105,7 +105,6 @@ from notion_vector_store_etl_pipeline_spark.operators.statefs import (
     state_fs,
     write_json_atomic,
 )
-from notion_vector_store_etl_pipeline_spark.session import empty_frame
 from notion_vector_store_etl_pipeline_spark.sources.paginated import foreach_page_batch
 from notion_vector_store_etl_pipeline_spark.streaming.ann_stream import (
     fold_ann_state,
@@ -912,6 +911,10 @@ def streaming_ingest_etl(
         # models). Revive detection still scans ALL versions: an
         # A->B->A->B oscillation must revive B's vecs from two versions
         # back.
+        #
+        # With no prior state (batch 0) there is nothing to supersede:
+        # no event dirs are written, and every event reader treats a
+        # missing batch dir as a batch without events.
         if prior is not None:
             prior_scoped = prior.join(todo.select("doc_id"), "doc_id", "left_semi")
             latest_exp = (
@@ -934,14 +937,12 @@ def streaming_ingest_etl(
                 .select("vec_id")
                 .dropDuplicates()
             )
-        else:
-            stale = revive = empty_frame(spark, "vec_id long")
-        stale.write.mode("overwrite").parquet(
-            f"{out_dir}/stale/batch_id={batch_id}"
-        )
-        revive.write.mode("overwrite").parquet(
-            f"{out_dir}/revive/batch_id={batch_id}"
-        )
+            stale.write.mode("overwrite").parquet(
+                f"{out_dir}/stale/batch_id={batch_id}"
+            )
+            revive.write.mode("overwrite").parquet(
+                f"{out_dir}/revive/batch_id={batch_id}"
+            )
         _t = _mark(batch_id, "events", _t)
         # state LAST: a crash before this point replays the batch with
         # the doc not yet marked processed (rewrite, idempotent); after

@@ -4,6 +4,8 @@ import pytest
 
 from pyspark.sql import SparkSession
 
+from notion_vector_store_etl_pipeline_spark.session import python_workers
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
@@ -17,7 +19,8 @@ def pinned_rdds(spark: SparkSession) -> int:
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
-    spark = (
+    # Python workers start as get_spark starts them (session.python_workers)
+    builder = (
         SparkSession.builder.appName("nve-tests")
         .master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
@@ -25,8 +28,8 @@ def spark() -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
+    spark = python_workers(builder).getOrCreate()
     yield spark
     spark.stop()
 

@@ -391,8 +391,9 @@ class _StageJobs(list):
 BATCH0_JOB_BUDGET = {
     "kernel:probe": 10,
     "kernel:clean_pin": 1,
-    "write_state": 2,
     "write_ann": 1,
+    "events": 0,
+    "write_state": 2,
 }
 
 
@@ -400,9 +401,9 @@ def test_composed_stream_batch0_job_budget(spark, tmp_path):
     """The first micro-batch (no prior state: no skip or event work) is
     bound by its job count, not its 50 docs. The probe runs in four
     page materializations, nothing is pinned between the probe and the
-    chunk stage, and the state and ANN writes aggregate and sort their
-    one-partition inputs in place: each stage stays within its
-    budget."""
+    chunk stage, the state and ANN writes aggregate and sort their
+    one-partition inputs in place, and no (empty) event frames are
+    written: each stage stays within its budget."""
     from notion_vector_store_etl_pipeline_spark.streaming import ingest_pipeline as IP
 
     incoming, corpus_path, lsh_path, ivf_path = _fixture(spark, tmp_path)

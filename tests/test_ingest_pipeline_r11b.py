@@ -16,6 +16,7 @@
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pandas as pd
@@ -96,7 +97,7 @@ def test_vacuum_consumed_events_bounded_history(
         spark, out, through_batch=last, prune_state=True, vacuum_events=True
     )
     assert man["version"] == 1 and man["through_batch"] == last
-    assert not os.path.isdir(f"{out}/stale/batch_id=0"), "tail not pruned"
+    assert not glob.glob(f"{out}/stale/batch_id=*"), "tail not pruned"
     # the consumed update-era stale event (va) was excluded from the
     # fold; the unconsumed revert-era events (stale vb, revive va)
     # survive in v=1 — liveness above the watermark still computable
