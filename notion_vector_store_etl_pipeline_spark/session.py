@@ -17,9 +17,9 @@ too):
   package import from any working directory.
 - They import the interpreter's installed PySpark, not Spark's
   ``python/lib/pyspark.zip``. The zip holds no bytecode, so every
-  worker started from it compiles PySpark from source first: about
-  1 s of wall and 1.5 s of CPU per process, against 0.3-0.4 s and
-  0.8 s from the installed package. A stream (re)start pays it four
+  worker started from it compiles PySpark from source first: on a
+  4-vCPU host, about 1 s of wall and 1.5 s of CPU per process, against
+  0.3-0.4 s and 0.8 s from the installed package. A stream (re)start pays it four
   times over (the data-source lookup, create and plan-read processes
   and the streaming source runner), and each UDF daemon once. Spark
   always puts the zip first on a worker's ``PYTHONPATH``, ahead of
@@ -67,7 +67,7 @@ def spark_version(spark_home: str) -> str | None:
     return None
 
 
-def installed_pyspark_version(python: str, env: Mapping[str, str]) -> str | None:
+def _installed_pyspark_version(python: str, env: Mapping[str, str]) -> str | None:
     """The version of the PySpark that ``python`` has installed, or
     None when it has none (or does not run)."""
     try:
@@ -89,13 +89,16 @@ def worker_launcher_env(env: Mapping[str, str], jvm_version: str | None) -> dict
     """The environment entries that start Spark's Python workers through
     :data:`WORKER_LAUNCHER`: ``PYSPARK_PYTHON`` names the launcher and
     the launcher execs the interpreter it wraps. Empty, so workers start
-    as Spark starts them, when the launcher is already installed, is
-    not executable, or the wrapped interpreter's installed PySpark is
-    not ``jvm_version``."""
+    as Spark starts them, when a launcher is already installed (by this
+    process or the one that started it: wrapping it again would make
+    it exec itself), when it is not executable, or when the wrapped
+    interpreter's installed PySpark is not ``jvm_version``."""
     python = env.get("PYSPARK_PYTHON") or "python3"  # Spark's default
-    if python == WORKER_LAUNCHER or not os.access(WORKER_LAUNCHER, os.X_OK):
+    if os.path.basename(python) == os.path.basename(WORKER_LAUNCHER):
         return {}
-    if jvm_version is None or installed_pyspark_version(python, env) != jvm_version:
+    if not os.access(WORKER_LAUNCHER, os.X_OK):
+        return {}
+    if jvm_version is None or _installed_pyspark_version(python, env) != jvm_version:
         return {}
     return {"PYSPARK_PYTHON": WORKER_LAUNCHER, _WRAPPED_PYTHON: python}
 

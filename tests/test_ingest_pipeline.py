@@ -391,9 +391,9 @@ class _StageJobs(list):
 BATCH0_JOB_BUDGET = {
     "kernel:probe": 10,
     "kernel:clean_pin": 1,
+    "write_state": 2,
     "write_ann": 1,
     "events": 0,
-    "write_state": 2,
 }
 
 

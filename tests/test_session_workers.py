@@ -18,6 +18,7 @@ import sys
 
 import pyspark
 import pytest
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from notion_vector_store_etl_pipeline_spark import session
@@ -29,7 +30,8 @@ from notion_vector_store_etl_pipeline_spark.session import (
 )
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SPARK_ZIP = "/opt/spark-x/python/lib/pyspark.zip"
+#: the entry Spark puts first on every worker's PYTHONPATH
+SPARK_ZIP = os.path.join(_find_spark_home(), "python", "lib", "pyspark.zip")
 
 
 def _fake_python(tmp_path, name: str, body: str) -> str:
@@ -83,8 +85,21 @@ def test_guard_fails_to_stock_workers(tmp_path, body, jvm):
     assert worker_launcher_env({"PYSPARK_PYTHON": str(tmp_path / "missing")}, "9.8.7") == {}
 
 
-def test_installed_launcher_is_not_wrapped_again():
-    assert worker_launcher_env({"PYSPARK_PYTHON": WORKER_LAUNCHER}, pyspark.__version__) == {}
+def test_installed_launcher_is_not_wrapped_again(tmp_path):
+    """Also not another checkout's launcher, inherited from the process
+    that started this one: wrapped, it would exec itself."""
+    other = _fake_python(tmp_path, os.path.basename(WORKER_LAUNCHER), "echo 9.8.7")
+    for launcher in (WORKER_LAUNCHER, other):
+        env = {"PYSPARK_PYTHON": launcher, "NVE_WORKER_PYTHON": sys.executable}
+        assert worker_launcher_env(env, "9.8.7") == {}
+
+
+def test_launcher_without_exec_bit_is_not_installed(monkeypatch, tmp_path):
+    plain = tmp_path / "python_worker.sh"
+    plain.write_text(open(WORKER_LAUNCHER).read())
+    monkeypatch.setattr(session, "WORKER_LAUNCHER", str(plain))
+    py = _fake_python(tmp_path, "py", "echo 9.8.7")
+    assert worker_launcher_env({"PYSPARK_PYTHON": py}, "9.8.7") == {}
 
 
 def test_spark_version_reads_the_jvm_jars(tmp_path):
