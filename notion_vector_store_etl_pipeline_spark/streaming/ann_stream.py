@@ -111,7 +111,7 @@ def load_stream_ann_state(
     return load_ivf_index_with_deltas(spark, ivf_anchor(man, base_index_path), deltas)
 
 
-def fold_ann_state(
+def compact_ann_stream_state(
     spark: SparkSession,
     out_dir: str,
     through_batch: int,
@@ -122,28 +122,41 @@ def fold_ann_state(
     rebuild_sample_mod: int | None = None,
     events=None,
 ) -> dict | None:
-    """The IVF fold body behind :func:`compact_ann_stream_state` and the
-    composed pipeline's ``compact_pipeline_ann_state``: the delta tail
-    ``(watermark, through_batch]`` (plus, with ``rebuild_centroids``, a
-    centroid refresh) becomes version ``k``, published through the
-    shared fold protocol (:mod:`streaming.state`).
+    """Fold committed delta trees through ``through_batch`` into the
+    next stored-index version, under the fold protocol of
+    :mod:`streaming.state` — a covered window is a no-op.
+    ``prune_deltas`` deletes the folded delta dirs, keeping the delta
+    tree's listing bounded by compact_every instead of stream age.
+    ``retain_versions=N`` vacuums index versions superseded by more
+    than N compactions (each version contains everything its
+    predecessors did — storage stays O(N x index), not O(stream age)).
 
-    ``events(manifest)``, when given, returns ``(drop_vec_ids,
-    revived)`` for the window: vec_ids to reclaim physically
-    (``None`` = no stale events) and the revive-event frame whose
-    non-emptiness asks for duplicate-row collapse. A window with
-    stale events folds even without deltas, and the published
-    manifest records ``stale_through``."""
+    ``rebuild_centroids=True`` performs a centroid REFRESH instead of
+    a plain fold: :func:`operators.similarity.rebuild_ivf_index`
+    resamples centroids from base ∪ delta-tail and reassigns every
+    vector, producing a version whose sidecar tracks the drifted
+    distribution — the documented rebuild trigger for recall decay
+    under distribution shift (VERDICT r9 missing #2). A rebuilt
+    version's sidecar DIFFERS from its predecessors', which is exactly
+    the point; consumers always probe a version against its own
+    sidecar, so the swap is invisible to them.
+
+    ``events(manifest)``, given by the composed pipeline's
+    ``compact_pipeline_ann_state``, returns ``(drop_vec_ids,
+    dedup_rows)`` for the window: vec_ids to reclaim physically
+    (``None`` = no stale events) and whether revived copies need a
+    duplicate-row collapse. A window with stale events folds even
+    without deltas, and the published manifest records
+    ``stale_through``."""
     man, k = open_fold(spark, out_dir, through_batch)
     if k is None:
         return man
     deltas = batch_dirs(
         state_fs(spark, out_dir), f"{out_dir}/delta", watermark(man), through_batch + 1
     )
-    drop, revived = events(man) if events else (None, None)
+    drop, dedup_rows = events(man) if events else (None, False)
     if not deltas and not rebuild_centroids and drop is None:
         return man
-    dedup_rows = revived is not None and not revived.isEmpty()
     base = ivf_anchor(man, base_index_path)
     out_path = f"{out_dir}/index_versions/v{k}"
     kw = dict(drop_vec_ids=drop, dedup_rows=dedup_rows)
@@ -161,40 +174,6 @@ def fold_ann_state(
         manifest["stale_through"] = through_batch
     return publish_fold(
         spark, out_dir, manifest, deltas if prune_deltas else (), retain_versions
-    )
-
-
-def compact_ann_stream_state(
-    spark: SparkSession,
-    out_dir: str,
-    through_batch: int,
-    base_index_path: str,
-    prune_deltas: bool = False,
-    retain_versions: int | None = None,
-    rebuild_centroids: bool = False,
-    rebuild_sample_mod: int | None = None,
-) -> dict | None:
-    """Fold committed delta trees through ``through_batch`` into the
-    next stored-index version (:func:`fold_ann_state`, under the fold
-    protocol of :mod:`streaming.state` — a covered window is a no-op).
-    ``prune_deltas`` deletes the folded delta dirs, keeping the delta
-    tree's listing bounded by compact_every instead of stream age.
-    ``retain_versions=N`` vacuums index versions superseded by more
-    than N compactions (each version contains everything its
-    predecessors did — storage stays O(N x index), not O(stream age)).
-
-    ``rebuild_centroids=True`` performs a centroid REFRESH instead of
-    a plain fold: :func:`operators.similarity.rebuild_ivf_index`
-    resamples centroids from base ∪ delta-tail and reassigns every
-    vector, producing a version whose sidecar tracks the drifted
-    distribution — the documented rebuild trigger for recall decay
-    under distribution shift (VERDICT r9 missing #2). A rebuilt
-    version's sidecar DIFFERS from its predecessors', which is exactly
-    the point; consumers always probe a version against its own
-    sidecar, so the swap is invisible to them."""
-    return fold_ann_state(
-        spark, out_dir, through_batch, base_index_path,
-        prune_deltas, retain_versions, rebuild_centroids, rebuild_sample_mod,
     )
 
 

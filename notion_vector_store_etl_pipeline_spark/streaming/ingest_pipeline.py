@@ -36,9 +36,9 @@ operator:
    centroid refresh published between batches is picked up and new
    deltas assign against the CURRENT sidecar.
 
-Exactly-once: every per-batch artifact (state, flagged, clean, stale,
-revive, index delta, ann delta) is a ``batch_id=N`` overwrite — crash
-replays rewrite byte-identically, the same discipline as both wings.
+Exactly-once: every per-batch artifact (state, flagged, clean, events,
+index delta, ann delta) is a ``batch_id=N`` overwrite — crash replays
+rewrite byte-identically, the same discipline as both wings.
 
 Dedup is INTRA-STREAM as well as cross-corpus (VERDICT r10 #1): with
 ``update_index=True`` (the default) each batch's surviving docs write
@@ -65,17 +65,22 @@ Document lifecycle (ADVICE r10 + VERDICT r10 #2): the skip stage
 compares each doc against its LATEST state row (not the additive
 ever-seen set), so a doc whose content reverts A->B->A is REPROCESSED
 — its version-A vectors were marked stale when B superseded them, and
-skipping would serve the doc with B's embeddings forever. Stale and
-revive are ordered EVENTS keyed by batch: re-processing writes the
-superseded versions' vec_ids to ``stale/batch_id=N`` and the re-added
-previously-known vec_ids to ``revive/batch_id=N``; a vec_id is dead
-iff its newest stale event outranks its newest revive event.
+skipping would serve the doc with B's embeddings forever. Supersession
+is one ordered EVENT log keyed by batch, ``events/batch_id=N`` of
+``(vec_id, live)`` rows (:func:`supersede_events`): re-processing a
+doc writes its latest prior version's vec_ids that the new content
+does not regenerate with ``live = false`` (stale), and the previously
+known vec_ids it does regenerate with ``live = true`` (revive). A
+vec_id is dead iff its newest event, ranked by ``(batch_id, live)``,
+has ``live = false`` — a revive wins a tie at equal batch.
 :func:`compact_pipeline_ann_state` then physically RECLAIMS dead
 vectors at fold time (the folded version contains zero dead vec_ids —
 the reference deletes stale vector files outright, ``:609-614``) and
 retires the consumed events behind the manifest's ``stale_through``
 watermark, so the serve-time subtraction list is bounded by the fold
-cadence, not the corpus's lifetime update count.
+cadence, not the corpus's lifetime update count. An ``out_dir`` that
+still holds the older two-tree layout (separate ``stale``/``revive``
+trees) is rejected, not read (:func:`_reject_two_tree_layout`).
 
 Stream == batch-twin parity is pinned in tests/test_ingest_pipeline.py;
 the revert/reclaim lifecycle in tests/test_ingest_pipeline_r11.py.
@@ -107,7 +112,7 @@ from notion_vector_store_etl_pipeline_spark.operators.statefs import (
 )
 from notion_vector_store_etl_pipeline_spark.sources.paginated import foreach_page_batch
 from notion_vector_store_etl_pipeline_spark.streaming.ann_stream import (
-    fold_ann_state,
+    compact_ann_stream_state,
     ivf_anchor,
     load_stream_ann_state,
     write_ivf_delta,
@@ -262,46 +267,64 @@ def ingest_stage(
     return out
 
 
-#: the per-batch trees of the skip/event state (all folded behind the
+#: the per-batch trees of the skip/event state (both folded behind the
 #: ``{out}/state`` manifest) and their columns; ``batch_id`` (the
 #: partition column of the per-batch dirs) is KEPT as a data column in
 #: every folded version: the skip stage orders state rows by it
-#: (latest-per-doc), and stale/revive are ordered EVENTS whose batch
-#: rank decides liveness (module docstring)
+#: (latest-per-doc), and ``events`` is one ordered log whose
+#: ``(batch_id, live)`` rank decides liveness (module docstring)
 STATE_TREES = {
     "state": ["doc_id", "content_hash", "vec_ids", "batch_id"],
-    "stale": ["vec_id", "batch_id"],
-    "revive": ["vec_id", "batch_id"],
+    "events": ["vec_id", "batch_id", "live"],
 }
+
+#: the older layout's event trees: stale and revive in two parallel logs
+_TWO_TREE_LAYOUT = ("stale", "revive", "stale_versions", "revive_versions")
+
+
+def _reject_two_tree_layout(spark: SparkSession, out_dir: str) -> None:
+    """Fail loudly on an ``out_dir`` that still holds the two-tree event
+    layout (separate ``stale``/``revive`` logs and their folds): this
+    build reads one tagged ``events`` log, and reading only half a
+    history would serve superseded vectors. A driver-side existence
+    check, no Spark job."""
+    fs = state_fs(spark, out_dir)
+    found = [t for t in _TWO_TREE_LAYOUT if fs.is_dir(f"{out_dir}/{t}")]
+    if found:
+        raise ValueError(
+            f"{out_dir} holds the two-tree event layout ({', '.join(found)}); "
+            "stale and revive events are now one events/ log — re-ingest into "
+            "a fresh out_dir"
+        )
 
 
 def _stale_through(spark: SparkSession, out_dir: str) -> int:
-    """The ann fold's event watermark: stale/revive events at or below
-    it are consumed (their effect is physical in the ann index)."""
+    """The ann fold's event watermark: events at or below it are
+    consumed (their effect is physical in the ann index)."""
     return (read_compaction_manifest(f"{out_dir}/ann", spark) or {}).get(
         "stale_through", -1
     )
 
 
 def vacuum_consumed_events(spark: SparkSession, out_dir: str) -> dict:
-    """Physically delete stale/revive event VERSIONS whose every row is
-    at or below the ann manifest's ``stale_through`` watermark — those
-    events were CONSUMED by :func:`compact_pipeline_ann_state` (their
-    effect is physical in the folded index), so the rows are pure
-    history that would otherwise accumulate for the life of the corpus
-    (the r11 "watermark-retired but not physically vacuumed" residual).
+    """Physically delete event VERSIONS whose every row is at or below
+    the ann manifest's ``stale_through`` watermark — those events were
+    CONSUMED by :func:`compact_pipeline_ann_state` (their effect is
+    physical in the folded index), so the rows are pure history that
+    would otherwise accumulate for the life of the corpus (the r11
+    "watermark-retired but not physically vacuumed" residual).
 
     Version windows are batch-ordered and monotone in ``v``, so the
-    scan walks contiguously from a per-tree vacuum watermark
+    scan walks contiguously from a vacuum watermark
     (``state/_compaction/events_vacuum.json``) and stops at the first
     version holding any unconsumed row — each call probes only
     versions added since the last vacuum, never O(stream age). A
     version dir missing (a prior crashed vacuum's completed delete, or
-    a window in which the tree had no events) just advances the
-    watermark. When a tree's versions root is left empty it is removed
-    so readers keep their fast is_dir miss. Crash-safe: the watermark
-    is written AFTER the deletes; a replay re-issues idempotent
-    deletes, never skips one. Returns the watermark dict.
+    a window without events) just advances the watermark. When the
+    versions root is left empty it is removed so readers keep their
+    fast is_dir miss. Crash-safe: the watermark is written AFTER the
+    deletes; a replay re-issues idempotent deletes, never skips one.
+    Returns the watermark dict.
 
     Tail dirs below the STATE fold watermark are reclaimed by
     ``compact_ingest_state(prune_state=True)`` as before; with
@@ -319,42 +342,36 @@ def vacuum_consumed_events(spark: SparkSession, out_dir: str) -> dict:
         # no ann fold has ever consumed anything — nothing can be
         # vacuumable, so don't pay a per-call parquet scan (r11b
         # review #5: without this, every state-fold boundary of a
-        # vacuum_events stream with no ann cadence launched two jobs
-        # that could never delete)
+        # vacuum_events stream with no ann cadence launched jobs that
+        # could never delete)
         return wm
-    changed = False
-    for tree in ("stale", "revive"):
-        root = f"{out_dir}/{tree}_versions"
-        through = wm.get(tree, 0)
-        head = wm.get(f"{tree}_head")  # [version, max_batch] cache
-        for j in range(through + 1, man["version"] + 1):
-            vdir = f"{root}/v={j}"
-            if fs.is_dir(vdir):
-                if head and head[0] == j and head[1] > consumed:
-                    # the blocking version's max batch is cached from a
-                    # prior walk and still unconsumed — skip the scan.
-                    # A retried fold can only REWRITE v=j with fewer
-                    # consumed rows (max never grows), so the cache is
-                    # an upper bound: it may defer a delete one call,
-                    # never delete early.
-                    break
-                mx = spark.read.parquet(vdir).agg(F.max("batch_id")).head()[0]
-                if mx is not None and mx > consumed:
-                    if head != [j, mx]:
-                        wm[f"{tree}_head"] = [j, mx]
-                        changed = True
-                    break
-                fs.delete_recursive(vdir)
-            through = j
-        if through != wm.get(tree, 0):
-            wm[tree] = through
-            changed = True
-            if wm.get(f"{tree}_head") and wm[f"{tree}_head"][0] <= through:
-                del wm[f"{tree}_head"]
-        drop_versions(fs, root, below=0)  # removes the root once emptied
-    if changed:
-        write_json_atomic(fs, wm_path, wm)
-    return wm
+    root = f"{out_dir}/events_versions"
+    through = wm.get("through", 0)
+    head = wm.get("head")  # [version, max_batch] of the blocking version
+    for j in range(through + 1, man["version"] + 1):
+        vdir = f"{root}/v={j}"
+        if fs.is_dir(vdir):
+            if head and head[0] == j and head[1] > consumed:
+                # the blocking version's max batch is cached from a
+                # prior walk and still unconsumed — skip the scan. A
+                # retried fold can only REWRITE v=j with fewer consumed
+                # rows (max never grows), so the cache is an upper
+                # bound: it may defer a delete one call, never delete
+                # early.
+                break
+            mx = spark.read.parquet(vdir).agg(F.max("batch_id")).head()[0]
+            if mx is not None and mx > consumed:
+                head = [j, mx]
+                break
+            fs.delete_recursive(vdir)
+        through = j
+    drop_versions(fs, root, below=0)  # removes the root once emptied
+    new = {"through": through}
+    if head and head[0] > through:
+        new["head"] = head
+    if new != wm:
+        write_json_atomic(fs, wm_path, new)
+    return new
 
 
 def compact_ingest_state(
@@ -364,7 +381,7 @@ def compact_ingest_state(
     prune_state: bool = False,
     vacuum_events: bool = False,
 ) -> dict:
-    """Fold the ``state``/``stale``/``revive`` batch tails (N <=
+    """Fold the ``state``/``events`` batch tails (N <=
     ``through_batch``) into the next ``{tree}_versions/v=<k>``
     partitions and publish the watermark (the manifest of state root
     ``{out_dir}/state``) — the skip manifest's version of the
@@ -377,24 +394,24 @@ def compact_ingest_state(
 
     The fold is ADDITIVE (each version holds only its window's rows,
     deduplicated within the window): the skip stage reduces the union
-    to the LATEST row per doc by batch_id and the event readers reduce
-    by max-batch rank, so duplicate rows across versions are harmless
-    and no cross-version merge is needed — the same
+    to the LATEST row per doc by batch_id and liveness reduces events
+    by ``(batch_id, live)`` rank, so duplicate rows across versions are
+    harmless and no cross-version merge is needed — the same
     constant-scan-branch design as the dedup wing's
     ``corpus_versions``. The fold protocol (replay no-op, orphan
     versions hidden until publish) is :mod:`streaming.state`'s.
     ``prune_state=True`` deletes the folded batch dirs after the
-    publish (their rows live in the version). ``vacuum_events=True`` additionally (a) excludes
-    stale/revive rows already CONSUMED by the ann fold (at or below the
-    ann manifest's ``stale_through`` — their effect is physical in the
-    index version) from the event versions this fold writes, and (b)
-    runs :func:`vacuum_consumed_events` after every call, folding or
-    not (the ann watermark advances on its own cadence, and an idle
-    feed must not leave consumed versions lingering) — with
-    ``prune_state`` too, no physical copy of a consumed event survives.
-    A retried fold under an advanced ann watermark rewrites ``v=<k>``
-    with fewer consumed rows, all of which every reader already
-    filters below ``stale_through``."""
+    publish (their rows live in the version). ``vacuum_events=True``
+    additionally (a) excludes event rows already CONSUMED by the ann
+    fold (at or below the ann manifest's ``stale_through`` — their
+    effect is physical in the index version) from the event version
+    this fold writes, and (b) runs :func:`vacuum_consumed_events` after
+    every call, folding or not (the ann watermark advances on its own
+    cadence, and an idle feed must not leave consumed versions
+    lingering) — with ``prune_state`` too, no physical copy of a
+    consumed event survives. A retried fold under an advanced ann
+    watermark rewrites ``v=<k>`` with fewer consumed rows, all of which
+    every reader already filters below ``stale_through``."""
     root = f"{out_dir}/state"
     man, k = open_fold(spark, root, through_batch)
     if k is not None:
@@ -413,7 +430,7 @@ def compact_ingest_state(
                 .select(*cols)
                 .dropDuplicates()
             )
-            if tree != "state" and consumed >= 0:
+            if tree == "events" and consumed >= 0:
                 window = window.filter(F.col("batch_id") > consumed)
                 if window.isEmpty():
                     # every row in the window was already consumed by
@@ -489,28 +506,27 @@ def read_ingest_state(
     """The skip stage's view of processed docs: (doc_id, content_hash,
     vec_ids, batch_id) — the hash of the doc's LATEST row (by
     batch_id) drives the skip anti-join; ``vec_ids`` across ALL rows
-    is the doc's chunk-vector history, consumed by the stale/revive
-    computation when the doc is re-processed (the reference's page ->
-    vector-ids manifest, ``Notion_openai_vector_etl.py``
+    is the doc's chunk-vector history, consumed by
+    :func:`supersede_events` when the doc is re-processed (the
+    reference's page -> vector-ids manifest, ``Notion_openai_vector_etl.py``
     `save_manifest`, SURVEY §2.2 K4)."""
     return _read_tree(spark, out_dir, "state", before_batch)
 
 
-def _read_events(
-    spark: SparkSession,
-    out_dir: str,
-    tree: str,
-    before_batch: int,
-    after_batch: int,
+def read_events(
+    spark: SparkSession, out_dir: str, before_batch: int, after_batch: int = -1
 ) -> DataFrame | None:
-    """(vec_id, batch_id) event rows of ``tree`` with ``after_batch <
-    batch_id < before_batch``. The filter is applied to the UNION, not
-    just the tail enumeration: the skip-state fold
-    (:func:`compact_ingest_state`) and the ann fold
-    (:func:`compact_pipeline_ann_state`) run on independent cadences,
-    so a folded ``{tree}_versions`` row can carry a batch_id on either
-    side of the ann watermark."""
-    ev = _read_tree(spark, out_dir, tree, before_batch)
+    """``(vec_id, batch_id, live)`` events with ``after_batch <
+    batch_id < before_batch`` (:func:`supersede_events`). Pass
+    ``after_batch`` = the ann manifest's ``stale_through`` to see only
+    events not yet consumed by physical reclamation. The filter is
+    applied to the UNION, not just the tail enumeration: the state fold
+    and the ann fold run on independent cadences, so a folded
+    ``events_versions`` row can carry a batch_id on either side of the
+    ann watermark. Below the watermark, history may already be vacuumed
+    (:func:`vacuum_consumed_events`): a default read is a view of the
+    SURVIVING events, not an audit log."""
+    ev = _read_tree(spark, out_dir, "events", before_batch)
     if ev is None:
         return None
     return ev.filter(
@@ -518,46 +534,62 @@ def _read_events(
     )
 
 
-def read_stale_vectors(
-    spark: SparkSession, out_dir: str, before_batch: int, after_batch: int = -1
-) -> DataFrame | None:
-    """``(vec_id, batch_id)`` stale EVENTS in ``(after_batch,
-    before_batch)`` — a document (re)process at batch N marks its prior
-    versions' vec_ids stale at N. Liveness is decided against the
-    newest revive event (:func:`read_revived_vectors`); pass
-    ``after_batch`` = the ann manifest's ``stale_through`` to see only
-    events not yet consumed by physical reclamation. History below the
-    watermark may be physically absent once
-    :func:`vacuum_consumed_events` has run — a default ``after_batch``
-    read is a view of the SURVIVING events, not an audit log."""
-    return _read_events(spark, out_dir, "stale", before_batch, after_batch)
+def supersede_events(prior: DataFrame, fresh: DataFrame) -> DataFrame:
+    """One batch's ``(vec_id, live)`` events. ``prior``: prior state
+    rows ``(doc_id, vec_ids, batch_id)``, any superset of the docs this
+    batch re-processes; ``fresh``: the ``(doc_id, vec_ids)`` state rows
+    this batch writes (a flagged doc's ``vec_ids`` is empty, a skipped
+    doc has no row and so no events).
 
+    Per re-processed doc: vec_ids of its LATEST prior version that the
+    new content does not regenerate -> ``live = false`` (the
+    reference's stale-vector deletion, SURVEY §2.2 K4); vec_ids from
+    ANY prior version the new content does regenerate -> ``live =
+    true`` (a content revert regenerates the identical deterministic
+    chunk ids, and the revive must outrank their earlier stale event).
 
-def read_revived_vectors(
-    spark: SparkSession, out_dir: str, before_batch: int, after_batch: int = -1
-) -> DataFrame | None:
-    """``(vec_id, batch_id)`` revive EVENTS: vec_ids physically
-    re-added at batch N that already appeared in the doc's prior state
-    rows — a content REVERT regenerates the identical deterministic
-    chunk ids, and the revive outranks the stale event their earlier
-    supersession wrote (ADVICE r10: without this, an A->B->A doc is
-    permanently served with version-B embeddings)."""
-    return _read_events(spark, out_dir, "revive", before_batch, after_batch)
+    The stale side diffs against the LATEST version only (r12, the
+    hot-update endurance variant caught this): older versions' vecs
+    already carry a stale event from the update that retired them, and
+    their newest event stays stale unless this batch revives them —
+    re-staling the whole history each reprocess would grow per-update
+    event volume with the doc's update depth. The revive side scans ALL
+    versions: an A->B->A->B oscillation must revive B's vecs from two
+    versions back.
 
-
-def _dead_vectors(stale: DataFrame, revive: DataFrame | None) -> DataFrame:
-    """vec_ids whose newest stale event outranks their newest revive
-    event (module docstring: the ordering that makes an A->B->A revert
-    serve version A again)."""
-    sb = stale.groupBy("vec_id").agg(F.max("batch_id").alias("sb"))
-    if revive is None:
-        return sb.select("vec_id")
-    rb = revive.groupBy("vec_id").agg(F.max("batch_id").alias("rb"))
-    return (
-        sb.join(rb, "vec_id", "left")
-        .filter(F.col("sb") > F.coalesce(F.col("rb"), F.lit(-1)))
-        .select("vec_id")
+    One aggregate over ``prior`` and one join on doc_id: over page
+    checkpoints (operators.cache.checkpoint_page) neither shuffles."""
+    versions = prior.groupBy("doc_id").agg(
+        F.max(F.struct("batch_id", "vec_ids"))["vec_ids"].alias("latest"),
+        F.flatten(F.collect_list("vec_ids")).alias("known"),
     )
+    per_doc = versions.join(
+        fresh.select("doc_id", F.col("vec_ids").alias("new")).hint("shuffle_hash"),
+        "doc_id",
+    )
+
+    def tagged(ids, live: bool):
+        return F.transform(ids, lambda v: F.struct(v.alias("vec_id"), F.lit(live).alias("live")))
+
+    return per_doc.select(
+        F.explode(
+            F.concat(
+                tagged(F.array_except("latest", "new"), False),
+                tagged(F.array_intersect("known", "new"), True),
+            )
+        ).alias("e")
+    ).select("e.vec_id", "e.live")
+
+
+def _dead_vectors(events: DataFrame) -> DataFrame:
+    """vec_ids whose newest event, ranked by ``(batch_id, live)``, has
+    ``live = false`` (module docstring: a revive wins a tie at equal
+    batch, the ordering that makes an A->B->A revert serve version A
+    again)."""
+    newest = events.groupBy("vec_id").agg(
+        F.max(F.struct("batch_id", "live"))["live"].alias("live")
+    )
+    return newest.filter(~F.col("live")).select("vec_id")
 
 
 def load_pipeline_ann_state(
@@ -568,9 +600,9 @@ def load_pipeline_ann_state(
 ):
     """The composed pipeline's probe-ready ANN view: the ann_stream
     state (stored base ∪ committed deltas) MINUS the dead set — a
-    vec_id is dead iff its newest unconsumed stale event outranks its
-    newest revive event (:func:`_dead_vectors`). Events at or below
-    the ann manifest's ``stale_through`` watermark were CONSUMED by
+    vec_id is dead iff its newest unconsumed event is stale
+    (:func:`_dead_vectors`). Events at or below the ann manifest's
+    ``stale_through`` watermark were CONSUMED by
     :func:`compact_pipeline_ann_state` — their effect is already
     physical in the folded version (dead vectors reclaimed, duplicate
     revived copies collapsed), so the serve-time subtraction is
@@ -580,21 +612,22 @@ def load_pipeline_ann_state(
     twin of the delete-set computation:
     plans/incremental_queries.stale_detect).
 
-    Unconsumed revive events also mark the one transient duplication
-    window: a revert physically re-adds chunks whose earlier copy may
-    still sit in the folded/base trees. Those vec_ids (a churn-sized
-    set) get a scoped full-row dedup; every other row passes through
-    untouched — no index-wide shuffle on the serve path."""
+    Unconsumed revive (``live``) events also mark the one transient
+    duplication window: a revert physically re-adds chunks whose
+    earlier copy may still sit in the folded/base trees. Those vec_ids
+    (a churn-sized set) get a scoped full-row dedup; every other row
+    passes through untouched — no index-wide shuffle on the serve
+    path."""
+    _reject_two_tree_layout(spark, out_dir)
     index, c_ids, c_mat = load_stream_ann_state(
         spark, f"{out_dir}/ann", ivf_index_path, before_batch
     )
-    consumed = _stale_through(spark, out_dir)
-    stale = read_stale_vectors(spark, out_dir, before_batch, after_batch=consumed)
-    revive = read_revived_vectors(spark, out_dir, before_batch, after_batch=consumed)
-    if stale is not None:
-        index = index.join(_dead_vectors(stale, revive), "vec_id", "left_anti")
-    if revive is not None:
-        dup_ids = revive.select("vec_id")
+    events = read_events(
+        spark, out_dir, before_batch, after_batch=_stale_through(spark, out_dir)
+    )
+    if events is not None:
+        index = index.join(_dead_vectors(events), "vec_id", "left_anti")
+        dup_ids = events.filter("live").select("vec_id")
         index = index.join(dup_ids, "vec_id", "left_anti").unionByName(
             index.join(dup_ids, "vec_id", "left_semi").dropDuplicates(["vec_id"])
         )
@@ -614,12 +647,11 @@ def compact_pipeline_ann_state(
 ) -> dict | None:
     """The composed pipeline's ann compaction: fold the ``{out}/ann``
     delta tail through ``through_batch`` into the next index version
-    with the same fold body as
-    :func:`streaming.ann_stream.compact_ann_stream_state` — but
-    CONSUME the stale/revive event window on the way (VERDICT r10 #2):
+    with :func:`streaming.ann_stream.compact_ann_stream_state` — but
+    CONSUME the event window on the way (VERDICT r10 #2):
 
-    - the window's dead vec_ids (newest stale outranks newest revive,
-      both <= ``through_batch``) are physically EXCLUDED from the
+    - the window's dead vec_ids (newest event at or below
+      ``through_batch`` is stale) are physically EXCLUDED from the
       folded version — superseded document versions stop costing
       storage and probe rows, matching the reference's outright
       stale-file deletion (``Notion_openai_vector_etl.py:609-614``);
@@ -632,9 +664,9 @@ def compact_pipeline_ann_state(
       before and after the fold while its subtraction list stays
       O(fold window).
 
-    The generic ``compact_ann_stream_state`` must NOT be pointed at a pipeline
-    tree for reclamation (it folds verbatim and advances only
-    ``through_batch``) — doing so is still CORRECT (events stay
+    ``compact_ann_stream_state`` without ``events`` must NOT be pointed
+    at a pipeline tree for reclamation (it folds verbatim and advances
+    only ``through_batch``) — doing so is still CORRECT (events stay
     unconsumed and the serve path keeps subtracting them), just
     unreclaimed. With ``vacuum_consumed=True`` (default) the fold runs
     :func:`vacuum_consumed_events` itself once ``stale_through`` covers
@@ -649,13 +681,14 @@ def compact_pipeline_ann_state(
 
     def window_events(man: dict | None):
         after = (man or {}).get("stale_through", -1)
-        stale = read_stale_vectors(spark, out_dir, through_batch + 1, after_batch=after)
-        revive = read_revived_vectors(spark, out_dir, through_batch + 1, after_batch=after)
-        if stale is None or stale.isEmpty():
-            return None, revive
-        return _dead_vectors(stale, revive), revive
+        events = read_events(spark, out_dir, through_batch + 1, after_batch=after)
+        if events is None:
+            return None, False
+        # one job answers both questions (None on an empty window)
+        stale, live = events.agg(F.max(~F.col("live")), F.max("live")).head()
+        return (_dead_vectors(events) if stale else None), bool(live)
 
-    man = fold_ann_state(
+    man = compact_ann_stream_state(
         spark, f"{out_dir}/ann", through_batch, base_index_path,
         prune_deltas, retain_versions, rebuild_centroids, rebuild_sample_mod,
         events=window_events,
@@ -704,15 +737,17 @@ def streaming_ingest_etl(
     carrying the doc's chunk-vector list like the reference's
     page -> vector-ids manifest), ``flagged/ingest_batch=N``,
     ``clean/batch_id=N``, ``chunks/batch_id=N`` (the vec_id ->
-    (chunk_id, doc_id, chunk_index) linkage), ``stale/batch_id=N`` and
-    ``revive/batch_id=N`` (the ordered supersede/re-add events —
-    module docstring), ``index_delta/batch_id=N`` (the clean docs'
-    LSH buckets when ``update_index`` — intra-stream dedup), and
-    ``ann/delta/batch_id=N/vectors`` (plain list_id-sorted files).
+    (chunk_id, doc_id, chunk_index) linkage), ``events/batch_id=N``
+    (the ordered ``(vec_id, live)`` supersede/re-add events — module
+    docstring), ``index_delta/batch_id=N`` (the clean docs' LSH
+    buckets when ``update_index`` — intra-stream dedup), and
+    ``ann/delta/batch_id=N/vectors`` (plain list_id-sorted files). An
+    ``out_dir`` in the older two-tree event layout is rejected before
+    the stream starts (:func:`_reject_two_tree_layout`).
 
     Compaction knobs, each an independent cadence over its own
     manifest: ``compact_state_every=K`` folds the skip-state and
-    stale/revive tails (:func:`compact_ingest_state`; ``prune_state``
+    event tails (:func:`compact_ingest_state`; ``prune_state``
     deletes folded batch dirs; ``vacuum_events`` physically deletes
     event rows/versions the ann fold already consumed —
     :func:`vacuum_consumed_events`); ``compact_dedup_every=K`` folds the
@@ -729,6 +764,8 @@ def streaming_ingest_etl(
     ``rebuild_ann_every=R`` upgrades every R-th ann fold to a centroid
     refresh). Each keeps its per-batch read O(K + versions) instead of
     O(stream age)."""
+    _reject_two_tree_layout(spark, out_dir)
+
     def _process(batch: DataFrame, batch_id: int) -> None:
         # each fold on its own cadence, before the empty-batch return
         # (streaming.state.fold_due)
@@ -784,19 +821,23 @@ def streaming_ingest_etl(
             return
         _t = _mark(batch_id, "pin_batch", _t)
         prior = read_ingest_state(spark, out_dir, batch_id)
+        if prior is not None:
+            # the prior state scoped to THIS batch's doc ids, pinned once
+            # as a page checkpoint that the skip below and the event
+            # diff both read: a broadcast semi-join (the micro-batch is
+            # small by construction), so the state tree is scanned once
+            # per batch and never shuffled (at 100 TB the difference)
+            prior, scoped = checkpoint_page(
+                prior.join(
+                    F.broadcast(batch.select("doc_id").dropDuplicates()),
+                    "doc_id",
+                    "left_semi",
+                )
+            )
+            if not scoped["rows"]:
+                prior = None  # no doc of this batch was seen before
         todo = batch
         if prior is not None:
-            # scope the state view to THIS batch's doc ids first — a
-            # broadcast semi-join (the micro-batch is small by
-            # construction), so neither the latest-row group below nor
-            # the stale/revive explode ever shuffles the full state
-            # tree; the per-batch state cost is one filtered scan, not
-            # one state-wide exchange (at 100 TB the difference)
-            prior = prior.join(
-                F.broadcast(batch.select("doc_id").dropDuplicates()),
-                "doc_id",
-                "left_semi",
-            )
             # skip a doc only when its hash matches the doc's LATEST
             # state row (max batch_id; hash tie-breaks deterministically
             # — a doc_id appears at most once per batch) — the
@@ -806,15 +847,17 @@ def streaming_ingest_etl(
             # version-A vec_ids were staled when B superseded them,
             # so the doc would be served with B's embeddings forever
             # (ADVICE r10). Pinned: todo feeds the probe AND the state
-            # write; unpinned, the state scan and anti-join would
-            # re-execute once per downstream action.
+            # write; unpinned, the anti-join would re-execute once per
+            # downstream action.
             latest = prior.groupBy("doc_id").agg(
                 F.max(F.struct("batch_id", "content_hash"))["content_hash"].alias(
                     "content_hash"
                 )
             )
             todo, seen = checkpoint_page(
-                batch.join(latest, ["doc_id", "content_hash"], "left_anti")
+                batch.join(
+                    latest.hint("shuffle_hash"), ["doc_id", "content_hash"], "left_anti"
+                )
             )
             if not seen["rows"]:
                 # every doc in this batch was skipped (a verbatim
@@ -891,77 +934,17 @@ def streaming_ingest_etl(
             spark, assigned, f"{out_dir}/ann", batch_id, ann_anchor, ivf_index_path
         )
         _t = _mark(batch_id, "write_ann", _t)
-        # stale/revive events: every doc (re)processed this batch
-        # supersedes its LATEST prior version's vectors. Latest-version
-        # vec_ids the new content does NOT regenerate -> stale (the
-        # reference's stale-vector deletion, SURVEY §2.2 K4); prior
-        # vec_ids from ANY version the new content DOES regenerate (a
-        # content revert — deterministic chunk ids) -> revive,
-        # outranking their earlier stale event so the re-added physical
-        # copy is served (module docstring).
-        #
-        # The stale diff is against the LATEST version only (r12, the
-        # hot-update endurance variant caught this): older versions'
-        # vecs already carry a stale event from the update that retired
-        # them, and their newest event stays stale unless THIS batch
-        # revives them — so re-staling the whole history each reprocess
-        # added nothing to liveness while growing per-update event
-        # volume linearly with the doc's update depth (80-update-share
-        # batches emitted ~4x the events the fold-cadence bound
-        # models). Revive detection still scans ALL versions: an
-        # A->B->A->B oscillation must revive B's vecs from two versions
-        # back.
-        #
-        # With no prior state (batch 0) there is nothing to supersede:
-        # no event dirs are written, and every event reader treats a
-        # missing batch dir as a batch without events.
-        if prior is not None:
-            prior_scoped = prior.join(todo.select("doc_id"), "doc_id", "left_semi")
-            latest_exp = (
-                prior_scoped.groupBy("doc_id")
-                .agg(F.max(F.struct("batch_id", "vec_ids"))["vec_ids"].alias("vec_ids"))
-                .select("doc_id", F.explode("vec_ids").alias("vec_id"))
-                .dropDuplicates()
-            )
-            all_exp = prior_scoped.select(
-                "doc_id", F.explode("vec_ids").alias("vec_id")
-            ).dropDuplicates()
-            link = chunks.select("doc_id", "vec_id")
-            stale = (
-                latest_exp.join(link, ["doc_id", "vec_id"], "left_anti")
-                .select("vec_id")
-                .dropDuplicates()
-            )
-            revive = (
-                all_exp.join(link, ["doc_id", "vec_id"], "left_semi")
-                .select("vec_id")
-                .dropDuplicates()
-            )
-            stale.write.mode("overwrite").parquet(
-                f"{out_dir}/stale/batch_id={batch_id}"
-            )
-            revive.write.mode("overwrite").parquet(
-                f"{out_dir}/revive/batch_id={batch_id}"
-            )
-        _t = _mark(batch_id, "events", _t)
-        # state LAST: a crash before this point replays the batch with
-        # the doc not yet marked processed (rewrite, idempotent); after
-        # it, the epoch commit is the only step left. Each row carries
-        # the doc's chunk-vector manifest — the stale computation's
-        # source on the NEXT update. Rows are written for TODO docs
-        # only (processed or flagged — for those, an empty manifest
-        # means "nothing serving", which is true): a SKIPPED re-feed
-        # must NOT write a row, because its empty vec_ids would become
-        # the doc's latest state row and the next real update's
-        # latest-version stale diff would find nothing to stale —
-        # version-A vectors would be served beside version B forever
-        # (r12 review; the skip decision itself only needs the hash of
-        # the latest EXISTING row, which the prior processed/flagged
-        # row already carries).
-        # todo and chunks are page checkpoints: the aggregate and the
-        # hash join run in their one partition, so the write is the one
-        # job (a broadcast of the small side would be a second)
-        (
+        # this batch's state rows: one per TODO doc (processed or
+        # flagged — for those, an empty manifest means "nothing
+        # serving", which is true), carrying the doc's chunk-vector
+        # manifest, the new side of the event diff. A SKIPPED re-feed
+        # gets no row: its empty vec_ids would become the doc's latest
+        # state row, and the next real update's latest-version stale
+        # diff would find nothing to stale (r12 review). todo and
+        # chunks are page checkpoints, so the aggregate and the hash
+        # join run in their one partition (a broadcast of the small
+        # side would be a job of its own)
+        fresh = (
             todo.select("doc_id", "content_hash")
             .join(
                 chunks.groupBy("doc_id")
@@ -974,9 +957,20 @@ def streaming_ingest_etl(
                 "vec_ids",
                 F.coalesce(F.col("vec_ids"), F.array().cast("array<long>")),
             )
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/state/batch_id={batch_id}")
         )
+        # one tagged event frame per batch (supersede_events). With no
+        # prior state for this batch's docs (always on batch 0) there is
+        # nothing to supersede: no event dir is written, and every event
+        # reader treats a missing batch dir as a batch without events.
+        if prior is not None:
+            supersede_events(prior, fresh).write.mode("overwrite").parquet(
+                f"{out_dir}/events/batch_id={batch_id}"
+            )
+        _t = _mark(batch_id, "events", _t)
+        # state LAST: a crash before this point replays the batch with
+        # the doc not yet marked processed (rewrite, idempotent); after
+        # it, the epoch commit is the only step left
+        fresh.write.mode("overwrite").parquet(f"{out_dir}/state/batch_id={batch_id}")
         _mark(batch_id, "write_state", _t)
 
     return foreach_page_batch(

@@ -13,8 +13,8 @@ per-feature smokes can't:
    term leaks through the composition of four manifests/watermarks);
 2. state/index footprint is BOUNDED for the trees that claim a bound
    (delta tails pruned to the fold cadence, superseded index versions
-   vacuumed to retain_versions, the unconsumed stale/revive tails
-   bounded by the ann fold cadence). Trees that grow by DESIGN —
+   vacuumed to retain_versions, the unconsumed stale and revive event
+   tails bounded by the ann fold cadence). Trees that grow by DESIGN —
    clean/chunks/flagged (the stream's outputs) and the folded
    state/event versions (history) — are reported separately; their
    growth is the workload's, not a leak.
@@ -86,8 +86,7 @@ from notion_vector_store_etl_pipeline_spark.operators.similarity import (
 from notion_vector_store_etl_pipeline_spark.streaming.ingest_pipeline import (
     embedded_chunks,
     load_pipeline_ann_state,
-    read_revived_vectors,
-    read_stale_vectors,
+    read_events,
     streaming_ingest_etl,
 )
 
@@ -98,7 +97,7 @@ K = 10  # fold cadence for all three compactions
 REBUILD_EVERY = 5  # every 5th ann fold is a centroid rebuild
 RETAIN = 2  # index versions kept by the vacuum
 MAX_STEADY_DRIFT = 1.30
-# r11b additions also on: vacuum_events (consumed stale/revive events
+# r11b additions also on: vacuum_events (consumed stale and revive events
 # physically deleted at state folds) and every MAJOR_EVERY-th dedup
 # fold a MAJOR corpus rewrite + LSH rebuild (corpus_floor epoch);
 # overridable as argv[3] so short validation runs still hit majors
@@ -188,25 +187,26 @@ def bounded_snapshot(spark, out: str) -> dict[str, int]:
     """The metrics the design CLAIMS are bounded, measured at one
     stream age: uncompacted delta-dir counts (<= fold cadence + the
     in-flight window), index versions kept (<= RETAIN), unconsumed
-    stale/revive event rows above the ann watermark, surviving event
-    VERSION dirs (vacuumed once consumed — r11b), corpus versions +
+    stale and revive event rows above the ann watermark (counted apart,
+    by ``live``), surviving event VERSION dirs (vacuumed once consumed
+    — r11b), corpus versions +
     superseded-sidecar versions (reset by each MAJOR fold — r11b)."""
     def _n(path):
         return len(os.listdir(path)) if os.path.isdir(path) else 0
 
-    st = _ann_stale_through(spark, out)
-    stale_tail = read_stale_vectors(spark, out, 10**9, after_batch=st)
-    revive_tail = read_revived_vectors(spark, out, 10**9, after_batch=st)
+    tail = read_events(spark, out, 10**9, after_batch=_ann_stale_through(spark, out))
+    stale_rows, revive_rows = (0, 0) if tail is None else tail.agg(
+        F.count_if(~F.col("live")), F.count_if("live")
+    ).head()
     return {
         "lsh_delta_dirs": _n(f"{out}/index_delta"),
         "ann_delta_dirs": _n(f"{out}/ann/delta"),
         "state_tail_dirs": _n(f"{out}/state"),
         "lsh_versions": _n(f"{out}/index_versions"),
         "ann_versions": _n(f"{out}/ann/index_versions"),
-        "stale_tail_rows": 0 if stale_tail is None else stale_tail.count(),
-        "revive_tail_rows": 0 if revive_tail is None else revive_tail.count(),
-        "stale_version_dirs": _n(f"{out}/stale_versions"),
-        "revive_version_dirs": _n(f"{out}/revive_versions"),
+        "stale_tail_rows": stale_rows,
+        "revive_tail_rows": revive_rows,
+        "event_version_dirs": _n(f"{out}/events_versions"),
         "corpus_version_dirs": _n(f"{out}/corpus_versions"),
         "superseded_version_dirs": _n(f"{out}/superseded_versions"),
     }
@@ -377,7 +377,7 @@ def main() -> int:
             ("stale_tail_rows", event_bound), ("revive_tail_rows", event_bound),
             # consumed event versions vacuum at state folds: at most the
             # last fold's version + one lag window survives (r11b)
-            ("stale_version_dirs", 2), ("revive_version_dirs", 2),
+            ("event_version_dirs", 2),
             # each MAJOR fold resets corpus versions + sidecar to the
             # floor; between majors, one minor version per fold (r11b)
             ("corpus_version_dirs", reset_bound),

@@ -307,7 +307,7 @@ def test_changed_doc_old_vectors_go_stale(spark, tmp_path):
     the new version's vectors and every unrelated doc's vectors remain."""
     from notion_vector_store_etl_pipeline_spark.streaming.ingest_pipeline import (
         load_pipeline_ann_state,
-        read_stale_vectors,
+        read_events,
     )
 
     incoming, corpus_path, lsh_path, ivf_path = _fixture(spark, tmp_path)
@@ -342,7 +342,8 @@ def test_changed_doc_old_vectors_go_stale(spark, tmp_path):
     _write_source(pd.concat([inc, extra], ignore_index=True), src)
     _run(spark, src, corpus_path, lsh_path, ivf_path, out, ckpt, **kw)
 
-    stale = {r.vec_id for r in read_stale_vectors(spark, out, 10**9).collect()}
+    events = read_events(spark, out, 10**9)
+    stale = {r.vec_id for r in events.filter(~F.col("live")).collect()}
     assert old_vecs <= stale, "old version's vectors not in the delete set"
 
     index, _, _ = load_pipeline_ann_state(spark, out, ivf_path, 10**9)
@@ -389,11 +390,20 @@ class _StageJobs(list):
 
 #: per-stage job ceilings of the composed stream's first batch
 BATCH0_JOB_BUDGET = {
+    "skip": 0,
     "kernel:probe": 10,
     "kernel:clean_pin": 1,
     "write_state": 2,
     "write_ann": 1,
     "events": 0,
+}
+#: ... and of its second, which updates batch-0 docs and re-feeds one:
+#: the skip reads the state tail (a schema job), broadcasts the batch's
+#: doc ids and pins the scoped prior state and the todo docs; the
+#: events are one write over those pins
+BATCH1_JOB_BUDGET = {
+    "skip": 4,
+    "events": 1,
 }
 
 
@@ -403,23 +413,37 @@ def test_composed_stream_batch0_job_budget(spark, tmp_path):
     page materializations, nothing is pinned between the probe and the
     chunk stage, the state and ANN writes aggregate and sort their
     one-partition inputs in place, and no (empty) event frames are
-    written: each stage stays within its budget."""
+    written: each stage stays within its budget. The second batch
+    updates three batch-0 docs and re-feeds one verbatim: its skip pins
+    the prior state scoped to the batch once and anti-joins it in
+    place, and its events are one tagged frame derived from that pin."""
     from notion_vector_store_etl_pipeline_spark.streaming import ingest_pipeline as IP
 
     incoming, corpus_path, lsh_path, ivf_path = _fixture(spark, tmp_path)
+    inc = incoming.orderBy("doc_id").toPandas()
+    second = inc.iloc[:4].copy()
+    second.iloc[:3, second.columns.get_loc("text")] = (
+        "a revised edition on the hydraulics of canal boat lifts, take "
+        + pd.Series(range(3), index=second.index[:3]).astype(str)
+    )
     src = str(tmp_path / "incoming.parquet")
-    _write_source(incoming.orderBy("doc_id").toPandas(), src)
+    _write_source(pd.concat([inc, second], ignore_index=True), src)
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     profile = IP._PROFILE = _StageJobs(spark)
     try:
         _run(
             spark, src, corpus_path, lsh_path, ivf_path, out, ckpt,
-            page_size=incoming.count(), pages_per_batch=1,
+            page_size=len(inc), pages_per_batch=1,
         )
     finally:
         IP.disable_stage_profile()
-    jobs = {stage: n for (batch, stage), n in profile.jobs.items() if batch == 0}
-    assert set(BATCH0_JOB_BUDGET) <= set(jobs), jobs
-    over = {s: jobs[s] for s, cap in BATCH0_JOB_BUDGET.items() if jobs[s] > cap}
-    assert not over, jobs
+    for b, budget in ((0, BATCH0_JOB_BUDGET), (1, BATCH1_JOB_BUDGET)):
+        jobs = {stage: n for (batch, stage), n in profile.jobs.items() if batch == b}
+        assert set(budget) <= set(jobs), (b, jobs)
+        over = {s: jobs[s] for s, cap in budget.items() if jobs[s] > cap}
+        assert not over, (b, jobs)
     assert spark.read.parquet(f"{out}/clean").count() > 0
+    # batch 1 skipped the verbatim re-feed and superseded the updates
+    state1 = spark.read.parquet(f"{out}/state/batch_id=1")
+    assert {r.doc_id for r in state1.collect()} == set(second.doc_id.iloc[:3])
+    assert not spark.read.parquet(f"{out}/events/batch_id=1").isEmpty()

@@ -7,7 +7,7 @@
   fold-and-prune of the earlier doc's delta/clean dirs.
 - The A->B->A revert (ADVICE r10): the skip stage compares the doc's
   LATEST state row, so a revert is reprocessed; its re-added vec_ids'
-  revive events outrank the stale events B's supersession wrote, and
+  live events outrank the stale events B's supersession wrote, and
   the served ANN view returns version A, not B.
 - Physical reclamation (VERDICT r10 #2): compact_pipeline_ann_state
   folds the ann tree with the dead set excluded and duplicate revived
@@ -30,8 +30,7 @@ from notion_vector_store_etl_pipeline_spark.streaming.ingest_pipeline import (
     compact_pipeline_ann_state,
     embedded_chunks,
     load_pipeline_ann_state,
-    read_revived_vectors,
-    read_stale_vectors,
+    read_events,
 )
 from tests.test_ingest_pipeline import _fixture, _run, _write_source
 
@@ -312,7 +311,8 @@ def test_revert_doc_served_with_original_vectors(spark, tmp_path, pipeline_fixtu
     )
     assert n_clean == 3
     revived = {
-        r.vec_id for r in read_revived_vectors(spark, out, 10**9).collect()
+        r.vec_id
+        for r in read_events(spark, out, 10**9).filter("live").collect()
     }
     assert va <= revived
     index, _, _ = load_pipeline_ann_state(spark, out, ivf_path, 10**9)
@@ -371,8 +371,9 @@ def test_pipeline_ann_compaction_reclaims_stale(spark, tmp_path, pipeline_fixtur
     }
     assert not (va & v1_ids), "update-era dead vectors not reclaimed"
     assert vb <= v1_ids, "tail-staled vectors must stay physical until consumed"
-    stale_tail = read_stale_vectors(spark, out, 10**9, after_batch=r - 1)
-    revive_tail = read_revived_vectors(spark, out, 10**9, after_batch=r - 1)
+    tail = read_events(spark, out, 10**9, after_batch=r - 1)
+    stale_tail = tail.filter(~F.col("live"))
+    revive_tail = tail.filter("live")
     tail_stale_ids = {row.vec_id for row in stale_tail.collect()}
     assert vb <= tail_stale_ids
     # va's stale event (the update batch) is BELOW the watermark and
@@ -391,8 +392,8 @@ def test_pipeline_ann_compaction_reclaims_stale(spark, tmp_path, pipeline_fixtur
     assert not (vb & set(v2_ids)), "dead vectors not reclaimed from the fold"
     assert va <= set(v2_ids)
     assert len(v2_ids) == len(set(v2_ids)), "duplicate physical copies"
-    tail2 = read_stale_vectors(spark, out, 10**9, after_batch=last)
-    assert tail2 is None or tail2.isEmpty()
+    tail2 = read_events(spark, out, 10**9, after_batch=last)
+    assert tail2 is None or tail2.filter(~F.col("live")).isEmpty()
 
     # replayed fold: idempotent no-op
     man3 = compact_pipeline_ann_state(

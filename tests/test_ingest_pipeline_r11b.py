@@ -1,6 +1,6 @@
 """Round-11b lifecycle pins — the two residuals the r11 notes named:
 
-- **Physical event vacuum**: stale/revive events the ann fold consumed
+- **Physical event vacuum**: events the ann fold consumed
   (at or below ``stale_through``) are physically deleted by
   ``vacuum_consumed_events`` / ``compact_ingest_state(vacuum_events=
   True)`` — bounded event storage, served view byte-identical, replays
@@ -32,8 +32,7 @@ from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
 from notion_vector_store_etl_pipeline_spark.streaming.ingest_pipeline import (
     compact_ingest_state,
     compact_pipeline_ann_state,
-    read_revived_vectors,
-    read_stale_vectors,
+    read_events,
     vacuum_consumed_events,
 )
 from tests.test_ingest_pipeline import _fixture, _run, _write_source
@@ -97,19 +96,14 @@ def test_vacuum_consumed_events_bounded_history(
         spark, out, through_batch=last, prune_state=True, vacuum_events=True
     )
     assert man["version"] == 1 and man["through_batch"] == last
-    assert not glob.glob(f"{out}/stale/batch_id=*"), "tail not pruned"
+    assert not glob.glob(f"{out}/events/batch_id=*"), "tail not pruned"
     # the consumed update-era stale event (va) was excluded from the
     # fold; the unconsumed revert-era events (stale vb, revive va)
     # survive in v=1 — liveness above the watermark still computable
-    folded_stale = {
-        row.vec_id
-        for row in spark.read.parquet(f"{out}/stale_versions/v=1").collect()
-    }
+    folded = spark.read.parquet(f"{out}/events_versions/v=1")
+    folded_stale = {row.vec_id for row in folded.filter(~F.col("live")).collect()}
     assert vb <= folded_stale and not (va & folded_stale)
-    assert va <= {
-        row.vec_id
-        for row in spark.read.parquet(f"{out}/revive_versions/v=1").collect()
-    }
+    assert va <= {row.vec_id for row in folded.filter("live").collect()}
     assert _served(spark, out, ivf_path) == served_before
 
     # phase 2: ann fold consumes everything; vacuum deletes the event
@@ -123,16 +117,13 @@ def test_vacuum_consumed_events_bounded_history(
     # the ann fold vacuums its own consumed event versions (VERDICT r11
     # #6): fully-consumed version dirs are gone IMMEDIATELY after the
     # fold that made them history — no waiting for the next state fold
-    assert not os.path.isdir(f"{out}/stale_versions")
-    assert not os.path.isdir(f"{out}/revive_versions")
+    assert not os.path.isdir(f"{out}/events_versions")
     assert _served(spark, out, ivf_path) == served_before
     compact_ingest_state(
         spark, out, through_batch=last + 3, prune_state=True, vacuum_events=True
     )
-    assert not os.path.isdir(f"{out}/stale_versions")
-    assert not os.path.isdir(f"{out}/revive_versions")
-    assert read_stale_vectors(spark, out, 10**9) is None
-    assert read_revived_vectors(spark, out, 10**9) is None
+    assert not os.path.isdir(f"{out}/events_versions")
+    assert read_events(spark, out, 10**9) is None
     assert _served(spark, out, ivf_path) == served_before
 
     # replayed vacuum: idempotent no-op on the same watermarks
@@ -224,13 +215,17 @@ def test_vacuum_knob_wired_in_stream(spark, tmp_path, pipeline_fixture):
         "fixture must consume the update era in-stream"
     )
     # twin (knob off): the consumed stale events survive physically
-    twin_stale = read_stale_vectors(spark, out_t, 10**9)
-    assert twin_stale is not None and va <= {
-        r.vec_id for r in twin_stale.collect()
+    twin = read_events(spark, out_t, 10**9)
+    assert twin is not None and va <= {
+        r.vec_id for r in twin.filter(~F.col("live")).collect()
     }
     # vacuumed run: physically gone
-    surv = read_stale_vectors(spark, out_v, 10**9)
-    surv_ids = set() if surv is None else {r.vec_id for r in surv.collect()}
+    surv = read_events(spark, out_v, 10**9)
+    surv_ids = (
+        set()
+        if surv is None
+        else {r.vec_id for r in surv.filter(~F.col("live")).collect()}
+    )
     assert not (va & surv_ids), "consumed stale events not vacuumed"
     # both runs serve the same current vectors
     for out in (out_v, out_t):

@@ -1,7 +1,7 @@
 """Round-12 lifecycle pins (ADVICE r11 + VERDICT r11 #6):
 
-- a state fold whose entire stale/revive window was already consumed by
-  the ann fold writes NO empty event-version dir;
+- a state fold whose entire event window was already consumed by the
+  ann fold writes NO empty event-version dir;
 - a MAJOR dedup fold self-heals pre-sidecar corpus state (cross-version
   duplicate texts with no superseded entry) by resolving per doc on
   precedence rank;
@@ -62,7 +62,7 @@ def test_fully_consumed_window_writes_no_event_version(
 ):
     """ADVICE r11 #4: when the ann fold already consumed EVERY event in
     the state fold's window, the fold used to write an empty
-    ``{tree}_versions/v=k`` dir that the vacuum deleted moments later —
+    ``events_versions/v=k`` dir that the vacuum deleted moments later —
     a wasted write job plus a parquet max-scan per later vacuum walk.
     Now the version write is skipped outright while the tail dirs still
     fold away and the state tree itself still versions."""
@@ -75,22 +75,21 @@ def test_fully_consumed_window_writes_no_event_version(
     compact_pipeline_ann_state(
         spark, out, through_batch=last, base_index_path=ivf_path
     )
-    assert os.path.isdir(f"{out}/stale")  # unconsumed TAIL still on disk
+    assert os.path.isdir(f"{out}/events")  # unconsumed TAIL still on disk
     man = compact_ingest_state(
         spark, out, through_batch=last, prune_state=True, vacuum_events=True
     )
     assert man["version"] == 1
     # no empty event versions were ever written; state itself versioned
-    assert not os.path.isdir(f"{out}/stale_versions")
-    assert not os.path.isdir(f"{out}/revive_versions")
+    assert not os.path.isdir(f"{out}/events_versions")
     assert os.path.isdir(f"{out}/state_versions/v=1")
     # tails pruned regardless (the skip branch still folds the dirs)
-    stale_tail = (
-        [d for d in os.listdir(f"{out}/stale") if d.startswith("batch_id=")]
-        if os.path.isdir(f"{out}/stale")
+    event_tail = (
+        [d for d in os.listdir(f"{out}/events") if d.startswith("batch_id=")]
+        if os.path.isdir(f"{out}/events")
         else []
     )
-    assert stale_tail == []
+    assert event_tail == []
     assert _served(spark, out, ivf_path) == served_before
 
 
